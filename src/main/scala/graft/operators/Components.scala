@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * its neighbors; stop when no label changes. Rounds are bounded by the
   * component diameter (near-dup clusters are small and dense, so
   * a handful of rounds) and each round is one hash-shuffle join on node
-  * id — the GraphX-free, pure-DataFrame formulation. `localCheckpoint`
-  * truncates the loop's lineage so plans don't grow with iterations.
+  * id — the GraphX-free, pure-DataFrame formulation, run as an
+  * [[Iterative]] until-stable loop (each round one eager checkpoint job
+  * that also observes how many labels changed).
   *
   * The reference has no graph surface at all; this is beyond-parity for
   * the curation pipeline (dedup keeps one representative per cluster).
@@ -25,64 +26,25 @@ object Components {
     * @return (id, rep): every node that appears in an edge, with the
     *         min node id of its component
     */
-  def connected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // AQE off for the loop (r13, see Iterative): every round is a
-    // shape-pinned join+agg over checkpointed tiny frames; AQE re-plans
-    // per materialized stage and each round pays the driver round-trip.
-    Iterative.withAqeOff(edges) { edges =>
-    // Materialize the (possibly very expensive) edge plan ONCE before
-    // symmetrizing: the union references it twice, and without the
-    // checkpoint both orientations recompute the full upstream plan —
-    // for near-dup clustering that upstream is the whole exact-pair
-    // pipeline (measured: half of q114's cost at 10× scale).
-    val e = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .localCheckpoint(true)
-    // Pin the loop's shuffle width to a size-derived layout (r14, see
-    // Iterative.layoutParts): with AQE off nothing coalesces, and a
-    // near-dup pair graph of a few hundred edges otherwise runs every
-    // round's join+agg at conf width (32+32 near-empty tasks/round —
-    // q166 regressed 0.08→0.15 s on exactly this).
-    e.sparkSession.conf.set("spark.sql.shuffle.partitions",
-      Iterative.layoutParts(e.sparkSession, e.count()).toString)
-    val sym = e
-      .union(e.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .cache()
-    var labels = sym.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("rep"))
-      .localCheckpoint(true)
-    var changed = 1L
-    while (changed > 0) {
-      // Graph edges PLUS this round's pointer edges (rep → id): the
-      // min-over-senders then delivers both the neighbor labels AND the
-      // label of my current representative in the SAME join — pointer
-      // jumping (O(log d) rounds on a diameter-d chain) without the
-      // separate prop/jump self-join each round cost before (4 shuffles
-      // + 2 checkpoints per round → 3 shuffles + 1 checkpoint).
-      val ptr = labels.select(col("rep").as("a"), col("id").as("b"))
-      val nbr = sym.select("a", "b").union(ptr)
-        .join(labels.select(col("id").as("a"), col("rep").as("na")), "a")
-        .groupBy(col("b").as("id"))
-        .agg(min(col("na")).as("nrep"))
-      // convergence is read via observe(): the CollectMetrics node
-      // rides the SAME job that materializes the eager localCheckpoint
-      // (Dataset.checkpoint runs through withAction, so the Observation
-      // future completes with it) — zero extra jobs per round, where a
-      // follow-up agg().head scan used to cost one.
-      val obs = org.apache.spark.sql.Observation()
-      val next = labels
-        .join(nbr, Seq("id"), "left")
-        .select(col("id"),
-          least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"),
-          (least(col("rep"), coalesce(col("nrep"), col("rep"))) =!= col("rep"))
-            .cast("long").as("chg"))
-        .observe(obs, coalesce(sum(col("chg")), lit(0L)).as("changed"))
-        .localCheckpoint(true)
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = next.select("id", "rep")
+  def connected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    Iterative.loop(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))) { g =>
+      val sym = g.keep(g.bothWays().distinct())
+      // rep = min(src) = id (see LabelProp): one id partitioning survives checkpoints
+      val init = sym.groupBy(col("src").as("id")).agg(min(col("src")).as("rep"))
+      g.untilStable(init) { labels =>
+        // Graph edges PLUS this round's pointer edges (rep → id): the
+        // min-over-senders then delivers both the neighbor labels AND the
+        // label of my current representative in the SAME join — pointer
+        // jumping (O(log d) rounds on a diameter-d chain) without a
+        // separate prop/jump self-join per round.
+        val nbr = sym.union(labels.select(col("rep").as("src"), col("id").as("dst")))
+          .join(labels.select(col("id").as("src"), col("rep").as("na")), "src")
+          .groupBy(col("dst").as("id"))
+          .agg(min(col("na")).as("nrep"))
+        val rep = least(col("rep"), coalesce(col("nrep"), col("rep")))
+        labels.join(nbr, Seq("id"), "left")
+          .select(col("id"), rep.as("rep"), (rep =!= col("rep")).as("changed"))
+      }
     }
-    sym.unpersist()
-    labels
-    }
-  }
 }

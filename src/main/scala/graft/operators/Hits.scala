@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /** HITS hubs & authorities (Kleinberg 1999) on a DIRECTED bipartite
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Same fixed-point integer discipline as PageRank: scores are
   * Scale-scaled longs; each half-iteration is one hash join + one
-  * partial-agg groupBy (exact long sums, order-independent), and the
+  * partial-agg groupBy (exact long sums, order-independent) run as an
+  * [[Iterative]] superstep, and the
   * normalization `x·Scale/Σx` is computed as `x div (Σx div Scale)` —
   * pure integer ops a SQL oracle replays to the unit.  Per-iteration
   * normalization keeps every score ≤ ~Scale, so the sums stay inside
@@ -22,59 +23,41 @@ object Hits {
 
   val Scale: Long = PageRank.Scale
 
-  /** Returns (id, side['hub'|'auth'], score) after `iters` rounds. */
-  def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame = {
-    require(iters >= 1, "at least one iteration")
-    Iterative.withAqeOff(edges) { edges =>
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist()
-    val hubs0 = e.select(col("src").as("id")).distinct()
-    val nH = hubs0.count()
-    val hub0 = hubs0.select(col("id"), lit(Scale / nH).as("h")).persist()
-    var hub: DataFrame = hub0
-    var auth: DataFrame = null
-    var prevH: DataFrame = null
-    var prevA: DataFrame = null
-    for (_ <- 1 to iters) {
-      // Persist the two raw-sum frames per iteration (each is read
-      // twice: by its normalizer aggregate and by the next half-step);
-      // the normalized frames are cheap single-use projections on top.
-      // ONE count() barrier per iteration (on hRaw — computing it
-      // pulls aRaw through its cache too) keeps lineage flat before
-      // the previous iteration's caches are dropped: unpersisting a
-      // parent of a still-lazy cache would silently re-expand the
-      // whole join chain on first use.
-      val aRaw = e.join(hub, e("src") === hub("id"))
-        .groupBy(e("dst").as("id")).agg(sum(col("h")).as("raw"))
-        .persist()
-      val aDiv = aRaw.agg(expr(s"sum(raw) div ${Scale}L").as("d"))
-      val nextA = aRaw.crossJoin(broadcast(aDiv))
-        .select(col("id"), expr("raw div greatest(d, 1L)").as("a"))
-      val hRaw = e.join(nextA, e("dst") === nextA("id"))
-        .groupBy(e("src").as("id")).agg(sum(col("a")).as("raw"))
-        .persist()
-      hRaw.count()
-      val hDiv = hRaw.agg(expr(s"sum(raw) div ${Scale}L").as("d"))
-      val nextH = hRaw.crossJoin(broadcast(hDiv))
-        .select(col("id"), expr("raw div greatest(d, 1L)").as("h"))
-      if (prevA != null) prevA.unpersist(blocking = false)
-      if (prevH != null) prevH.unpersist(blocking = false)
-      prevA = aRaw
-      prevH = hRaw
-      hub = nextH
-      auth = nextA
+  /** Returns (id, side['hub'|'auth'], score) after `iters` rounds.
+    *
+    * The loop state is both sides as one (id, side, score, deg) frame,
+    * hash-partitioned by id on the loop width, and each round is two
+    * supersteps that replace one side each. Edges are laid out by src
+    * once. Hub→auth joins them with the hub rows in place (shuffle-hash,
+    * co-partitioned) and aggregates by dst: the round's one hash
+    * exchange. Auth→hub broadcasts the auth scores onto the src layout,
+    * whose per-src aggregate needs no exchange.
+    */
+  def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame =
+    Iterative.loop(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))) { g =>
+      val e = g.keep(g.edges.repartition(g.parts, col("src")).distinct())
+      val hubs = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+      val hub0 = hubs.crossJoin(broadcast(hubs.agg(count(lit(1)).as("n")))).select(col("id"),
+        lit("hub").as("side"), expr(s"${Scale}L div n").as("score"), col("deg"))
+      val toAuth = flow("hub", "auth", hub => e.hint("shuffle_hash")
+        .join(hub.hint("shuffle_hash"), e("src") === hub("id")).groupBy(col("dst").as("id"))) _
+      val toHub = flow("auth", "hub", auth => e.join(broadcast(auth), e("dst") === auth("id"))
+        .groupBy(e("src").as("id"))) _
+      g.fixed(hub0, iters)(toAuth, toHub).drop("deg")
     }
-    // materialize-and-release (r11): result checkpointed, every cache
-    // this call created released — repeated calls accumulate nothing.
-    val result = hub.select(col("id"), lit("hub").as("side"), col("h").as("score"))
-      .unionByName(auth.select(col("id"), lit("auth").as("side"),
-        col("a").as("score")))
-      .localCheckpoint(true)
-    e.unpersist(blocking = false)
-    hub0.unpersist(blocking = false)
-    if (prevA != null) prevA.unpersist(blocking = false)
-    if (prevH != null) prevH.unpersist(blocking = false)
-    result
-    }
+
+  /** One superstep: the `from` rows' scores summed along the edges into
+    * `to` rows, normalized `raw div (Σraw div Scale)`. Every edge carries
+    * its source's score once, so Σraw is Σ score·deg over the `from` rows
+    * of the state — read from the checkpointed state, not by a second
+    * pass over the raw sums.
+    */
+  private def flow(from: String, to: String, along: DataFrame => RelationalGroupedDataset)
+                  (s: DataFrame): DataFrame = {
+    val x = s.filter(col("side") === from)
+    along(x).agg(sum(col("score")).as("raw"), count(lit(1)).as("deg"))
+      .crossJoin(broadcast(x.agg(expr(s"sum(score * deg) div ${Scale}L").as("d"))))
+      .select(col("id"), lit(to).as("side"), expr("raw div greatest(d, 1L)").as("score"), col("deg"))
+      .unionByName(s.filter(col("side") =!= to))
   }
 }

@@ -12,55 +12,32 @@ import org.apache.spark.sql.functions._
   * the SMALLEST label — so results are reproducible across partitions
   * and replayable in a SQL oracle (classic LPA breaks ties randomly).
   *
-  * Distributed shape: one hash join (labels ⋈ edges) + one two-key
-  * partial-agg groupBy + one per-vertex arg-max per iteration — the
-  * same bounded pattern as [[PageRank]]; iteration count is a constant,
-  * lineage is cut by persist.  The arg-max window runs on the already
-  * clustered-by-vertex aggregate (no extra exchange beyond the
-  * groupBy's own).
+  * Distributed shape: one co-partitioned hash join (labels ⋈ edges laid
+  * out by src), ONE exchange of the votes by receiving vertex, then the
+  * (vertex, label) count and the per-vertex arg-max window both run on
+  * that layout — one exchange per iteration, the labels landing back on
+  * the edge layout for the next join. The loop (session, width,
+  * checkpoints, releases) is [[Iterative]]'s.
   */
 object LabelProp {
 
   /** `edges(srcCol, dstCol)` is symmetrized + deduped; initial label of
     * a vertex is its own id.  Returns (id, label) after `iters` rounds.
     */
-  def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame = {
-    require(iters >= 1, "at least one iteration")
-    Iterative.withAqeOff(edges) { edges =>
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(true) // edges referenced twice (r11, see PageRank.run)
-    // size-derived loop width (r14, see Iterative.layoutParts /
-    // Components): AQE is off here, so the conf default would otherwise
-    // fix every round's stage width regardless of graph size
-    e0.sparkSession.conf.set("spark.sql.shuffle.partitions",
-      Iterative.layoutParts(e0.sparkSession, e0.count()).toString)
-    val sym = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist()
-    var lab = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val votes = sym.join(lab, sym("src") === lab("id"))
-        .groupBy(col("dst").as("vid"), col("label"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("vid").orderBy(col("n").desc, col("label").asc)
-      val next = votes.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vid").as("id"), col("label"))
-        .persist()
-      next.count()
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = lab
-      lab = next
+  def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame =
+    Iterative.loop(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))) { g =>
+      val sym = g.keep(g.bothWays().repartition(g.parts, col("src")).distinct())
+      val byVote = Window.partitionBy("id").orderBy(col("n").desc, col("label").asc)
+      // label = min(src) = id: an aggregate, not a second alias of the
+      // key, so the state keeps one id partitioning through checkpoints
+      val init = sym.groupBy(col("src").as("id")).agg(min(col("src")).as("label"))
+      g.fixed(init, iters) { lab =>
+        sym.hint("shuffle_hash").join(lab.hint("shuffle_hash"), sym("src") === lab("id"))
+          .repartition(g.parts, col("dst"))
+          .groupBy(col("dst").as("id"), col("label")).agg(count(lit(1)).as("n"))
+          .withColumn("rn", row_number().over(byVote))
+          .filter(col("rn") === 1)
+          .select("id", "label")
+      }
     }
-    // materialize-and-release (r11): same ownership rule as PageRank
-    val result = lab.localCheckpoint(true)
-    sym.unpersist(blocking = false)
-    if (prev != null) prev.unpersist(blocking = false)
-    lab.unpersist(blocking = false)
-    result
-    }
-  }
 }

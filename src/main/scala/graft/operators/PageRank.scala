@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point integer PageRank over an undirected graph — the
@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *     partial-aggregated groupBy(dst) — the same shuffle pattern
   *     GraphX/Pregel lowers to; no driver-side loop over rows, and the
   *     iteration count is a compile-time constant;
-  *   - intermediate ranks are persisted per iteration so lineage stays
-  *     O(1) deep instead of re-expanding the join tree.
+  *   - the loop itself (session, width, per-iteration checkpoints,
+  *     releases) is [[Iterative]]'s; this object gives only the edge
+  *     projection, the vertex frames, the initial ranks and the step.
   *
   * Arithmetic discipline: ranks are FIXED-POINT LONGS (scale 1e12).
   * Every step is integer `div` / multiply / add, so the per-vertex sum
@@ -32,241 +33,88 @@ object PageRank {
   val Scale = 1000000000000L
 
   /** Damping 0.85 as the exact rational 85/100; teleport (1−d)/n is
-    * (3·Scale)/(20·n) in units.
+    * (3·Scale)/(20·n) in units. Returns (id, deg, pr).
     */
-  def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame = {
-    require(iters >= 1, "at least one iteration")
-    Iterative.withAqeOff(edges) { edges =>
-    val spark = edges.sparkSession // the loop's dedicated AQE-off clone
-    // materialize the caller's edge derivation once (r11: a cold call
-    // was recomputing it per downstream reference; checkpoint blocks
-    // die with this local, nothing to release).
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(true)
-    // sym is REPARTITIONED by src once and every iteration's edge⋈rank
-    // join is hinted shuffle-hash: the cached layout satisfies the join
-    // distribution, so each iteration exchanges ONLY the (small) rank
-    // frame — no per-iteration broadcast builds (r11: broadcast
-    // construction latency was ~half the per-iteration wall) and the
-    // exact pattern a 1000-executor run wants (edges stay put, ranks
-    // move).
-    //
-    val nEdgeRows = e0.count() // e0 is checkpointed: a cheap local scan
-    // Two scale-adaptive terms, never a bare machine constant (r14):
-    //  - size term: ~1M symmetrized edges/partition, capped for the
-    //    huge end — dominates at cluster scale;
-    //  - width term: use up to machine width, but only while every
-    //    partition keeps ≥32k edges (a 16k-edge graph gets 1 partition,
-    //    not r13's 32 near-empty ones — that flat defaultParallelism
-    //    floor cost ~0.1 s of fixed per-task overhead per iteration
-    //    stage; a 587k-edge graph at 32 cores gets ~19 ~60k-edge
-    //    partitions instead of one 350-450 ms serial join+agg task per
-    //    iteration — measured r14 ProbeStages).
-    val edgeParts = Iterative.layoutParts(spark, nEdgeRows)
-    // Pin the LOOP's shuffle width to the edge layout (r14, guide §2.4):
-    // with AQE off the contribution groupBy otherwise lands on the conf
-    // default (32) and every iteration pays an extra exchange moving the
-    // rank frame from 32 agg partitions onto the edgeParts join layout.
-    // With shuffle.partitions == edgeParts the aggregate output IS
-    // HashPartitioning(id, edgeParts), localCheckpoint preserves it, and
-    // the next iteration's join fuses with the previous aggregate's read
-    // — one exchange per iteration instead of two. Clone-session conf
-    // only (withAqeOff resets it per loop); results are partition-count
-    // invariant (exact long arithmetic, pinned in Round16Spec).
-    spark.conf.set("spark.sql.shuffle.partitions", edgeParts.toString)
-    // Fan the checkpointed edge list to machine width before the
-    // symmetrize map when it is narrow (r14, same rule as Tables.fanout;
-    // .rdd on an already-materialized checkpoint is partition metadata,
-    // not a planning hazard): the explode+hash of 2·|E| symmetrized rows
-    // otherwise runs on however few (often skewed) partitions the edge
-    // derivation produced — measured 570 ms on 3 tasks at sf0.1, ~150 ms
-    // wide. At cluster scale the join output is already ≥ machine width
-    // and this is a no-op.
-    val eFan =
-      if (e0.rdd.getNumPartitions * 2 < spark.sparkContext.defaultParallelism)
-        e0.repartition(spark.sparkContext.defaultParallelism, col("src"))
-      else e0
-    // symmetrize + dedupe in ONE pass (r13, guide §2.3/§2.4): explode
-    // emits both directions per edge row (the union form scanned e0
-    // twice through two map stages), and the dedupe Aggregate sits ON
-    // TOP of the src-repartition — HashPartitioning(src) satisfies
-    // ClusteredDistribution(src, dst), so distinct() plans with NO
-    // second exchange. Before: union(2 scans) + distinct exchange +
-    // repartition exchange; after: 1 scan + 1 exchange.
-    val sym = eFan
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(edgeParts, col("src"))
-      .distinct()
-      .persist()
-    val verts = sym.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .persist()
-    val n = verts.count() // one driver scalar, like any dim cardinality
-    val teleport = (3L * Scale) / (20L * n)
-
-    var pr = verts.select(col("id"), col("deg"), lit(Scale / n).as("pr"))
-    for (it <- 1 to iters) {
-      // ONE join + ONE aggregation per iteration: the apply step that
-      // used to be a second (verts ⋈ contrib) join is folded INTO the
-      // aggregation as a zero-contribution union branch that also
-      // carries each vertex's degree (max ignores the contribution
-      // rows' null deg; every id has exactly one verts row). Vertices
-      // receiving no mass still surface through the verts branch and
-      // get pure teleport — identical fixed-point values, one less
-      // join (≈2 fewer AQE stage dispatches) per iteration.
-      val contribRows = sym.hint("shuffle_hash")
-        .join(pr.hint("shuffle_hash"), sym("src") === pr("id"))
-        .select(col("dst").as("id"), expr("pr div deg").as("c"),
-          lit(null).cast("long").as("deg"))
-      // localCheckpoint per iteration (r11): cuts lineage harder than
-      // persist+count (the next iteration plans from a LogicalRDD
-      // checkpoint scan, not the whole join chain - measured: driver
-      // planning was half the cold wall time), and blocks die with the
-      // object, so there is no prev-unpersist dance and nothing to leak.
-      // Only the LAST iteration is EAGER (r12): a lazy localCheckpoint
-      // still rewrites the plan to LogicalRDD at construction — the
-      // lineage/planning benefit is identical — but defers
-      // materialization, so all iterations execute inside the single
-      // final-checkpoint job instead of one driver-dispatched job per
-      // iteration (~0.3 s fixed cost each at local scale). The final
-      // one stays eager so materialization happens while sym/verts are
-      // still cached (they are unpersisted on return).
-      pr = contribRows
-        .unionByName(verts.select(col("id"), lit(0L).as("c"), col("deg")))
-        .groupBy("id").agg(sum("c").as("mass"), max("deg").as("deg"))
-        .select(col("id"), col("deg"),
-          (lit(teleport) +
-            expr(s"(85 * mass) div 100").cast("long")).as("pr"))
-        .localCheckpoint(eager = it == iters)
-    }
-    // cache ownership (r11): iterations are checkpointed (blocks die
-    // with their objects); only this call's sym/verts caches remain -
-    // release them so repeated calls accumulate nothing.
-    sym.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    pr
-    }
-  }
+  def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame =
+    kernel(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), iters, _ => lit(true), "deg")
 
   /** PERSONALIZED PageRank (topic-sensitive, Haveliwala 2002): the
     * teleport mass lands only on the `seed` vertices — authority *as
     * seen from* a seed set, the domain-weighting variant a curation
     * pipeline uses to score sources against a trusted whitelist.  Same
     * fixed-point integer discipline as [[run]]; non-seed vertices start
-    * at 0 and receive only propagated mass.
+    * at 0 and receive only propagated mass. Returns (id, deg, pr).
     */
   def runPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
-                      iters: Int, seed: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
-    require(iters >= 1, "at least one iteration")
-    Iterative.withAqeOff(edges) { edges =>
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(true) // edges referenced twice (r11, see run())
-    // size-derived loop width (r14, see run()/Iterative.layoutParts)
-    edges.sparkSession.conf.set("spark.sql.shuffle.partitions",
-      Iterative.layoutParts(edges.sparkSession, e0.count()).toString)
-    val sym = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist()
-    val verts = sym.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .withColumn("seed", seed(col("id")))
-      .persist()
-    val nSeeds = verts.filter(col("seed")).count()
-    require(nSeeds > 0, "personalization needs at least one seed vertex")
-    val tele = (3L * Scale) / (20L * nSeeds)
-
-    var pr = verts.select(col("id"), col("deg"), col("seed"),
-      when(col("seed"), lit(Scale / nSeeds)).otherwise(lit(0L)).as("pr"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = sym.join(pr, sym("src") === pr("id"))
-        .select(col("dst").as("id"), expr("pr div deg").as("c"))
-        .groupBy("id").agg(sum("c").as("mass"))
-      val next = verts.join(contrib, Seq("id"), "left")
-        .select(col("id"), col("deg"), col("seed"),
-          (when(col("seed"), lit(tele)).otherwise(lit(0L)) +
-            expr(s"(85 * coalesce(mass, 0L)) div 100").cast("long")).as("pr"))
-        .persist()
-      next.count()
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = pr
-      pr = next
-    }
-    // materialize-and-release (r11 cache ownership): the final ranks
-    // leave as an eagerly-localCheckpointed frame whose blocks die with
-    // the returned object; sym/verts/the last two iteration caches are
-    // released here, so repeated calls (Bench's per-pass eager
-    // reconstruction) cannot accumulate blocks or hit the CacheManager
-    // "already cached" path.
-    val result = pr.select("id", "deg", "pr").localCheckpoint(true)
-    sym.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    if (prev != null) prev.unpersist(blocking = false)
-    pr.unpersist(blocking = false)
-    result
-    }
-  }
+                      iters: Int, seed: Column => Column): DataFrame =
+    kernel(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), iters, seed, "deg")
 
   /** WEIGHTED PageRank: mass splits proportionally to integer edge
     * weights instead of uniformly — `contribution = (pr · w) div sw`
-    * with `sw` the vertex's total out-weight.  Same fixed-point
-    * integer discipline as [[run]]; pr·w stays inside long range for
-    * weights up to ~10^6 at the default Scale.
+    * with `sw` the vertex's total out-weight (weights of an edge listed
+    * twice add up).  Same fixed-point integer discipline as [[run]];
+    * pr·w stays inside long range for weights up to ~10^6 at the default
+    * Scale. Returns (id, sw, pr).
     */
   def runWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                  weightCol: String, iters: Int): DataFrame = {
-    require(iters >= 1, "at least one iteration")
-    Iterative.withAqeOff(edges) { edges =>
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("long").as("w"))
-      .localCheckpoint(true) // edges referenced twice (r11, see run())
-    // size-derived loop width (r14, see run()/Iterative.layoutParts)
-    edges.sparkSession.conf.set("spark.sql.shuffle.partitions",
-      Iterative.layoutParts(edges.sparkSession, e0.count()).toString)
-    val sym = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .persist()
-    val verts = sym.groupBy(col("src").as("id"))
-      .agg(sum(col("w")).as("sw"))
-      .persist()
-    val n = verts.count()
-    val teleport = (3L * Scale) / (20L * n)
+                  weightCol: String, iters: Int): DataFrame =
+    kernel(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      col(weightCol).cast("long").as("w")), iters, _ => lit(true), "sw")
 
-    var pr = verts.select(col("id"), col("sw"), lit(Scale / n).as("pr"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = sym.join(pr, sym("src") === pr("id"))
-        .select(col("dst").as("id"), expr("(pr * w) div sw").as("c"))
-        .groupBy("id").agg(sum("c").as("mass"))
-      val next = verts.join(contrib, Seq("id"), "left")
-        .select(col("id"), col("sw"),
-          (lit(teleport) +
-            expr(s"(85 * coalesce(mass, 0L)) div 100").cast("long")).as("pr"))
-        .persist()
-      next.count()
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = pr
-      pr = next
+  /** The one kernel behind all three variants, over (src, dst[, w]).
+    * An unweighted edge has weight 1 after dedupe, so `(pr·w) div sw` is
+    * `pr div deg`; with every vertex a seed the teleport column is the
+    * uniform (3·Scale)/(20·n) — the plain PageRank arithmetic, unit for
+    * unit.
+    *
+    * Each iteration is ONE join + ONE aggregation, hence one exchange:
+    * the symmetrized edges are laid out by src on the loop width, the
+    * rank frame is the previous aggregate (already hash-partitioned by
+    * id at that width), so the shuffle-hash join plans no exchange and
+    * only the partial-aggregated contributions move. The apply step is
+    * folded into that aggregation as a zero-contribution union branch
+    * carrying each vertex's out-weight and teleport (max ignores the
+    * contribution rows' nulls), so vertices receiving no mass still get
+    * pure teleport without a second join.
+    */
+  private def kernel(edges: DataFrame, iters: Int, seed: Column => Column,
+                     wName: String): DataFrame =
+    Iterative.loop(edges) { g =>
+      val weighted = g.edges.columns.contains("w")
+      // Fan a narrow checkpoint out to machine width before the
+      // symmetrize map (r14, as Tables.fanout): the explode + hash of
+      // 2·|E| rows otherwise runs on however few partitions the edge
+      // derivation produced (570 ms on 3 tasks at sf0.1, ~150 ms wide).
+      // A one-partition layout (a graph under ~32k edges) gains nothing
+      // from it, only an extra exchange.
+      val cores = g.edges.sparkSession.sparkContext.defaultParallelism
+      val fan = if (g.parts > 1 && g.edges.rdd.getNumPartitions * 2 < cores)
+        g.edges.repartition(cores, col("src")) else g.edges
+      // laid out by src: the dedupe on (src, dst), the per-src vertex
+      // aggregate and every iteration's join then plan no exchange
+      val both = g.bothWays(fan).repartition(g.parts, col("src"))
+      val sym = g.keep(
+        if (weighted) both.groupBy("src", "dst").agg(sum("w").as("w")) else both.distinct())
+      val verts = g.keep(sym.groupBy(col("src").as("id"))
+        .agg(sum(if (weighted) col("w") else lit(1L)).as("sw"))
+        .withColumn("seed", seed(col("id"))))
+      val n = verts.filter(col("seed")).count() // one driver scalar, like a dim cardinality
+      require(n > 0, "PageRank needs at least one seed vertex")
+      val apply = verts.select(col("id"), lit(0L).as("c"), col("sw"),
+        when(col("seed"), lit((3L * Scale) / (20L * n))).otherwise(0L).as("tele"))
+      val init = verts.select(col("id"), col("sw"),
+        when(col("seed"), lit(Scale / n)).otherwise(0L).as("pr"))
+      val contrib = expr(if (weighted) "(pr * w) div sw" else "pr div sw")
+      g.fixed(init, iters) { pr =>
+        sym.hint("shuffle_hash").join(pr.hint("shuffle_hash"), sym("src") === pr("id"))
+          .select(col("dst").as("id"), contrib.as("c"),
+            lit(null).cast("long").as("sw"), lit(null).cast("long").as("tele"))
+          .unionByName(apply)
+          .groupBy("id").agg(sum("c").as("mass"), max("sw").as("sw"), max("tele").as("tele"))
+          .select(col("id"), col("sw"),
+            (col("tele") + expr("(85 * mass) div 100").cast("long")).as("pr"))
+      }.withColumnRenamed("sw", wName)
     }
-    // materialize-and-release (r11 cache ownership): the final ranks
-    // leave as an eagerly-localCheckpointed frame whose blocks die with
-    // the returned object; sym/verts/the last two iteration caches are
-    // released here, so repeated calls (Bench's per-pass eager
-    // reconstruction) cannot accumulate blocks or hit the CacheManager
-    // "already cached" path.
-    val result = pr.localCheckpoint(true)
-    sym.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    if (prev != null) prev.unpersist(blocking = false)
-    pr.unpersist(blocking = false)
-    result
-    }
-  }
 
   /** customer↔supplier trade graph from the TPC-H-ish tables: distinct
     * (o_custkey, l_suppkey) pairs, vertex ids disjoint by prefix.
