@@ -134,7 +134,7 @@ object Round47Queries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         graft.text.ScaleGuidance.checkExactPairs(docs, "q409_containment_dup")
-        val (common, sizes) = TextQueries.gatedPairCounts(s, docs, kernel = false)
+        val (common, sizes) = TextQueries.gatedPairCounts(docs)
         common
           .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
           .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")

@@ -23,29 +23,10 @@ object TextQueries {
     * time when the input's Catalyst size estimate exceeds
     * `spark.graft.exactPairs.warnBytes` (default 1 GiB).
     */
-  def exactPairs(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    exactPairsFrom(s, d, kernel = false)
-
-  /** Pair counting via the streaming primitive-map kernel
-    * ([[graft.text.PairCountIterator]]) — measured and REJECTED for the
-    * default path: 18.4s vs 14.6s for explode+hashagg on the 10× smoke
-    * (tools/BenchQ54K, min-of-3 alternated). The Dataset encoder boxes
-    * every list element on the way into `mapPartitions`, which costs
-    * more than the per-pair row materialization it saves; the explode
-    * path stays fully inside Tungsten. Kept (with its Round6Spec
-    * differential) as the documented experiment — the kernel's bounded
-    * 32 MB footprint would win only where pair multiplicity per shingle
-    * is far higher than even the cloned corpus produces.
-    */
-  def exactPairsKernel(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    exactPairsFrom(s, d, kernel = true)
-
-  private def exactPairsFrom(s: org.apache.spark.sql.SparkSession, d: String,
-                             kernel: Boolean): org.apache.spark.sql.DataFrame = {
+  def exactPairs(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d)
-    graft.text.ScaleGuidance.checkExactPairs(docs,
-      if (kernel) "TextQueries.exactPairsKernel" else "TextQueries.exactPairs")
-    val (common, sizes) = gatedPairCounts(s, docs, kernel)
+    graft.text.ScaleGuidance.checkExactPairs(docs, "TextQueries.exactPairs")
+    val (common, sizes) = gatedPairCounts(docs)
     common
       .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
       .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
@@ -61,11 +42,8 @@ object TextQueries {
     * partial-agg counts. Returns (common(id1, id2, common),
     * sizes(doc_id, n)).
     */
-  private[queries] def gatedPairCounts(s: org.apache.spark.sql.SparkSession,
-                                       docs: org.apache.spark.sql.DataFrame,
-                                       kernel: Boolean):
+  private[queries] def gatedPairCounts(docs: org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import s.implicits._
     val sh = Shingles.cachedSets(docs, "doc_id", "text", 3)
       // ^ shared with q55's identical subplan via CacheManager — cache
       //   once, silently (r11: the second cache() logged a spurious
@@ -75,7 +53,7 @@ object TextQueries {
     // Keyed by the shingle STRING, deliberately: keying by xxhash64(s)
     // (8-byte shuffle keys) was measured FASTER at sf0.1 (1.54s vs
     // 1.72s warm) but 30% SLOWER on the 10×-cloned smoke corpus
-    // (25-27s vs 19-24s — see tools/BenchQ54, both regimes), where the
+    // (BASELINE.md "10× scale-up smoke (round 3)", q54 row), where the
     // pair-counting stage dominates and the extra hash projection only
     // adds scan CPU. The duplication-heavy regime is the one near-dup
     // detection exists for, so the string key stays.
@@ -115,32 +93,13 @@ object TextQueries {
     val lists = gatedInv.groupBy("s")
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) >= 2)
-    // Pair counting: |A∩B| per packed (id1,id2) key. The kernel path
-    // counts pairs into a per-partition open hash map and emits
-    // (pk, partialCount) — the same partial-aggregate dataflow as the
-    // explode+hashagg twin (shuffle carries identical partials) but
-    // without materializing one row PER PAIR EMISSION through codegen;
-    // on the 10×-cloned smoke this stage emits ~10⁸ pairs. The map
-    // flushes at 2²⁰ live entries (half of its 2²¹ capacity) — checked
-    // after EVERY add, so even one hot shingle's O(n²) mid-list burst
-    // drains incrementally instead of saturating the table — and a
-    // skewed partition spills to additional partial rows instead of
-    // OOM (groupBy sums partials regardless).
-    val common0 =
-      if (kernel) {
-        lists.select(col("ds")).as[Seq[Long]]
-          .mapPartitions(it => new graft.text.PairCountIterator(it))
-          .toDF("pk", "c")
-          .groupBy("pk").agg(sum(col("c")).as("common"))
-      } else {
-        lists.select(explode(
-            org.apache.spark.sql.graftbridge.ColumnBridge.column(
-              graft.text.PackedPairs(
-                org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("ds"))))).as("pk"))
-          .groupBy("pk")
-          .agg(count(lit(1)).as("common"))
-      }
-    val common = common0
+    // |A∩B| per packed (id1,id2) key
+    val common = lists.select(explode(
+        org.apache.spark.sql.graftbridge.ColumnBridge.column(
+          graft.text.PackedPairs(
+            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("ds"))))).as("pk"))
+      .groupBy("pk")
+      .agg(count(lit(1)).as("common"))
       .select(shiftrightunsigned(col("pk"), 32).as("id1"),
         col("pk").bitwiseAND(lit(0xffffffffL)).as("id2"),
         col("common"))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * which carried k×dims DOUBLE LITERALS in the Catalyst tree — q239's
   * physical plan was 76 KB of centroid constants, and the per-pass
   * analyzer/optimizer walk over that tree cost ~0.3-0.4 s, more than
-  * the query's task time (r13 ProbeStages). Here the centroids are
+  * the query's task time (OPTIMIZATION_r13.md §5). Here the centroids are
   * plain JVM fields on ONE expression node: the plan shrinks to a
   * single operator and the distance loop runs as one fused JVM loop
   * per row instead of k separate fold expressions.

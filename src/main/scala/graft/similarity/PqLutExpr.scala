@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * inlined m×ksub centroid LITERALS into the Catalyst tree — after the
   * IVF fix, q239's plan was still 44 KB of codebook constants and the
   * per-pass analyzer/optimizer walk dominated the sub-second query
-  * (r13 ProbeStages). Centroids live here as JVM fields on one node.
+  * (OPTIMIZATION_r13.md §5). Centroids live here as JVM fields on one node.
   *
   * Bit-compatibility with the composed form (PQSpec differential):
   * per-(s,j) value is `(dot(u,u) − (2.0 · dot(u,c))) + ‖c‖²` with the

@@ -28,7 +28,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * before returning. A long-lived session scoring MANY queries against
   * a FIXED vocabulary should instead build [[countsTable]] once, cache
   * it itself, and call [[topKFromCounts]] per query — the steady-state
-  * path (what BenchBm25 measures as bm25-steady).
+  * path (0.42 s with the counts table cached; BASELINE.md "Round-12
+  * bounded-tier smoke", op_bm25).
   *
   * The reference has no retrieval surface (beyond-parity tooling).
   */

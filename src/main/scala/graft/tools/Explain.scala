@@ -1,18 +1,21 @@
 package graft.tools
 import graft.{GraftSession, SparkEntry}
 /** Dev tool: print formatted plans for selected queries.
-  * Usage (via run_verify.sh): Explain <sfDir> <ignored> <q1,q2,...>
+  * Usage: Explain [<sfDir> <ignored>] <q1,q2,...> [...], e.g. via
+  * `tools/run_verify.sh <sfDir> x graft.tools.Explain q54,q55`. Without
+  * a leading sfDir, SPARK_GRAFT_SF_DIR (default sf0.01) is used.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
+    // A leading absolute path is the sfDir, followed by run_verify.sh's
+    // output-dir slot; every other arg is a (comma-separable) query-name
+    // list (r14, ADVICE r13: `Explain q54 q55` prints both).
+    val (sf, lists) =
+      if (args.headOption.exists(_.startsWith("/"))) (args(0), args.drop(2))
+      else (sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"), args)
+    val names = lists.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSeq
+    require(names.nonEmpty, "usage: Explain [<sfDir> <ignored>] <q1,q2,...>")
     val spark = GraftSession.get()
-    val sf = if (args.length > 0 && args(0).startsWith("/")) args(0)
-             else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    // Every non-path arg is a (comma-separable) query-name list (r14,
-    // ADVICE r13: lastOption silently dropped all but the final arg of
-    // `Explain q54 q55`, and a lone sfDir arg crashed as a query name).
-    val names = args.filterNot(_.startsWith("/"))
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSeq
     names.foreach { name =>
       println(s"========== $name ==========")
       SparkEntry.queries(name)(spark, sf).explain("formatted")

@@ -1,48 +1,25 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry, Tables}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** 10x scale-up smoke: derive a ~sf1 dataset from sf0.1 (union with
-  * shifted keys — target/tmp only, never touching the oracle testdata),
-  * then time the heavy headline queries on it. Proves the plans scale
-  * with data volume, not just pass at gate SF.
+/** 10x scale-up smoke: time the heavy headline queries on the
+  * StageSf-replicated corpus (under Staging.root, never touching the
+  * oracle testdata). Proves the plans scale with data volume, not just
+  * pass at gate SF.
+  *
+  * Usage: ScaleSmoke [mult]   (default 10; 100 runs the bounded tier),
+  * over StageSf.sourceDir.
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.builder(master = "local[32]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val src = "/root/testdata/sf0.1"
+    val src = StageSf.sourceDir
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     if (mult == 100) { boundedTier(spark, src); spark.stop(); return }
-    val out = "/root/repo/target/tmp/sf1ish"
-
-    def replicate(name: String, df: DataFrame, idCols: Seq[String], shift: Long): Unit = {
-      val p = s"$out/$name.parquet"
-      if (!new java.io.File(p).exists()) {
-        val copies = (0 until mult).map { k =>
-          idCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(k * shift)))
-        }
-        copies.reduce(_.unionByName(_)).write.mode(SaveMode.Overwrite).parquet(p)
-      }
-    }
-    // documents: doc_ids shifted per copy so near-dup pairs stay intra-copy
-    replicate("documents", Tables.documents(spark, src), Seq("doc_id"), 1000000L)
-    replicate("embeddings", Tables.embeddings(spark, src), Seq("vec_id"), 1000000L)
-    replicate("lineitem", Tables.lineitem(spark, src), Seq("l_orderkey"), 100000000L)
-    replicate("orders", Tables.orders(spark, src), Seq("o_orderkey"), 100000000L)
-    // customer unchanged (dim): copy once
-    val custP = s"$out/customer.parquet"
-    if (!new java.io.File(custP).exists())
-      Tables.customer(spark, src).write.mode(SaveMode.Overwrite).parquet(custP)
-    // events is TIMESTAMP(NANOS) parquet (needs Tables.events' special
-    // read path) and no smoke query uses it — copy the plain dims only.
-    Seq("region", "nation", "supplier", "part").foreach { t =>
-      val p = s"$out/$t.parquet"
-      if (!new java.io.File(p).exists())
-        spark.read.parquet(s"$src/$t.parquet").write.mode(SaveMode.Overwrite).parquet(p)
-    }
+    val out = StageSf.stage(spark, src, mult)
 
     val names = Seq("q54_ngram_jaccard", "q55_minhash_lsh", "q102_curation_pipeline",
       "q87_etl_pipeline", "q46_cumsum_global", "q97_group_topk", "q88_embed_centroid",
@@ -217,20 +194,7 @@ object ScaleSmoke {
     spark.stop()
   }
 
-  /** 100× tier — BOUNDED operators only (`ScaleSmoke 100`). The 10×
-    * tier replicates docs verbatim, which multiplies near-dup DENSITY
-    * as well as volume: every clone pair is a true near-duplicate, so
-    * even output-bounded operators emit quadratically more pairs as
-    * the clone count rises — that measures the metric's growth, not
-    * the plan's. Here each copy's vocabulary is salted (`word_k`):
-    * intra-copy shingle structure is preserved exactly (shingle sets
-    * are isomorphic under the suffix map), copies are pairwise
-    * disjoint, so duplication density stays CONSTANT while volume
-    * scales 100× — the honest scaling experiment for the LSH/banded
-    * paths. Compare per-op times against the same-construction 10×
-    * run this tier prints first.
-    */
-  /** Salted-corpus staging (shared with [[GramIndexSmoke]]).
+  /** Salted-corpus staging for the bounded tier.
     * Salting v2 (round 7): the tag is ALSO inserted every 8 chars
     * inside long tokens, so no char-20-gram window is salt-free — v1's
     * word-suffix-only salting let grams inside >20-char tokens collide
@@ -241,7 +205,7 @@ object ScaleSmoke {
     * every doc in a copy).
     */
   def stageSalted(spark: SparkSession, src: String, mult: Int): String = {
-    val p = s"${graft.tools.Staging.root}/docs_salted_$mult"
+    val p = s"${Staging.root}/docs_salted_$mult"
     if (!new java.io.File(s"$p/documents.parquet").exists()) {
       val docs = Tables.documents(spark, src)
       val copies = (0 until mult).map { k =>
@@ -257,6 +221,19 @@ object ScaleSmoke {
     p
   }
 
+  /** 100× tier — BOUNDED operators only (`ScaleSmoke 100`). The 10×
+    * tier replicates docs verbatim, which multiplies near-dup DENSITY
+    * as well as volume: every clone pair is a true near-duplicate, so
+    * even output-bounded operators emit quadratically more pairs as
+    * the clone count rises — that measures the metric's growth, not
+    * the plan's. Here each copy's vocabulary is salted (`word_k`):
+    * intra-copy shingle structure is preserved exactly (shingle sets
+    * are isomorphic under the suffix map), copies are pairwise
+    * disjoint, so duplication density stays CONSTANT while volume
+    * scales 100× — the honest scaling experiment for the LSH/banded
+    * paths. Compare per-op times against the same-construction 10×
+    * run this tier prints first.
+    */
   private def boundedTier(spark: SparkSession, src: String): Unit = {
     def stage(mult: Int): String = stageSalted(spark, src, mult)
     val qmap = SparkEntry.queries
@@ -371,7 +348,7 @@ object ScaleSmoke {
     // operating point), so this times fit + assign + in-cell pairs at
     // true 10×/100× deployment shape.
     def stageEmb(m: Int): String = {
-      val p = s"/root/repo/target/tmp/emb_rot_$m"
+      val p = s"${Staging.root}/emb_rot_$m"
       if (!new java.io.File(s"$p/embeddings.parquet").exists()) {
         val e1 = Tables.embeddings(spark, src)
         val dim = 64
@@ -497,7 +474,7 @@ object ScaleSmoke {
     val mergeTimes = Seq(10, 100).map { m =>
       reclaim()
       val dir = stageEmb(m)
-      val idxDir = s"/root/repo/target/tmp/emb_idx_$m"
+      val idxDir = s"${Staging.root}/emb_idx_$m"
       val em = Tables.embeddings(spark, dir)
       val corpus = em.filter(col("vec_id") % 89 >= 2)
       val b1 = em.filter(col("vec_id") % 89 === 0)

@@ -28,20 +28,21 @@ object Staging {
   }
 
   /** [[dir]] additionally keyed on the SOURCE table's modification time
-    * (r14, VERDICT r13 item 6): persisted fit-once artifacts (q232's MG
-    * sketch, q440's NB model) were guarded only by `fs.exists`, so a
-    * corpus rewritten in place between runs could silently reuse a stale
-    * artifact. Embedding the source file's modTime in the path is the
-    * same invalidation key Tables.relCache uses — a changed corpus
-    * resolves to a fresh path and refits.
+    * and total content length (r14, VERDICT r13 item 6): persisted
+    * fit-once artifacts (q232's MG sketch, q440's NB model) were guarded
+    * only by `fs.exists`, so a corpus rewritten in place between runs
+    * could silently reuse a stale artifact. A changed corpus resolves to
+    * a fresh path and refits. The length (summed over the files, since
+    * Spark writes a table as a directory) catches a rewrite inside the
+    * filesystem's modTime granularity. A missing source throws: there is
+    * no key that could tell a later corpus from this one.
     */
   def dirKeyedOnSource(spark: org.apache.spark.sql.SparkSession,
                        tag: String, sfDir: String, table: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
-    val mt =
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).getModificationTime
-      catch { case _: java.io.IOException => -1L }
-    dir(s"${tag}_mt$mt", sfDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mt = fs.getFileStatus(p).getModificationTime // FileNotFoundException naming p
+    val len = fs.getContentSummary(p).getLength
+    dir(s"${tag}_mt${mt}_len$len", sfDir)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{RangeJoin, RollingGlobal}
-import graft.text.PairCountIterator
 
 /** Regression tests for the round-6 advisory fixes:
   *  1. RangeJoin left_outer fabricated a NULL row for a point that
@@ -12,10 +11,7 @@ import graft.text.PairCountIterator
   *     unmatched rows).
   *  2. RangeJoin floorDiv routed through double division — off-by-one
   *     bins above 2^53 (nanosecond-scale coordinates).
-  *  3. PairCountIterator flushed only between doc-id lists — one hot
-  *     shingle's O(n²) mid-list pair burst could saturate the fixed
-  *     table and spin the probe loop forever.
-  *  4. RollingGlobal ghosts hopped pid+1 blindly — an empty range
+  *  3. RollingGlobal ghosts hopped pid+1 blindly — an empty range
   *     partition silently NULLed the lookback of the partition after it.
   */
 class BugfixR6Spec extends SparkSpec {
@@ -72,28 +68,6 @@ class BugfixR6Spec extends SparkSpec {
     val outer = RangeJoin.binned(pts, iv, Seq(), "t", "lo", "hi",
       width = 7L, how = "left_outer").collect()
     assert(outer.length == 1 && !outer.head.isNullAt(1))
-  }
-
-  test("pair counter survives one hot shingle exceeding the flush limit mid-list") {
-    // 2500 docs sharing one shingle -> 3,123,750 distinct pairs from a
-    // SINGLE list: more than the 2^21 table capacity, so the old
-    // end-of-list flush check never ran and add() span forever. The
-    // mid-list drain must emit every pair exactly once (summed partials).
-    val n = 2500
-    val it = new PairCountIterator(Iterator(0L until n.toLong))
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-    it.foreach { case (pk, c) => acc.merge(pk, c, (a, b) => a + b) }
-    assert(acc.size == n * (n - 1) / 2)
-    assert(acc.values.stream().allMatch(_ == 1L))
-  }
-
-  test("pair counter sums partials across drains for repeated lists") {
-    val ids = 0L until 2000L // 1,999,000 pairs per list; two lists cross drains
-    val it = new PairCountIterator(Iterator(ids, ids))
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-    it.foreach { case (pk, c) => acc.merge(pk, c, (a, b) => a + b) }
-    assert(acc.size == 2000 * 1999 / 2)
-    assert(acc.values.stream().allMatch(_ == 2L))
   }
 
   test("rolling window ghosts route past an empty range partition") {

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * a broadcast, or degrades a join to cartesian now fails CI instead of
   * surfacing as a bench regression a round later.
   *
-  * Counts are substring occurrences in the executed-plan string (same
-  * extraction as tools/PlanAudit); they were measured identical at
+  * Counts are substring occurrences in the executed-plan string (the
+  * PLANS.md audit tables); they were measured identical at
   * sf0.001 and sf0.01, so the pins are SF-stable. ALL 30 headline
   * queries are covered (r11): lazily-returned plans through the `pins`
   * table; eager-construction queries (q232/q249/q263/q373 — whose

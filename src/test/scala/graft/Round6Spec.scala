@@ -419,15 +419,6 @@ class Round6Spec extends SparkSpec {
     }
   }
 
-  test("q54 pair-counting kernel equals the explode+hashagg twin") {
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val k = asSet(graft.queries.TextQueries.exactPairsKernel(spark, sf))
-    val e = asSet(graft.queries.TextQueries.exactPairs(spark, sf))
-    assert(k == e)
-    assert(k.nonEmpty)
-  }
-
   test("a custom MediaDecoder flows through the multimodal feature plumbing") {
     import graft.multimodal.{MediaDecoder, Multimodal}
     object LenFirstDecoder extends MediaDecoder {

@@ -41,7 +41,7 @@ def main():
         oracle = json.load(f)
     con = duckdb.connect()
     for t in TABLES:
-        # ScaleSmoke-staged dirs (target/tmp/sf1ish) are Spark
+        # StageSf-staged dirs (<staging root>/sf<mult>x) are Spark
         # directory-parquet and omit events; glob dirs, skip absentees
         path = f"{sf}/{t}.parquet"
         if os.path.isdir(path):
