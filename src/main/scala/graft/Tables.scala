@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Loaders for the driver-generated TPC-H-ish corpus (TESTDATA.md).
   *
@@ -18,13 +19,15 @@ object Tables {
     * via `spark.table`): `spark.read.parquet` re-runs schema inference —
     * a driver job + footer reads — on EVERY call, which a repeated
     * workload pays once per query construction (r13 probe: ~40 ms stage
-    * + planning gap per rebuild). Keyed by (session, path, file
+    * + planning gap per rebuild). Keyed by (session UUID, path, file
     * modTime): data refreshed on disk re-resolves, a new session never
-    * sees another session's plans. DataFrames are immutable plans, so
+    * sees another session's plans (an identity hash could collide; a
+    * weak key on the session would never clear, since each cached
+    * DataFrame holds its session). DataFrames are immutable plans, so
     * sharing the instance is safe.
     */
   private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, Long), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]()
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
@@ -36,7 +39,7 @@ object Tables {
       } catch { case _: java.io.IOException => -1L }
     if (relCache.size > 256) relCache.clear() // plans are cheap to rebuild
     relCache.computeIfAbsent(
-      (System.identityHashCode(spark), path, mt),
+      (ColumnBridge.sessionUUID(spark), path, mt),
       _ => spark.read.parquet(path))
   }
 

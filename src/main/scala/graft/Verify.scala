@@ -26,7 +26,11 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // class, message and cause chain: a bare getMessage is "null"
+        // for an NPE and hides the construction step that threw
+        val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+          .map(c => s"${c.getClass.getName}: ${c.getMessage}").mkString(" <- caused by ")
+        System.err.println(s"[verify] $name failed: $chain")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -750,15 +750,11 @@ final case class GFrame(df: DataFrame, index: Seq[String] = Seq()) {
     GFrame(graft.operators.ShiftGlobal.pctChange(df, index, valueCol, periods, out), index)
   }
 
-  /** cut(breaks): fixed-width binning — bin i covers
-    * (breaks(i), breaks(i+1)], right-closed like pandas cut; values
-    * outside the break range get null. Pure when-chain, stays in the
-    * scan stage.
-    */
   /** UNGROUPED df.rolling(window) over a global ordering — pandas
     * min_periods semantics, computed by [[graft.operators.RollingGlobal]]
-    * (ghost-row construction; never a single-partition window). `fn` in
-    * mean/sum/min/max; sum and mean go through the exact decimal sum.
+    * (a carry-in of the preceding w-1 rows; never a single-partition
+    * window). `fn` in mean/sum/min/max; sum and mean go through the
+    * exact decimal sum.
     */
   def rollingGlobal(valueCol: String, orderBy: Seq[String], window: Int,
                     fn: String = "mean", outCol: String = ""): GFrame = {
@@ -774,6 +770,11 @@ final case class GFrame(df: DataFrame, index: Seq[String] = Seq()) {
     GFrame(r.withColumn(out, c).drop("__r_sum", "__r_min", "__r_max"), index)
   }
 
+  /** cut(breaks): fixed-width binning — bin i covers
+    * (breaks(i), breaks(i+1)], right-closed like pandas cut; values
+    * outside the break range get null. Pure when-chain, stays in the
+    * scan stage.
+    */
   def cut(c: String, breaks: Seq[Double], outCol: String): GFrame = {
     require(breaks.size >= 2, "cut needs at least 2 break points")
     val v = col(c)

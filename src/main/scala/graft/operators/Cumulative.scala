@@ -1,8 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+
+import graft.plans.{CarryKernel, CarryScan}
 
 /** Cumulative scans: cumsum / cummin / cummax / cumprod
   * (reference `legate/pandas/frontend/frame.py:396-430`).
@@ -14,17 +18,14 @@ import org.apache.spark.sql.functions._
   * `Window.orderBy(...)` with no partitionBy — funnels ALL rows through a
   * single partition and cannot scale.
   *
-  * [[globalScan]] reproduces the reference's two-phase algorithm on
-  * Spark primitives and stays fully distributed:
-  *   1. range-repartition + sort within partitions on the order key
-  *      (Spark's sampled RangePartitioner — same sample/histogram trick
-  *      as the reference's sort, `core/sort.py:93-174`);
-  *   2. one pass computing each partition's total (tiny: one double per
-  *      partition, collected to the driver);
-  *   3. exclusive prefix over the totals, broadcast back, and a second
-  *      partition-local pass adding the carry-in.
-  * Cost: one range shuffle + two narrow passes; no single-partition
-  * bottleneck at any scale.
+  * [[globalScan]], [[globalScanRowNumber]] and [[globalRowNumberBy]]
+  * are that algorithm as one [[graft.plans.CarryScan]] operator: range
+  * exchange + sort on the order key (Spark's sampled RangePartitioner —
+  * same sample/histogram trick as the reference's sort,
+  * `core/sort.py:93-174`), per-partition totals, their exclusive prefix
+  * on the driver (O(numPartitions) values), and a second partition-local
+  * pass consuming the carry-in. Cost: one range shuffle + two narrow
+  * passes over it; no single-partition bottleneck at any scale.
   *
   * For grouped cumulatives (many small groups) use [[groupedScan]] —
   * an ordinary partitioned window, which Spark executes with one hash
@@ -41,144 +42,60 @@ object Cumulative {
   case object MinOp extends ScanOp { val zero = Double.PositiveInfinity; def apply(a: Double, b: Double): Double = math.min(a, b) }
   case object MaxOp extends ScanOp { val zero = Double.NegativeInfinity; def apply(a: Double, b: Double): Double = math.max(a, b) }
 
-  /** Bounded registry for the range-sorted frames the two-phase helpers
-    * cache (phase-1 totals and the returned plan must consume the SAME
-    * partitioning, and the caller executes that plan only later — so
-    * the helpers can't unpersist eagerly). A FIFO evicts the oldest
-    * cached frame beyond `MaxLive` (ADVICE r12: repeated rank/expanding
-    * calls accumulated session-lifetime cached partitions). Evicting a
-    * frame whose plan re-executes afterwards only recomputes the range
-    * sort — `repartitionByRange` resamples deterministically (seeded by
-    * partition index) over the same input, so the folded carries stay
-    * valid; the eviction trades a recompute for bounded storage.
+  /** The scan kernels: the running `op` of input 0 (when `op` is set;
+    * null where the input is null) and/or the running row count. A row
+    * emits `op(carryIn, localRunning)` — the association of the
+    * reference's carry-in pass — never a fold started from the carry.
     */
-  private val MaxLive = 8
-  private val liveCaches = new java.util.ArrayDeque[DataFrame]()
-  private def registerCache(df: DataFrame): DataFrame = liveCaches.synchronized {
-    liveCaches.addLast(df)
-    while (liveCaches.size > MaxLive)
-      liveCaches.pollFirst().unpersist(blocking = false)
-    df
+  private case class Running(op: Option[ScanOp], count: Boolean)
+      extends CarryKernel[(Double, Long)] {
+    private val z = op.fold(0.0)(_.zero)
+    val out: Seq[(DataType, Boolean)] =
+      op.map(_ => DoubleType -> true).toSeq ++ (if (count) Seq(LongType -> false) else Nil)
+    def zero: (Double, Long) = (z, 0L)
+    def step(s: (Double, Long), r: InternalRow): (Double, Long) =
+      (if (op.isEmpty || r.isNullAt(0)) s._1 else op.get(s._1, r.getDouble(0)), s._2 + 1)
+    def combine(a: (Double, Long), b: (Double, Long)): (Double, Long) =
+      (op.fold(z)(_(a._1, b._1)), a._2 + b._2)
+    def emit(carryIn: (Double, Long), local: (Double, Long), r: InternalRow,
+             into: InternalRow): Unit = {
+      op.foreach { f =>
+        if (r.isNullAt(0)) into.setNullAt(0) else into.setDouble(0, f(carryIn._1, local._1))
+      }
+      if (count) into.setLong(into.numFields - 1, carryIn._2 + local._2)
+    }
+  }
+
+  /** The value as a double, null where it is null or NaN (pandas skipna). */
+  private def skipna(valueCol: String): Column = {
+    val v = col(valueCol).cast("double")
+    when(v.isNotNull && !isnan(v), v)
   }
 
   /** Distributed global cumulative scan of `valueCol` in `orderCols`
     * order, appended as `outCol` (double). skipna: null/NaN values carry
     * the running value forward and produce null output, like pandas.
-    *
-    * Fully Tungsten-resident: after the range shuffle, phase 1 is a
-    * `groupBy(partition_id)` aggregate (one double per partition to the
-    * driver), phase 2 a partition-local running window plus a carry-in
-    * looked up from a tiny map literal — no RDD row conversion, both
-    * passes whole-stage-codegen'd.
     */
   def globalScan(df: DataFrame, orderCols: Seq[String], valueCol: String,
-                 outCol: String, op: ScanOp): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val v0 = col(valueCol).cast("double")
-    val v = when(v0.isNotNull && !isnan(v0), v0) // skipna: null AND NaN
-    val sorted = df
-      .repartitionByRange(n, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    registerCache(sorted)
-
-    def winAgg(c: org.apache.spark.sql.Column,
-               w: org.apache.spark.sql.expressions.WindowSpec) = op match {
-      case SumOp  => sum(c).over(w)
-      case ProdOp => graft.functions.ProdAgg.prod(c).over(w)
-      case MinOp  => min(c).over(w)
-      case MaxOp  => max(c).over(w)
-    }
-    def fullAgg(c: org.apache.spark.sql.Column) = op match {
-      case SumOp  => sum(c)
-      case ProdOp => graft.functions.ProdAgg.prod(c)
-      case MinOp  => min(c)
-      case MaxOp  => max(c)
-    }
-
-    // Phase 1: per-partition totals → exclusive prefix on the driver
-    // (O(numPartitions) doubles).
-    val totals = sorted.groupBy(col("__pid")).agg(fullAgg(v).as("t"))
-      .collect().map(r => r.getInt(0) -> (if (r.isNullAt(1)) op.zero else r.getDouble(1)))
-      .sortBy(_._1)
-    val carries = scala.collection.mutable.Map[Int, Double]()
-    var acc = op.zero
-    totals.foreach { case (pid, t) => carries(pid) = acc; acc = op(acc, t) }
-
-    // Phase 2: partition-local running aggregate + carry-in (a plan
-    // literal at small partition counts, a broadcast join above —
-    // PidCarry scaladoc).
-    val w = Window.partitionBy(col("__pid"))
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withCarry = PidCarry.withLookup(
-      sorted, col("__pid"), carries.toMap, lit(op.zero), "__carry")
-    val carry = col("__carry")
-    val local = winAgg(v, w)
-    val combined = op match {
-      case SumOp  => carry + local
-      case ProdOp => carry * local
-      case MinOp  => least(carry, local)
-      case MaxOp  => greatest(carry, local)
-    }
-    withCarry
-      .withColumn(outCol, when(v.isNull, lit(null)).otherwise(combined))
-      .drop("__pid", "__carry")
-  }
+                 outCol: String, op: ScanOp): DataFrame =
+    CarryScan(df, orderCols.map(col), Seq(skipna(valueCol)),
+      Running(Some(op), count = false), Seq(outCol))
 
   /** Fused [[globalScan]](Sum) + [[globalRowNumber]] over the SAME
-    * ordering: one range exchange, one cached sorted frame, ONE
-    * per-partition totals job collecting (sum, count) per pid, and one
-    * window operator emitting BOTH the running sum and the global row
-    * number (the two window functions share a WindowSpec, so Spark
-    * evaluates them in a single pass). Callers that chained the two
-    * helpers (RankMethods, GFrame.expanding) paid the whole two-phase
-    * machinery — exchange, cache, driver job, window — twice.
+    * ordering: one range exchange and one operator emitting BOTH the
+    * running sum and the global row number (callers that chained the two
+    * helpers — RankMethods, GFrame.expanding — paid the scan twice).
     */
   def globalScanRowNumber(df: DataFrame, orderCols: Seq[String],
                           valueCol: String, cumOut: String,
-                          rnOut: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val v0 = col(valueCol).cast("double")
-    val v = when(v0.isNotNull && !isnan(v0), v0)
-    val sorted = df
-      .repartitionByRange(n, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    registerCache(sorted)
-    val totals = sorted.groupBy(col("__pid"))
-      .agg(sum(v).as("t"), count(lit(1)).as("c"))
-      .collect()
-      .map(r => (r.getInt(0),
-        if (r.isNullAt(1)) 0.0 else r.getDouble(1), r.getLong(2)))
-      .sortBy(_._1)
-    val carries = scala.collection.mutable.Map[Int, Double]()
-    val offsets = scala.collection.mutable.Map[Int, Long]()
-    var accV = 0.0
-    var accC = 0L
-    totals.foreach { case (pid, t, c) =>
-      carries(pid) = accV; accV += t
-      offsets(pid) = accC; accC += c
-    }
-    val w = Window.partitionBy(col("__pid")).orderBy(orderCols.map(col): _*)
-    val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withCarries = PidCarry.withLookup(
-      PidCarry.withLookup(sorted, col("__pid"), carries.toMap, lit(0.0), "__carry"),
-      col("__pid"), offsets.toMap, lit(0L), "__off")
-    withCarries
-      .withColumn(cumOut,
-        when(v.isNull, lit(null)).otherwise(col("__carry") + sum(v).over(wc)))
-      .withColumn(rnOut, row_number().over(w).cast("long") + col("__off"))
-      .drop("__pid", "__carry", "__off")
-  }
+                          rnOut: String): DataFrame =
+    CarryScan(df, orderCols.map(col), Seq(skipna(valueCol)),
+      Running(Some(SumOp), count = true), Seq(cumOut, rnOut))
 
   /** Distributed GLOBAL row number in `orderCols` order — the same
-    * two-phase shape as [[globalScan]] (range shuffle, per-partition
-    * counts to the driver, partition-local row_number + offset). The
-    * naive `row_number().over(Window.orderBy(...))` funnels everything
-    * through one partition; this never does.
+    * two-phase scan as [[globalScan]] over per-partition row counts.
+    * The naive `row_number().over(Window.orderBy(...))` funnels
+    * everything through one partition; this never does.
     */
   def globalRowNumber(df: DataFrame, orderCols: Seq[String],
                       outCol: String): DataFrame =
@@ -188,24 +105,8 @@ object Cumulative {
     * placement), e.g. `col("bal").desc_nulls_last`.
     */
   def globalRowNumberBy(df: DataFrame, sortExprs: Seq[Column],
-                        outCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = df
-      .repartitionByRange(n, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    registerCache(sorted)
-    val counts = sorted.groupBy(col("__pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = scala.collection.mutable.Map[Int, Long]()
-    var acc = 0L
-    counts.foreach { case (pid, c) => offsets(pid) = acc; acc += c }
-    val w = Window.partitionBy(col("__pid")).orderBy(sortExprs: _*)
-    PidCarry.withLookup(sorted, col("__pid"), offsets.toMap, lit(0L), "__carry")
-      .withColumn(outCol, row_number().over(w).cast("long") + col("__carry"))
-      .drop("__pid", "__carry")
-  }
+                        outCol: String): DataFrame =
+    CarryScan(df, sortExprs, Nil, Running(None, count = true), Seq(outCol))
 
   /** Per-group cumulative via a partitioned window — one hash shuffle on
     * the group keys; safe at scale when groups are small relative to a

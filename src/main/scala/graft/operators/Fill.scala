@@ -1,8 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType}
+
+import graft.plans.{CarryKernel, CarryScan}
 
 /** pandas `fillna(method="ffill"/"bfill")` — forward/backward
   * propagation of the last/next observed value.
@@ -12,12 +16,11 @@ import org.apache.spark.sql.functions._
   * rows — same contract as every grouped window here).
   *
   * GLOBAL form: the naive `Window.orderBy(...)` funnel is replaced by
-  * the two-phase carry shape of [[Cumulative.globalScan]] — range
-  * shuffle, ONE aggregated value per partition to the driver (the
-  * latest non-null, computed order-independently with `max_by` over the
-  * ordering key), "last non-null wins" exclusive prefix as each
-  * partition's carry-in, then a partition-local last-non-null window
-  * coalesced with the carry literal. O(numPartitions) driver state.
+  * the two-phase [[graft.plans.CarryScan]] of [[Cumulative.globalScan]]
+  * — range shuffle, each partition's last non-null value as its
+  * summary, "last non-null wins" exclusive prefix as each partition's
+  * carry-in, then a partition-local pass that fills from the carry.
+  * O(numPartitions) driver state.
   */
 object Fill {
 
@@ -77,40 +80,21 @@ object Fill {
     * boundary would make "previous row" ambiguous).
     */
   def ffillGlobal(df: DataFrame, orderCols: Seq[String],
-                  valueCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val v = col(valueCol).cast("double")
-    val sorted = df
-      .repartitionByRange(n, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    // order-independent "latest non-null per partition": max_by skips
-    // rows whose ordering expression is null, so null values never win
-    val ordKey = when(v.isNotNull, struct(orderCols.map(col): _*))
-    val lasts = sorted.groupBy(col("__pid"))
-      .agg(max_by(v, ordKey).as("l"))
-      .collect().map(r => r.getInt(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .sortBy(_._1)
-    // Empty range partitions are harmless here (unlike RollingGlobal's
-    // pid+1 ghost hop): the run folds over the pids that actually hold
-    // rows, in order, so a gap neither receives nor breaks a carry.
-    val carries = scala.collection.mutable.Map[Int, Double]()
-    var run: Option[Double] = None
-    lasts.foreach { case (pid, l) =>
-      run.foreach(carries(pid) = _)
-      if (l.isDefined) run = l
-    }
-    val w = Window.partitionBy(col("__pid"))
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carry =
-      if (carries.isEmpty) lit(null).cast("double")
-      else element_at(typedlit(carries.toMap), col("__pid"))
-    sorted
-      .withColumn(valueCol, coalesce(last(v, ignoreNulls = true).over(w), carry))
-      .drop("__pid")
+                  valueCol: String): DataFrame =
+    CarryScan(df, orderCols.map(col), Seq(col(valueCol).cast("double")),
+      LastNonNull, Seq(valueCol))
+
+  /** Last non-null value so far; an empty or all-null partition passes
+    * its carry-in through unchanged.
+    */
+  private case object LastNonNull extends CarryKernel[Option[Double]] {
+    val out: Seq[(DataType, Boolean)] = Seq(DoubleType -> true)
+    def zero: Option[Double] = None
+    def step(l: Option[Double], r: InternalRow): Option[Double] =
+      if (r.isNullAt(0)) l else Some(r.getDouble(0))
+    def combine(a: Option[Double], b: Option[Double]): Option[Double] = b.orElse(a)
+    def emit(carryIn: Option[Double], local: Option[Double], r: InternalRow,
+             into: InternalRow): Unit =
+      local.orElse(carryIn).fold(into.setNullAt(0))(into.setDouble(0, _))
   }
 }

@@ -1,31 +1,31 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType}
+
+import graft.plans.{CarryKernel, CarryScan}
 
 /** GLOBAL trailing-window aggregates (pandas `df.rolling(w)` with no
   * group key) — distributed, never a single-partition window.
   *
   * The naive `Window.orderBy(...)` with no partition key funnels the
-  * whole table through one task. Instead: range-shuffle on the ordering
-  * key (same shape as [[Cumulative.globalScan]]), then replicate each
-  * partition's LAST `w-1` rows into the NEXT partition as "ghost" rows.
-  * Every trailing window of a real row is then complete inside its own
-  * partition — a partition-local `rowsBetween(-(w-1), 0)` frame computes
-  * the exact global answer, and ghosts are dropped on the way out.
-  *
-  * Ghost volume is `(numPartitions-1) × (w-1)` rows — independent of the
-  * data size, so the construction holds at any scale where `w` is small
-  * relative to a partition (requires `w-1 ≤` every partition's row
-  * count; asserted from the per-partition counts the driver already
-  * collects, O(numPartitions) longs).
+  * whole table through one task. Instead the window is a
+  * [[graft.plans.CarryScan]] (the two-phase scan of
+  * [[Cumulative.globalScan]]) whose carry is the last `w-1` rows of
+  * ALL preceding partitions: a partition starts its window from that
+  * carry, so every trailing window is exact on any partition layout —
+  * small or empty range partitions included. Carry volume is
+  * `numPartitions × (w-1)` rows, independent of the data size.
   *
   * `orderCols` must be a unique key (ties across a range-partition
   * boundary would make "previous w-1 rows" ambiguous — same contract as
   * [[Cumulative.globalRowNumber]]).
   *
-  * Output: input columns + `<out>_sum` (exact DECIMAL(27,6) sum — the
+  * Output: input columns + `<out>_sum` (exact DECIMAL sum of the values
+  * cast to DECIMAL(27,6), typed as Spark's decimal `sum` types it — the
   * only order-sensitive aggregate, so the only one that needs the
   * decimal detour), `<out>_min`, `<out>_max` (raw value dtype), each
   * NULL until the window holds `w` non-null observations (pandas
@@ -36,75 +36,38 @@ object RollingGlobal {
   def trailing(df: DataFrame, orderCols: Seq[String], valueCol: String,
                w: Int, out: String): DataFrame = {
     require(w >= 2, "window of 1 is the identity; use the column")
-    val spark = df.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = df
-      .repartitionByRange(n, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-
-    val counts0 = sorted.groupBy(col("__pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    trailingTagged(sorted, counts0, orderCols, valueCol, w, out)
+    val v = col(valueCol)
+    CarryScan(df, orderCols.map(col), Seq(v, v.cast("decimal(27,6)")),
+      Tail(w, df.select(v).schema.head.dataType),
+      Seq(s"${out}_sum", s"${out}_min", s"${out}_max"))
   }
 
-  /** Ghost construction over an already-range-partitioned input tagged
-    * with a `__pid` column whose values ASCEND with `orderCols` (row in
-    * pid a sorts before every row in pid b for a < b). Package-private
-    * so the empty-partition (pid-gap) path is unit-testable — real
-    * callers go through [[trailing]].
+  /** Summary = the last `w` (value, decimal value) input rows of a
+    * partition, carry = the last `w-1` before it. min/max keep the
+    * earliest of equal values, as Spark's `least`/`greatest`.
     */
-  private[graft] def trailingTagged(sorted: DataFrame,
-      counts0: Map[Int, Long], orderCols: Seq[String], valueCol: String,
-      w: Int, out: String): DataFrame = {
-    require(counts0.values.forall(_ >= w - 1),
-      s"window $w needs >= ${w - 1} rows in every range partition; " +
-        s"smallest has ${if (counts0.isEmpty) 0 else counts0.values.min} — lower " +
-        "spark.sql.shuffle.partitions for this input size")
-
-    // repartitionByRange can leave partitions EMPTY (few distinct
-    // ordering values, sampling skew). Ghosts must hop to the next
-    // NON-EMPTY partition — a raw pid+1 hop would strand them in an
-    // empty partition and silently NULL the lookback of the partition
-    // after it. Remap pids to their dense rank among non-empty
-    // partitions (identity when none are empty), so +1 is always "the
-    // next partition that actually holds rows".
-    val livePids = counts0.keys.toArray.sorted
-    val maxLive = if (livePids.isEmpty) -1 else livePids.last
-    val denseSorted =
-      if (livePids.length == maxLive + 1) sorted
-      else PidCarry.withLookup(sorted, col("__pid"),
-          livePids.zipWithIndex.toMap, lit(null), "__pid_dense")
-        .withColumn("__pid", col("__pid_dense"))
-        .drop("__pid_dense")
-    val maxPid = livePids.length - 1
-
-    // last w-1 rows of each partition, re-tagged into the next partition
-    val wDesc = Window.partitionBy(col("__pid"))
-      .orderBy(orderCols.map(col(_).desc): _*)
-    val ghosts = denseSorted
-      .withColumn("__lrd", row_number().over(wDesc))
-      .filter(col("__lrd") <= w - 1 && col("__pid") < maxPid)
-      .drop("__lrd")
-      .withColumn("__pid", col("__pid") + 1)
-      .withColumn("__ghost", lit(1))
-
-    val unioned = denseSorted.withColumn("__ghost", lit(0)).unionByName(ghosts)
-
-    // ghosts carry strictly smaller orderCol values than every real row
-    // of their target partition (range partitioning), so a plain
-    // ascending order puts them first — exactly the missing lookback.
-    val frame = Window.partitionBy(col("__pid"))
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(-(w - 1), Window.currentRow)
-    val v = col(valueCol)
-    val full = count(v).over(frame) >= w
-    unioned
-      .withColumn(s"${out}_sum", when(full, sum(v.cast("decimal(27,6)")).over(frame)))
-      .withColumn(s"${out}_min", when(full, min(v).over(frame)))
-      .withColumn(s"${out}_max", when(full, max(v).over(frame)))
-      .filter(col("__ghost") === 0)
-      .drop("__pid", "__ghost")
+  private case class Tail(w: Int, valueType: DataType)
+      extends CarryKernel[Vector[InternalRow]] {
+    val out: Seq[(DataType, Boolean)] =
+      Seq(DecimalType(37, 6) -> true, valueType -> true, valueType -> true)
+    @transient private lazy val ord = PhysicalDataType.ordering(valueType)
+    def zero: Vector[InternalRow] = Vector.empty
+    def step(t: Vector[InternalRow], r: InternalRow): Vector[InternalRow] =
+      (t :+ r.copy()).takeRight(w)
+    def combine(a: Vector[InternalRow], b: Vector[InternalRow]): Vector[InternalRow] =
+      (a ++ b).takeRight(w - 1)
+    def emit(carryIn: Vector[InternalRow], local: Vector[InternalRow],
+             r: InternalRow, into: InternalRow): Unit = {
+      val win = (carryIn ++ local).takeRight(w)
+      if (win.size < w || win.exists(_.isNullAt(0))) (0 until 3).foreach(into.setNullAt)
+      else {
+        val vs = win.map(_.get(0, valueType))
+        val decs = win.flatMap(x => Option(x.getDecimal(1, 27, 6)))
+        into.update(0, if (decs.isEmpty) null
+          else Decimal(decs.map(_.toJavaBigDecimal).reduce(_ add _)))
+        into.update(1, vs.reduce((a, b) => if (ord.lt(b, a)) b else a))
+        into.update(2, vs.reduce((a, b) => if (ord.gt(b, a)) b else a))
+      }
+    }
   }
 }

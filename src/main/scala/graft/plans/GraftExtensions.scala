@@ -13,9 +13,11 @@ import graft.text.SimHash64
   * spark.sql("SELECT simhash64(split(text, ' ')) FROM docs")
   * }}}
   *
-  * (SURVEY §4.3: the engine needs no custom planner rules for parity —
-  * Catalyst covers every reference operator — so the extension surface
-  * is function registration only.)
+  * (SURVEY §4.3: the extension surface is function registration only.
+  * graft's two planner strategies — [[GroupTopKStrategy]] and
+  * [[CarryScanStrategy]] — are installed on the session that builds the
+  * Dataset by [[GroupTopK.register]], which both operators' Dataset
+  * factories call.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -102,11 +102,16 @@ object GroupTopKStrategy extends SparkStrategy {
 
 object GroupTopK {
 
-  /** Register the planning strategy on a live session (idempotent). */
+  /** Register graft's planning strategies ([[GroupTopKStrategy]],
+    * [[CarryScanStrategy]]) on a live session (idempotent).
+    */
   def register(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(GroupTopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ GroupTopKStrategy
+    exp.synchronized {
+      val missing = Seq(GroupTopKStrategy, CarryScanStrategy)
+        .filterNot(exp.extraStrategies.contains)
+      if (missing.nonEmpty) exp.extraStrategies = exp.extraStrategies ++ missing
+    }
   }
 
   /** Top `k` rows per `groupCols` group, ordered by `orderCols`

@@ -165,10 +165,10 @@ object Round6Queries {
              FROM s2, tot""")),
 
     // GLOBAL rolling(5) over the full event stream (no group key) —
-    // ghost-row construction: range shuffle + replicate each partition's
-    // last w-1 rows into the next, then a partition-local trailing
-    // frame. Never a single-partition window; ghost volume is
-    // partitions×(w-1) rows regardless of data size. Sum via exact
+    // range shuffle, then one CarryScan whose carry is the last w-1 rows
+    // of all preceding partitions, so each partition computes its
+    // trailing frames locally. Never a single-partition window; carry
+    // volume is partitions×(w-1) rows regardless of data size. Sum via exact
     // DECIMAL so partial order can't move the 6th decimal.
     "q163_rolling_global" -> QueryDef(
       (s, d) => {

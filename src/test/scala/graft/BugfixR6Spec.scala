@@ -11,8 +11,9 @@ import graft.operators.{RangeJoin, RollingGlobal}
   *     unmatched rows).
   *  2. RangeJoin floorDiv routed through double division — off-by-one
   *     bins above 2^53 (nanosecond-scale coordinates).
-  *  3. RollingGlobal ghosts hopped pid+1 blindly — an empty range
-  *     partition silently NULLed the lookback of the partition after it.
+  *  3. RollingGlobal's lookback must cross empty and short range
+  *     partitions (it once hopped ghost rows pid+1 blindly, and refused
+  *     partitions smaller than the window).
   */
 class BugfixR6Spec extends SparkSpec {
   import spark.implicits._
@@ -70,22 +71,65 @@ class BugfixR6Spec extends SparkSpec {
     assert(outer.length == 1 && !outer.head.isNullAt(1))
   }
 
+  // rolling checks: w = 5 over 48 rows with some NULL values, exact
+  // against a sequential fold; `layout` checks the partitions the scan
+  // ran on (it keeps its child's partitioning)
+  private val rollW = 5
+  private val rollRows = (0 until 48).map(i => (((i * 11) % 48).toLong,
+    if (i % 9 == 4) None else Some(((i * 7) % 13) / 4.0)))
+
+  private def checkRolling(df: org.apache.spark.sql.DataFrame)(
+      layout: Array[Int] => Boolean): Unit = {
+    val w = rollW
+    val rolled = RollingGlobal.trailing(df, Seq("id"), "value", w, "r")
+    val sizes = rolled.rdd.glom().map(_.length).collect()
+    assert(layout(sizes), sizes.mkString(","))
+    val got = rolled.select(col("id"), col("r_sum").cast("double"),
+        col("r_min"), col("r_max")).collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None
+        else Some((r.getDouble(1), r.getDouble(2), r.getDouble(3))))).toMap
+    val kept = df.select("id").collect().map(_.getLong(0)).toSet
+    val ordered = rollRows.filter(r => kept(r._1)).sortBy(_._1)
+    ordered.indices.foreach { i =>
+      val win = ordered.slice(i - w + 1, i + 1).map(_._2)
+      val want = if (i < w - 1 || win.exists(_.isEmpty)) None
+        else Some((win.flatten.sum, win.flatten.min, win.flatten.max))
+      assert(got(ordered(i)._1) == want, s"row $i")
+    }
+  }
+
+  /** 64 shuffle partitions and AQE off (no coalescing, and a checkpoint
+    * reports the range partitioning of its plan) for `body`.
+    */
+  private def withManyRangePartitions(body: => Unit): Unit = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "64")
+    spark.conf.set(keys(1), "false")
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   test("rolling window ghosts route past an empty range partition") {
-    // simulate an empty interior partition (pid 1 absent) via the
-    // package-private tagged entry point: pids 0,2,3 hold the sorted
-    // rows; the dense remap must deliver pid-0 ghosts to pid 2
-    val rows = (0 until 12).map(i => (i.toLong, (i + 1).toDouble,
-      if (i < 4) 0 else if (i < 8) 2 else 3))
-    val df = rows.toDF("id", "value", "__pid")
-    val counts = Map(0 -> 4L, 2 -> 4L, 3 -> 4L)
-    val got = RollingGlobal.trailingTagged(df, counts, Seq("id"), "value", 3, "r")
-      .select(col("id"), col("r_sum").cast("double")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .toMap
-    (0 until 12).foreach { i =>
-      val want = if (i < 2) None
-        else Some((i - 1 to i + 1).map(_.toDouble).sum) // v=i+1, window i-2..i
-      assert(got(i.toLong) == want, s"row $i")
+    // the carry (the "ghost" rows of earlier partitions) must reach past
+    // empty range partitions: two ids per partition, a third of the
+    // partitions filtered out (the checkpoint keeps the range
+    // partitioning and keeps the filter above it)
+    withManyRangePartitions {
+      checkRolling(rollRows.toDF("id", "value")
+          .repartitionByRange(24, col("id")).localCheckpoint()
+          .filter(col("id") % 6 >= 2))(
+        s => s.count(_ == 0) == 8 && s.max < rollW - 1)
+    }
+  }
+
+  test("rolling window is exact with w above the rows per range partition") {
+    // the scan's own range exchange: at most one row per partition
+    withManyRangePartitions {
+      checkRolling(rollRows.toDF("id", "value"))(_.max < rollW - 1)
     }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cumulative, PidCarry, RangeJoin, RollingGlobal}
+import graft.operators.{Cumulative, RangeJoin, RollingGlobal}
 
 /** Regression tests for the round-7 advisory fixes:
   *  1. RangeJoin left_outer found unmatched points via a name-based
@@ -49,37 +49,20 @@ class BugfixR7Spec extends SparkSpec {
     assert(multiset(got) == multiset(naive))
   }
 
-  test("scan carries swap from plan literal to broadcast join above the threshold") {
+  test("10k-row global scan, row number and rolling window stay exact") {
     val df = spark.range(0, 10000).toDF("k")
       .withColumn("v", (col("k") % 97).cast("double"))
-    def planOf(d: org.apache.spark.sql.DataFrame) =
-      d.queryExecution.executedPlan.toString
-    // default threshold (1000 > 32 partitions): literal map, no join
-    val litScan = Cumulative.globalScan(df, Seq("k"), "v", "cs", Cumulative.SumOp)
-    assert(!planOf(litScan).contains("BroadcastHashJoin"))
-    val expected = litScan.orderBy("k").select("k", "cs").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    spark.conf.set(PidCarry.ThresholdConf, "2")
-    try {
-      // above the threshold: the carry map rides a broadcast join and
-      // the giant literal disappears from the plan
-      val bScan = Cumulative.globalScan(df, Seq("k"), "v", "cs", Cumulative.SumOp)
-      val p = planOf(bScan)
-      assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoop"), p)
-      assert(!p.contains("map_from_arrays") && !p.contains("keys: ["), p)
-      val got = bScan.orderBy("k").select("k", "cs").collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
-      assert(got.toSeq == expected.toSeq)
-      // row number: same contract
-      val rn = Cumulative.globalRowNumber(df, Seq("k"), "rn")
-      assert(planOf(rn).contains("BroadcastHashJoin"))
-      assert(rn.orderBy("k").select("rn").collect().map(_.getLong(0)).toSeq
-        == (1L to 10000L))
-      // rolling global: ghost routing still exact under the broadcast
-      // dense-pid remap (force the remap by an empty-partition input)
-      val rolled = RollingGlobal.trailing(df, Seq("k"), "v", 3, "r")
-      assert(rolled.filter(col("r_sum").isNull).count() == 2)
-      assert(rolled.count() == 10000)
-    } finally spark.conf.unset(PidCarry.ThresholdConf)
+    // small integers: every association of the sum is exact, so the
+    // two-phase scan must equal the sequential fold bit for bit
+    val scan = Cumulative.globalScan(df, Seq("k"), "v", "cs", Cumulative.SumOp)
+    val got = scan.orderBy("k").select("cs").collect().map(_.getDouble(0))
+    val want = (0L until 10000L).scanLeft(0.0)((a, k) => a + (k % 97)).tail
+    assert(got.toSeq == want)
+    val rn = Cumulative.globalRowNumber(df, Seq("k"), "rn")
+    assert(rn.orderBy("k").select("rn").collect().map(_.getLong(0)).toSeq
+      == (1L to 10000L))
+    val rolled = RollingGlobal.trailing(df, Seq("k"), "v", 3, "r")
+    assert(rolled.filter(col("r_sum").isNull).count() == 2)
+    assert(rolled.count() == 10000)
   }
 }

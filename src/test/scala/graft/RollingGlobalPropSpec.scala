@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 
 import graft.operators.RollingGlobal
 
-/** Property test: the ghost-row global rolling window agrees with a
+/** Property test: the carry-in global rolling window agrees with a
   * single-threaded sliding-window fold over randomly generated inputs —
   * sizes, window widths, value distributions (incl. nulls and repeated
   * order-key-adjacent values) all drawn from generators with fixed

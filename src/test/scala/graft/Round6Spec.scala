@@ -66,16 +66,6 @@ class Round6Spec extends SparkSpec {
     }
   }
 
-  test("rolling window rejects a window larger than the smallest partition") {
-    val ev = Tables.events(spark, sf).select("event_id", "ts", "value").limit(8)
-    // 8 rows over 4 range partitions → ~2 rows each; w=30 must refuse
-    // rather than silently emit wrong lookbacks
-    intercept[IllegalArgumentException] {
-      RollingGlobal.trailing(ev, Seq("ts", "event_id"), "value", 30, "roll")
-        .count()
-    }
-  }
-
   test("windowed streaming near-dup: time-filtered pairs + state eviction across batches") {
     import graft.streaming.DocStreams
     val docs = Tables.documents(spark, sf).cache()
