@@ -26,8 +26,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *    parent, weakly keyed: a fresh clone per loop costs ~50 ms of
   *    SessionState construction, and a strong registry would pin every
   *    parent session forever.
-  *  - **Edges.** The projection is checkpointed once; its row count for
-  *    [[layoutParts]] rides the same job as an `Observation`.
+  *  - **Edges.** The projection is checkpointed once, on the caller's
+  *    (adaptive) session: the edge derivation is an ordinary query whose
+  *    exchanges AQE coalesces, unlike the pinned supersteps. Its row count
+  *    for [[layoutParts]] rides the same job as an `Observation`, and the
+  *    checkpoint moves to the clone as a bare scan.
   *  - **Width.** The clone's `spark.sql.shuffle.partitions` is set from
   *    [[layoutParts]] for the whole loop, under the clone's lock, so two
   *    loops on one parent never race the width. With AQE off nothing
@@ -158,13 +161,10 @@ object Iterative {
   def loop(edges: DataFrame)(body: Graph => DataFrame): DataFrame = {
     val parent = edges.sparkSession
     val clone = aqeOffSession(parent)
+    val obs = Observation()
+    val e = edges.observe(obs, count(lit(1)).as("n")).localCheckpoint(eager = true)
+    val parts = layoutParts(parent, obs.get("n").asInstanceOf[Long])
     val out = clone.synchronized {
-      // the edge derivation itself runs at the caller's width
-      clone.conf.set(Width, parent.conf.get(Width))
-      val obs = Observation()
-      val e = inSession(clone, edges).observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(eager = true)
-      val parts = layoutParts(clone, obs.get("n").asInstanceOf[Long])
       clone.conf.set(Width, parts.toString)
       val g = new Graph(unpartitioned(clone, e), parts)
       try body(g) finally g.release()

@@ -75,15 +75,12 @@ object ScaleQueries {
         val ot = s"graft_orders_b$safe"
         val ct = s"graft_cust_b$safe"
         // A fresh session has an empty in-memory catalog but the
-        // warehouse dirs may survive from a previous run — clear them or
-        // saveAsTable fails with LOCATION_ALREADY_EXISTS.
+        // warehouse dirs may survive from a previous run — clear them (in
+        // the warehouse this session writes to) or saveAsTable fails with
+        // LOCATION_ALREADY_EXISTS.
         def rmrf(name: String): Unit = {
-          val p = java.nio.file.Paths.get(s"/root/repo/target/spark-warehouse/$name")
-          if (java.nio.file.Files.exists(p)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq
-              .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-          }
+          val p = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), name)
+          p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         }
         if (!s.catalog.tableExists(ot)) {
           rmrf(ot.toLowerCase); rmrf(ct.toLowerCase)

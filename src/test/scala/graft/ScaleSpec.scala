@@ -11,12 +11,8 @@ class ScaleSpec extends SparkSpec {
     val ct = "graft_test_cust_b"
     Seq(ot, ct).foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get(s"/root/repo/target/spark-warehouse/$t")
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-      }
+      val p = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), t)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
     Tables.orders(spark, d).write.mode("overwrite")
       .bucketBy(4, "o_custkey").sortBy("o_custkey").saveAsTable(ot)

@@ -11,14 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
