@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The one loop discipline for every iterative graph operator (PageRank
-  * family, HITS, LPA, Components) — a Pregel-style superstep driver
+  * family, HITS, LPA) — a Pregel-style superstep driver
   * (Malewicz et al., SIGMOD 2010; GraphX's `Pregel` is the Spark
   * precedent). An operator supplies only its edge projection, the frames
   * it derives from the edges, its initial state and its step; this object
@@ -39,9 +39,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *  - **Iterations.** [[Graph.fixed]] checkpoints every state lazily (the
   *    plan is cut to a checkpoint scan at once, so planning never
   *    re-expands the chain) and only the last one eagerly, so all
-  *    iterations run in one job. [[Graph.untilStable]] checkpoints
-  *    eagerly each round and reads convergence through `observe` on the
-  *    same job.
+  *    iterations run in one job.
   *  - **Releases.** Every frame the operator kept is unpersisted before
   *    the loop returns; checkpoint blocks die with their frames.
   */
@@ -66,9 +64,9 @@ object Iterative {
     * layout over `nRows` (edge) rows: ~1M rows/partition capped at 20k
     * partitions for the huge end, raised toward machine width only
     * while every partition keeps ≥32k rows. Never a bare machine
-    * constant: a 300-edge near-dup graph gets 1 partition, a 100 TB
-    * edge list gets the size term (r14; q166's Components loop paid
-    * 32+32 tasks/round for ~300 pairs at conf width).
+    * constant: a 300-edge graph gets 1 partition, a 100 TB edge list
+    * gets the size term (r14: a loop at conf width paid 32+32 tasks per
+    * round for ~300 edges).
     */
   def layoutParts(spark: SparkSession, nRows: Long): Int = {
     val sizeTerm = math.min(2L * nRows / 1000000L + 1L, 20000L)
@@ -131,32 +129,14 @@ object Iterative {
       }
     }
 
-    /** Apply `step` until no row of its output has `changed` set. Each
-      * round is one eager-checkpoint job; the change count is observed
-      * on that job, not read by a second scan.
-      */
-    def untilStable(init: DataFrame)(step: DataFrame => DataFrame): DataFrame = {
-      var state = init.localCheckpoint(eager = false)
-      var changed = 1L
-      while (changed > 0) {
-        val obs = Observation()
-        val next = step(state)
-          .observe(obs, coalesce(sum(col("changed").cast("long")), lit(0L)).as("n"))
-          .localCheckpoint(eager = true)
-        changed = obs.get("n").asInstanceOf[Long]
-        state = next.drop("changed")
-      }
-      state
-    }
-
     private[Iterative] def release(): Unit = kept.foreach(_.unpersist(blocking = false))
   }
 
   /** Run `body` over `edges` (already projected to the columns the loop
     * reads) on the caller's AQE-off clone, and root its result back on
     * the caller's session. The result must be materialized by the loop
-    * (a [[Graph.fixed]] / [[Graph.untilStable]] state or a projection of
-    * one): kept frames are released on return.
+    * (a [[Graph.fixed]] state or a projection of one): kept frames are
+    * released on return.
     */
   def loop(edges: DataFrame)(body: Graph => DataFrame): DataFrame = {
     val parent = edges.sparkSession

@@ -43,7 +43,8 @@ trait CarryKernel[S] extends Serializable {
   * and the sort (or elides them when the child already has them). Both
   * passes read the same child RDD — the second re-reads the exchange's
   * shuffle output — so nothing is cached, and the summary job runs when
-  * the plan executes, never while the Dataset is built. AQE's coalesced
+  * the plan executes, never while the Dataset is built. A one-partition
+  * child needs no summary job at all. AQE's coalesced
   * read keeps the range partitioning, so pieces stay in scan order.
   */
 // NOTE: appended columns are `producedAttributes`, so `references`
@@ -77,9 +78,12 @@ case class CarryScanExec(order: Seq[SortOrder], inputs: Seq[Expression],
   private def scan[S](k: CarryKernel[S]): RDD[InternalRow] = {
     val (in, childOut, out) = (inputs, child.output, output)
     val rows = child.execute()
-    val summaries = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) =>
-      it.map(UnsafeProjection.create(in, childOut)).foldLeft(k.zero)(k.step): Any)
-    val carries = summaries.toSeq.map(_.asInstanceOf[S]).scanLeft(k.zero)(k.combine)
+    // one piece: its carry-in is `zero`, and no summary job runs
+    val carries =
+      if (rows.getNumPartitions == 1) Seq(k.zero)
+      else rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) =>
+          it.map(UnsafeProjection.create(in, childOut)).foldLeft(k.zero)(k.step): Any)
+        .toSeq.map(_.asInstanceOf[S]).scanLeft(k.zero)(k.combine)
     rows.mapPartitionsWithIndex({ (i, it) =>
       val proj = UnsafeProjection.create(in, childOut)
       val toUnsafe = UnsafeProjection.create(out, out)

@@ -14,10 +14,10 @@ import graft.text.SimHash64
   * }}}
   *
   * (SURVEY §4.3: the extension surface is function registration only.
-  * graft's two planner strategies — [[GroupTopKStrategy]] and
-  * [[CarryScanStrategy]] — are installed on the session that builds the
-  * Dataset by [[GroupTopK.register]], which both operators' Dataset
-  * factories call.)
+  * graft's three planner strategies — [[GroupTopKStrategy]],
+  * [[CarryScanStrategy]] and [[ComponentsStrategy]] — are installed on
+  * the session that builds the Dataset by [[GroupTopK.register]], which
+  * every operator's Dataset factory calls.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

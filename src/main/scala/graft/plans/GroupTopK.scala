@@ -103,12 +103,13 @@ object GroupTopKStrategy extends SparkStrategy {
 object GroupTopK {
 
   /** Register graft's planning strategies ([[GroupTopKStrategy]],
-    * [[CarryScanStrategy]]) on a live session (idempotent).
+    * [[CarryScanStrategy]], [[ComponentsStrategy]]) on a live session
+    * (idempotent).
     */
   def register(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     exp.synchronized {
-      val missing = Seq(GroupTopKStrategy, CarryScanStrategy)
+      val missing = Seq(GroupTopKStrategy, CarryScanStrategy, ComponentsStrategy)
         .filterNot(exp.extraStrategies.contains)
       if (missing.nonEmpty) exp.extraStrategies = exp.extraStrategies ++ missing
     }

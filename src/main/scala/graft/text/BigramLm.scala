@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Shape for 100 TB:
   *   - model state is TWO constant-size bucket tables (64 unigram +
-  *     256 bigram smoothed probabilities), built with one
-  *     explode+groupBy pass each and collected like any tiny dimension;
+  *     256 bigram smoothed probabilities), counted in one map-side pass
+  *     over the corpus and summed into the driver like any tiny
+  *     dimension;
   *   - scoring is then a pure SCAN-stage fold per document: both maps
   *     ride the closure as literals and `aggregate(...)` runs inside
   *     whole-stage codegen — no join, no shuffle, no second pass over
@@ -41,6 +42,30 @@ object BigramLm {
   private def bucket(s: Column, n: Int): Column =
     conv(substring(md5(s), 1, 4), 16, 10).cast("int") % n
 
+  /** [[bucket]] on the JVM: the first two md5 bytes as a big-endian
+    * 16-bit int, mod n. The fit and [[BigramLmScore]] both bucket here.
+    */
+  private[text] def bucketOf(md: java.security.MessageDigest, s: String, n: Int): Int = {
+    md.reset()
+    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % n
+  }
+
+  /** The space-separated non-empty tokens of `s`, in order: the one
+    * tokenizer of the fit and of [[BigramLmScore]].
+    */
+  private[text] def words(s: String): java.util.ArrayList[String] = {
+    val toks = new java.util.ArrayList[String]()
+    var i = 0
+    while (i < s.length) {
+      var j = s.indexOf(' ', i)
+      if (j < 0) j = s.length
+      if (j > i) toks.add(s.substring(i, j))
+      i = j + 1
+    }
+    toks
+  }
+
   def uniBucket(w: Column): Column = bucket(w, UniBuckets)
   def biBucket(bg: Column): Column = bucket(bg, BiBuckets)
 
@@ -58,39 +83,31 @@ object BigramLm {
   /** Smoothed bucket-probability tables from a training corpus:
     * p(b) = (c_b + 1) / (N + B) with N the total token (resp. bigram)
     * count.  O(64)+O(256) driver state.
+    *
+    * One map-side pass: each partition counts its tokens and bigrams
+    * into one `long[64+256]` (unigram buckets, then bigram buckets), and
+    * the arrays are summed in the same job. Null text counts nothing.
     */
   def tables(corpus: DataFrame, textCol: String): (Map[Int, Double], Map[Int, Double]) = {
-    // NgramList (native one-pass) rather than the filter(split) /
-    // transform(element_at) HOF chains: one CodegenFallback HOF in the
-    // explode child used to drop the whole fit stage out of whole-stage
-    // codegen, turning the downstream md5/conv bucketing interpreted
-    // (measured r12: ~25s of task time at sf0.1 for two O(tokens)
-    // passes). Same token/bigram multisets by NgramSpec differential.
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    def ngrams(n: Int): Column =
-      ColumnBridge.column(NgramList(ColumnBridge.expression(col(textCol)), n))
-    // ONE corpus pass for both tables (r13, guide §1.2 step 1): the
-    // unigram and bigram fits were two separate explode+groupBy jobs,
-    // i.e. two tokenizing scans of the corpus per model build. A bigram
-    // ("prev cur") contains a space and a token never does, so one
-    // explode over the concatenated lists can route each element to its
-    // bucket space post-explode, fully inside codegen (the bucketing
-    // stays AFTER the explode — a lambda-side md5 would fall back to
-    // interpreted, the r12 lesson). Identical counts → identical tables.
-    val rows = corpus
-      .select(explode(concat(ngrams(1), ngrams(2))).as("g"))
-      .groupBy(col("g").contains(" ").as("bi"),
-        when(col("g").contains(" "), biBucket(col("g")))
-          .otherwise(uniBucket(col("g"))).as("b"))
-      .agg(count(lit(1)).as("c"))
-      .collect()
-    val uc = rows.filter(!_.getBoolean(0)).map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val bc = rows.filter(_.getBoolean(0)).map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val uTot = uc.values.sum.toDouble + UniBuckets
-    val bTot = bc.values.sum.toDouble + BiBuckets
-    val pu = (0 until UniBuckets).map(b => b -> (uc.getOrElse(b, 0L) + 1.0) / uTot).toMap
-    val pb = (0 until BiBuckets).map(b => b -> (bc.getOrElse(b, 0L) + 1.0) / bTot).toMap
-    (pu, pb)
+    val counts = corpus.select(col(textCol)).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val c = new Array[Long](UniBuckets + BiBuckets)
+        val md = java.security.MessageDigest.getInstance("MD5")
+        rows.filterNot(_.isNullAt(0)).foreach { r =>
+          val t = words(r.getUTF8String(0).toString)
+          (0 until t.size).foreach { w =>
+            c(bucketOf(md, t.get(w), UniBuckets)) += 1
+            if (w > 0) c(UniBuckets + bucketOf(md, t.get(w - 1) + " " + t.get(w), BiBuckets)) += 1
+          }
+        }
+        Iterator.single(c)
+      }
+      .fold(new Array[Long](UniBuckets + BiBuckets))((a, b) => a.zip(b).map { case (x, y) => x + y })
+    val (uc, bc) = counts.splitAt(UniBuckets)
+    val uTot = uc.sum.toDouble + UniBuckets
+    val bTot = bc.sum.toDouble + BiBuckets
+    ((0 until UniBuckets).map(b => b -> (uc(b) + 1.0) / uTot).toMap,
+      (0 until BiBuckets).map(b => b -> (bc(b) + 1.0) / bTot).toMap)
   }
 
   /** Fluency score column: mean over positions 2..n of the interpolated
@@ -161,25 +178,8 @@ case class BigramLmScore(
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
 
-  // first-4-hex-chars bucket == first two md5 bytes as a big-endian
-  // 16-bit int, mod n — same value as conv(substring(md5(x),1,4),16,10)
-  private def bucket(md: java.security.MessageDigest, s: String, n: Int): Int = {
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % n
-  }
-
   def compute(text: UTF8String): Double = {
-    val s = text.toString
-    val toks = new java.util.ArrayList[String]()
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) toks.add(s.substring(i, j))
-      i = j + 1
-    }
+    val toks = BigramLm.words(text.toString)
     val n = toks.size
     if (n < 2) return 0.0
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -190,8 +190,8 @@ case class BigramLmScore(
       val bg = toks.get(w - 1) + " " + cur
       // per-position rounding order matches the composed expression:
       // a = 0.7*pb; b = 0.3*pu; acc = acc + (a + b)
-      acc = acc + (BigramLm.WBi * pb(bucket(md, bg, BigramLm.BiBuckets)) +
-        BigramLm.WUni * pu(bucket(md, cur, BigramLm.UniBuckets)))
+      acc = acc + (BigramLm.WBi * pb(BigramLm.bucketOf(md, bg, BigramLm.BiBuckets)) +
+        BigramLm.WUni * pu(BigramLm.bucketOf(md, cur, BigramLm.UniBuckets)))
       w += 1
     }
     acc / (n - 1)

@@ -1,13 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -24,21 +20,6 @@ import graft.plans.CarryScanExec
   */
 class CarryScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
-
-  private def jobsWhile[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    ListenerBridge.waitUntilEmpty(sc)
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      ListenerBridge.waitUntilEmpty(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -69,6 +50,24 @@ class CarryScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(ranges.size == 1, s"$name\n$plan")
       assert(out.count() == 200, name)
     }
+  }
+
+  test("a one-partition child runs no summary job and scans the same rows") {
+    def scanned(s: SparkSession): DataFrame = {
+      val df = s.createDataFrame((0 until 200).map(i => (((i * 37) % 200).toLong, i / 8.0)))
+        .toDF("k", "v")
+      Cumulative.globalScanRowNumber(df, Seq("k"), "v", "c", "n")
+    }
+    val one = spark.newSession()
+    one.conf.set("spark.sql.adaptive.enabled", "false")
+    one.conf.set("spark.sql.shuffle.partitions", "1")
+    val out = scanned(one)
+    val scan = collect(out.queryExecution.executedPlan) { case s: CarryScanExec => s }
+    assert(scan.size == 1 && scan.head.child.outputPartitioning.numPartitions == 1)
+    // the range exchange's map stage and the scan's pass: one job, no summary job
+    val (rows, jobs) = jobsWhile(rowsOf(out))
+    assert(jobs == 1, s"$jobs jobs for a one-partition scan")
+    assert(rows.size == 200 && rows == rowsOf(scanned(spark)))
   }
 
   test("q46 repeated 12 times in one session: same rows each call, nothing left cached") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, Hits, Iterative, LabelProp, PageRank}
+import graft.operators.{Hits, Iterative, LabelProp, PageRank}
 
 /** The shared graph-loop discipline (`Iterative.loop`): what every loop
   * inherits from it — analyzed-plan re-rooting, the size-derived width,
@@ -19,10 +19,11 @@ class GraphLoopSpec extends SparkSpec {
     Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
       .createOrReplaceTempView("graph_loop_edges")
     try {
-      val out = Components.connected(
-        spark.sql("SELECT src, dst FROM graph_loop_edges"), "src", "dst")
-      val reps = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      val out = LabelProp.run(
+        spark.sql("SELECT src, dst FROM graph_loop_edges"), "src", "dst", iters = 1)
+      // one round: each vertex takes its neighbors' most frequent label, min on ties
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels == Map(1L -> 2L, 2L -> 1L, 3L -> 2L, 10L -> 11L, 11L -> 10L))
     } finally spark.catalog.dropTempView("graph_loop_edges")
   }
 
@@ -76,9 +77,7 @@ class GraphLoopSpec extends SparkSpec {
         PageRank.runPersonalized(edges, "s", "t", iters = 2, _ === "a")),
       "runWeighted" -> (() => PageRank.runWeighted(weighted, "s", "t", "w", iters = 2)),
       "Hits.run" -> (() => Hits.run(edges, "s", "t", iters = 2)),
-      "LabelProp.run" -> (() => LabelProp.run(edges, "s", "t", iters = 2)),
-      "Components.connected" -> (() =>
-        Components.connected(Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("s", "t"), "s", "t")))
+      "LabelProp.run" -> (() => LabelProp.run(edges, "s", "t", iters = 2)))
     for ((name, loop) <- loops) {
       val plans = loopPlans(loop().collect())
       val widths = plans.flatMap(exchangeWidths)
@@ -96,7 +95,7 @@ class GraphLoopSpec extends SparkSpec {
     def loopOnFreshParent(): java.lang.ref.WeakReference[SparkSession] = {
       val parent = spark.newSession()
       val pairs = parent.createDataFrame(Seq((1L, 2L), (2L, 3L))).toDF("src", "dst")
-      val out = Components.connected(pairs, "src", "dst")
+      val out = LabelProp.run(pairs, "src", "dst", iters = 1)
       assert(Iterative.inSession(spark, out).count() == 3)
       assert(Iterative.aqeOffSession(parent) ne Iterative.aqeOffSession(spark))
       new java.lang.ref.WeakReference(parent)

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +11,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  protected def jobsWhile[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    ListenerBridge.waitUntilEmpty(sc)
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      ListenerBridge.waitUntilEmpty(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
