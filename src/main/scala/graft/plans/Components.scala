@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.DataType
   *  - **Per piece.** A union-find over the partition's edges (a `LongMap`
   *    of parents, union by min id, path compression), so every root is
   *    its tree's minimum id. It emits `(v, root)` for every vertex seen.
-  *  - **One piece.** The forest is the answer. An adaptive plan
-  *    coalesces a near-duplicate pair stage (hundreds of edges) to one
-  *    partition, so this is the common case.
+  *  - **One piece.** The forest is the answer, with no job of its own.
+  *    q166 and q281 reach the node as one piece on perfbench `eager` and
+  *    at sf0.01 and sf0.1, and q146 does at sf0.01 (the event-log counts
+  *    are in `plans/components/README.md`).
   *  - **Several pieces.** The forests' `(v, root)` edges contract the
   *    graph without changing its components. Rounds of min-label
   *    propagation with pointer jumping merge them exactly: each vertex
@@ -30,7 +31,9 @@ import org.apache.spark.sql.types.DataType
   *    that counts the labels it changed; the merge stops at zero. Each
   *    round's labels are local checkpoints: the node unpersists the
   *    superseded ones and the edges, and the RDD it returns holds the
-  *    last round's, which Spark's ContextCleaner drops with it.
+  *    last round's, which Spark's ContextCleaner drops with it. q146 at
+  *    sf0.1 takes this path: its pair kernel's output reaches the node
+  *    as 4 pieces, merged in 12 rounds.
   *
   * Null endpoints: the other endpoint is a vertex of its own, and one
   * `(null, null)` row stands for the null vertex, which joins nothing.

@@ -154,8 +154,10 @@ object Round18Queries {
     // connected components) but the KEPT representative is the
     // highest-QUALITY member (tiebreak min id), not the min id — the
     // real curation policy: among near-duplicates, keep the best one.
-    // Selection = GroupTopK bounded heaps per cluster (no sort of the
-    // corpus), quality = the q51 scan-stage score.
+    // Selection = one row_number window per cluster over the clustered
+    // frame, which is read once: selecting the best member apart and
+    // joining it back would plan the pair derivation and the
+    // components twice. Quality = the q51 scan-stage score.
     "q281_survivorship" -> QueryDef(
       (s, d) => {
         import graft.functions.Num
@@ -163,17 +165,15 @@ object Round18Queries {
         val pairs = graft.text.MinHash.nearDuplicates(docs, "doc_id", "text",
           n = 3, threshold = 0.5)
         val comp = graft.operators.Components.connected(pairs, "id1", "id2")
-        val withComp = docs.select(col("doc_id"),
+        val byQuality = org.apache.spark.sql.expressions.Window.partitionBy("cluster")
+          .orderBy(col("quality").desc, col("doc_id"))
+        docs.select(col("doc_id"),
             Num.rnd(graft.text.TextStats.qualityScore(col("text")), 6).as("quality"))
           .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
           .select(col("doc_id"), col("quality"),
             coalesce(col("rep"), col("doc_id")).as("cluster"))
-        val best = graft.plans.GroupTopK.topKPerKey(withComp, Seq("cluster"),
-            Seq("quality" -> true, "doc_id" -> false), 1)
-          .select(col("cluster"), col("doc_id").as("keep_id"))
-        withComp.join(best, Seq("cluster"))
           .select(col("doc_id"), col("cluster"), col("quality"),
-            (col("doc_id") === col("keep_id")).as("kept"))
+            (row_number().over(byQuality) === 1).as("kept"))
       },
       Some(s"""WITH RECURSIVE ${TextQueries.pairsOracleCtes},
           edges AS (SELECT id1 AS a, id2 AS b FROM pairs

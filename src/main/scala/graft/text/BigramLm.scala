@@ -51,21 +51,6 @@ object BigramLm {
     (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % n
   }
 
-  /** The space-separated non-empty tokens of `s`, in order: the one
-    * tokenizer of the fit and of [[BigramLmScore]].
-    */
-  private[text] def words(s: String): java.util.ArrayList[String] = {
-    val toks = new java.util.ArrayList[String]()
-    var i = 0
-    while (i < s.length) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = s.length
-      if (j > i) toks.add(s.substring(i, j))
-      i = j + 1
-    }
-    toks
-  }
-
   def uniBucket(w: Column): Column = bucket(w, UniBuckets)
   def biBucket(bg: Column): Column = bucket(bg, BiBuckets)
 
@@ -94,7 +79,7 @@ object BigramLm {
         val c = new Array[Long](UniBuckets + BiBuckets)
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.filterNot(_.isNullAt(0)).foreach { r =>
-          val t = words(r.getUTF8String(0).toString)
+          val t = TextStats.words(r.getUTF8String(0).toString)
           (0 until t.size).foreach { w =>
             c(bucketOf(md, t.get(w), UniBuckets)) += 1
             if (w > 0) c(UniBuckets + bucketOf(md, t.get(w - 1) + " " + t.get(w), BiBuckets)) += 1
@@ -179,7 +164,7 @@ case class BigramLmScore(
     compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): Double = {
-    val toks = BigramLm.words(text.toString)
+    val toks = TextStats.words(text.toString)
     val n = toks.size
     if (n < 2) return 0.0
     val md = java.security.MessageDigest.getInstance("MD5")

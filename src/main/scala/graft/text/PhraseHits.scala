@@ -64,16 +64,7 @@ case class PhraseHits(child: Expression, phrases: Seq[String])
     compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val len = s.length
-    val toks = new java.util.ArrayList[String]()
-    var i = 0
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) toks.add(s.substring(i, j))
-      i = j + 1
-    }
+    val toks = TextStats.words(text.toString)
     val n = toks.size
     val counts = new Array[Int](phrases.size)
     var p = 0

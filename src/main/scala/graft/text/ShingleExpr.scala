@@ -34,18 +34,9 @@ case class ShingleSet(child: Expression, n: Int)
     compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
     // whitespace-run tokens: split on single space, drop empties
     // (Shingles.scaladoc: the corpus convention is single-space)
-    val toks = new java.util.ArrayList[String]()
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) toks.add(s.substring(i, j))
-      i = j + 1
-    }
+    val toks = TextStats.words(text.toString)
     val m = toks.size - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]()
@@ -535,16 +526,7 @@ case class NgramList(child: Expression, n: Int)
     compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val toks = new java.util.ArrayList[String]()
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) toks.add(s.substring(i, j))
-      i = j + 1
-    }
+    val toks = TextStats.words(text.toString)
     val m = toks.size - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](m)

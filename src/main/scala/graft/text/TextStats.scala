@@ -27,6 +27,22 @@ object TextStats {
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       TokensWs(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
 
+  /** [[tokensNonEmpty]] on the JVM: the space-separated non-empty tokens
+    * of `s`, in order. The one tokenizer of [[ShingleSet]], [[NgramList]],
+    * [[PhraseHits]], [[BigramLmScore]] and the bigram-LM fit.
+    */
+  private[text] def words(s: String): java.util.ArrayList[String] = {
+    val toks = new java.util.ArrayList[String]()
+    var i = 0
+    while (i < s.length) {
+      var j = s.indexOf(' ', i)
+      if (j < 0) j = s.length
+      if (j > i) toks.add(s.substring(i, j))
+      i = j + 1
+    }
+    toks
+  }
+
   def nTokens(c: Column): Column = size(tokens(c))
 
   def nChars(c: Column): Column = length(c)

@@ -44,12 +44,18 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     got.toMap
   }
 
-  test("building q166 fires no job; its plan holds one Components node") {
+  test("building q166 fires no job; its plan holds one Components node, fed one piece") {
     Tables.documents(spark, sf) // resolving the table may list files
     val (df, jobs) = jobsWhile(SparkEntry.queries("q166_minhash_dedup")(spark, sf))
     assert(jobs == 0, s"q166 fired $jobs jobs while built")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.sliding("Components".length).count(_ == "Components") == 1, plan)
+    // the edges reach the node as one partition, so it takes the
+    // one-piece path: no merge round runs
+    df.collect()
+    val node = collect(df.queryExecution.executedPlan) { case c: ComponentsExec => c }
+    assert(node.size == 1 && node.head.child.execute().getNumPartitions == 1,
+      df.queryExecution.executedPlan.toString)
   }
 
   test("exact on 8 partitions: a 200-edge chain and seeded random graphs") {

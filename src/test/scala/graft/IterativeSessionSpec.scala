@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, PageRank}
+import graft.operators.{LabelProp, PageRank}
 
 /** r14 (VERDICT r13 item 7): iterative graph loops run on a dedicated
   * AQE-off session CLONE instead of toggling the caller's session conf —
@@ -21,12 +21,13 @@ class IterativeSessionSpec extends SparkSpec {
   test("graph loop leaves the caller session's AQE conf untouched") {
     val k = "spark.sql.adaptive.enabled"
     spark.conf.set(k, "true")
-    val out = Components.connected(edgesDf, "src", "dst")
+    val out = LabelProp.run(edgesDf, "src", "dst", iters = 1)
     assert(spark.conf.get(k) == "true")
     // result is rooted back on the caller's session
     assert(out.sparkSession eq spark)
-    val reps = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // one round: each vertex takes its neighbors' most frequent label, min on ties
+    val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == Map(1L -> 2L, 2L -> 1L, 3L -> 2L, 10L -> 11L, 11L -> 10L))
   }
 
   test("concurrent AQE query on the shared session never sees AQE off during a loop") {
