@@ -15,10 +15,10 @@ import graft.plans.{ComponentsNode, GroupTopK}
   *
   * Algorithm: union-find, as one lazy plan node
   * ([[graft.plans.ComponentsExec]]): a union-find per edge partition,
-  * and, when there are several, an exact merge of the partitions'
-  * forests by min-label rounds with pointer jumping. Building the
-  * Dataset fires no job; the edge derivation and the merge run when the
-  * plan executes.
+  * and, when there are several, the same union-find once more over the
+  * partitions' forests shuffled into one partition. Building the Dataset
+  * fires no job; the edge derivation and the merge run when the plan
+  * executes.
   *
   * The reference has no graph surface at all; this is beyond-parity for
   * the curation pipeline (dedup keeps one representative per cluster).

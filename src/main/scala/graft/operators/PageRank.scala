@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Fixed-point integer PageRank over an undirected graph — the
   * iterative-propagation graph operator beside [[Components]]'s
-  * pointer-jumping connected components (domain/source authority
+  * union-find connected components (domain/source authority
   * weighting is a standard curation signal next to quality scores).
   *
   * Distributed shape (the 100 TB lens):

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, GenericInternalRow, UnsafeProjection}
@@ -19,24 +18,20 @@ import org.apache.spark.sql.types.DataType
   *    its tree's minimum id. It emits `(v, root)` for every vertex seen.
   *  - **One piece.** The forest is the answer, with no job of its own.
   *    q166 and q281 reach the node as one piece on perfbench `eager` and
-  *    at sf0.01 and sf0.1, and q146 does at sf0.01 (the event-log counts
-  *    are in `plans/components/README.md`).
-  *  - **Several pieces.** The forests' `(v, root)` edges contract the
-  *    graph without changing its components. Rounds of min-label
-  *    propagation with pointer jumping merge them exactly: each vertex
-  *    takes the min of its own label, its neighbors' labels and its
-  *    representative's label, so a diameter-d component settles in
-  *    O(log d) rounds. Every RDD of the merge is co-partitioned by one
-  *    `HashPartitioner` of the child's width, and each round is one job
-  *    that counts the labels it changed; the merge stops at zero. Each
-  *    round's labels are local checkpoints: the node unpersists the
-  *    superseded ones and the edges, and the RDD it returns holds the
-  *    last round's, which Spark's ContextCleaner drops with it. q146 at
-  *    sf0.1 takes this path: its pair kernel's output reaches the node
-  *    as 4 pieces, merged in 12 rounds.
+  *    at sf0.01 and sf0.1, and q146 and q114 do at sf0.01 (the event-log
+  *    counts are in `plans/components/README.md`).
+  *  - **Several pieces.** A piece's forest, read as `(v, root)` edges,
+  *    has the same components as the piece's edges. So the forests are
+  *    shuffled into one partition and the same union-find runs over them
+  *    once: one shuffle stage, whatever the components' diameter, and the
+  *    final task holds one map entry per vertex, as the one-piece path
+  *    does. q146 and q114 take this path at sf0.1, where their pairs
+  *    reach the node as 4 pieces.
   *
   * Null endpoints: the other endpoint is a vertex of its own, and one
   * `(null, null)` row stands for the null vertex, which joins nothing.
+  * Each piece's `(null, null)` row is an edge that adds no vertex to the
+  * merge, which emits it once.
   */
 // NOTE: `src`/`dst` are constructor expressions so they stay in
 // `references` (ColumnPruning keeps the child's columns); the output is
@@ -58,51 +53,12 @@ case class ComponentsExec(src: Expression, dst: Expression, produced: Seq[Attrib
   override def nodeName: String = "Components"
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val (ends, childOut) = (Seq(src, dst), child.output)
     val types = output.map(_.dataType).toArray
-    val rows = child.execute()
-    if (rows.getNumPartitions > 1) merge(rows, ends, childOut, types)
-    else rows.mapPartitions { it =>
-      val uf = new UnionFind
-      val sawNull = uf.addEdges(it, UnsafeProjection.create(ends, childOut))
-      ComponentsExec.toRows(types, uf.pairs, sawNull)
-    }
-  }
-
-  private def merge(rows: RDD[InternalRow], ends: Seq[Expression], childOut: Seq[Attribute],
-                    types: Array[DataType]): RDD[InternalRow] = {
-    val part = new HashPartitioner(rows.getNumPartitions)
-    val nulls = sparkContext.longAccumulator
-    // both orientations of every forest edge, each vertex's (v, v) once
-    val edges = rows.mapPartitions { it =>
-      val uf = new UnionFind
-      if (uf.addEdges(it, UnsafeProjection.create(ends, childOut))) nulls.add(1)
-      uf.pairs.flatMap { case (v, r) => if (v == r) Iterator((v, r)) else Iterator((v, r), (r, v)) }
-    }.partitionBy(part).persist()
-    try {
-      var labels = edges.reduceByKey(part, math.min(_: Long, _: Long))
-      var held: RDD[_] = null
-      var changed = 1L
-      while (changed > 0) {
-        // neighbor edges plus pointer edges rep → id: one join delivers
-        // both the neighbors' labels and the representative's label
-        val pointers = labels.map(_.swap).partitionBy(part)
-        val best = edges.union(pointers).join(labels, part).values
-          .reduceByKey(part, math.min(_: Long, _: Long))
-        val next = labels.leftOuterJoin(best, part).mapValues { case (rep, m) =>
-          (math.min(rep, m.getOrElse(rep)), rep)
-        }
-        next.localCheckpoint()
-        changed = next.filter { case (_, (rep, was)) => rep != was }.count()
-        if (held != null) held.unpersist(blocking = false)
-        held = next
-        labels = next.mapValues(_._1)
-      }
-      val sawNull = nulls.value > 0
-      labels.mapPartitionsWithIndex { (i, it) =>
-        ComponentsExec.toRows(types, it, sawNull && i == 0)
-      }
-    } finally edges.unpersist(blocking = false)
+    val pieces = ComponentsExec.forests(child.execute(), Seq(src, dst), child.output, types)
+    // several pieces: one union-find over all their forests; the rows
+    // are copied because `toRows` reuses its buffer
+    if (pieces.getNumPartitions == 1) pieces
+    else ComponentsExec.forests(pieces.map(_.copy()).repartition(1), output, output, types)
   }
 
   override protected def withNewChildInternal(c: SparkPlan): ComponentsExec =
@@ -110,6 +66,18 @@ case class ComponentsExec(src: Expression, dst: Expression, produced: Seq[Attrib
 }
 
 object ComponentsExec {
+  /** Each partition's union-find forest over the `(src, dst)` edges that
+    * `ends` projects from `in`, as `(v, root)` rows plus one
+    * `(null, null)` row when some endpoint was null.
+    */
+  private def forests(rows: RDD[InternalRow], ends: Seq[Expression], in: Seq[Attribute],
+                      types: Array[DataType]): RDD[InternalRow] =
+    rows.mapPartitions { it =>
+      val uf = new UnionFind
+      val sawNull = uf.addEdges(it, UnsafeProjection.create(ends, in))
+      toRows(types, uf.pairs, sawNull)
+    }
+
   private def toRows(types: Array[DataType], pairs: Iterator[(Long, Long)],
                      nullRow: Boolean): Iterator[InternalRow] = {
     val toUnsafe = UnsafeProjection.create(types)

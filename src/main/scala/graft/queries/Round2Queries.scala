@@ -412,9 +412,10 @@ object Round2Queries {
              FROM events WHERE event_type = 'purchase' GROUP BY 1""")),
 
     // near-dup CLUSTERING: connected components over the exact near-dup
-    // pairs — min-label propagation (log-diameter rounds, one keyed
-    // shuffle each); each doc maps to its cluster representative
-    // min(doc_id). Oracle = recursive CTE over the same pair SQL.
+    // pairs — a union-find per edge partition, the partitions' forests
+    // merged by one more union-find in one task; each doc maps to its
+    // cluster representative min(doc_id). Oracle = recursive CTE over
+    // the same pair SQL.
     "q114_dedup_clusters" -> QueryDef(
       (s, d) => graft.operators.Components
         .connected(TextQueries.exactPairs(s, d), "id1", "id2")

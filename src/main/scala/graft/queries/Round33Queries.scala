@@ -102,8 +102,8 @@ object Round33Queries {
     // Duplicate-cluster size histogram: the q114 connected-components
     // dedup clusters rolled up into a size distribution — the
     // "how duplicated is this corpus" report that decides dedup
-    // strategy at scale.  Components via pointer-jumping (no driver
-    // loop); histogram is two grouped counts.
+    // strategy at scale.  Components via union-find (one plan
+    // node, no driver loop); histogram is two grouped counts.
     "q349_dup_cluster_histogram" -> QueryDef(
       (s, d) => {
         val comp = graft.operators.Components

@@ -5,7 +5,7 @@ import org.scalacheck.rng.Seed
 
 import graft.operators.Components
 
-/** Property test: distributed min-label components vs a driver-side
+/** Property test: the `Components` plan node vs a driver-side
   * union-find over random graphs — chains, stars, cliques, and sparse
   * random edges, fixed seeds (deterministic).
   */
@@ -56,7 +56,7 @@ class ComponentsPropSpec extends SparkSpec {
   }
 
   test("adversarial shapes: long chain and two touching cliques") {
-    // a 60-node chain exercises pointer jumping's O(log d) collapse
+    // a 60-node chain: one component whose diameter is the whole chain
     val chain = (0L until 59L).map(i => (i, i + 1))
     val gotChain = Components.connected(chain.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

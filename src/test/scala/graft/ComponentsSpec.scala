@@ -30,8 +30,7 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** Components of `edges` spread round-robin over 8 partitions, checked
-    * to reach the node as 8 pieces. The merge leaves at most the returned
-    * round's labels persisted.
+    * to reach the node as 8 pieces. The merge persists no RDD.
     */
   private def onEightPieces(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
@@ -39,7 +38,7 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val got = out.collect().map(r => r.getLong(0) -> r.getLong(1))
     val node = collect(out.queryExecution.executedPlan) { case c: ComponentsExec => c }
     assert(node.size == 1 && node.head.child.outputPartitioning.numPartitions == 8)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).size <= 1)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty)
     assert(got.length == got.toMap.size, "a vertex was emitted twice")
     got.toMap
   }
@@ -71,6 +70,18 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val edges = Seq.fill(10 + rnd.nextInt(400))((ids(rnd.nextInt(n)), ids(rnd.nextInt(n))))
       assert(onEightPieces(edges) == reference(edges), s"seed $seed")
     }
+  }
+
+  test("merging 8 pieces runs as many jobs for a 4000-edge chain as for a 200-edge one") {
+    def jobs(n: Long): Int = {
+      val chain = new Random(n).shuffle((0L until n).map(i => (i + 1, i)))
+      val out = Components.connected(chain.toDF("a", "b").repartition(8), "a", "b")
+      val (got, fired) = jobsWhile(out.collect())
+      assert(got.length == n + 1 && got.forall(_.getLong(1) == 0L))
+      fired
+    }
+    val (short, long) = (jobs(200), jobs(4000))
+    assert(short == long, s"a 200-edge chain ran $short jobs, a 4000-edge one $long")
   }
 
   test("null endpoints and self-loops keep today's rows, on one piece and on eight") {

@@ -32,7 +32,7 @@ class OperatorsSpec extends SparkSpec {
     assert(math.abs(approx - exact) / exact < 0.01, s"$approx vs $exact")
   }
 
-  test("connected components converges on a long chain (pointer jumping)") {
+  test("connected components converges on a long chain") {
     import spark.implicits._
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("id1", "id2")
     val got = graft.operators.Components.connected(chain, "id1", "id2")
