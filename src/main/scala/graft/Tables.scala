@@ -56,6 +56,12 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def part(s: SparkSession, d: String): DataFrame = apply(s, d, "part")
+  /** The events table, `ts` normalized by [[eventsTs]]. */
+  def events(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    eventsTs(apply(s, d, "events"))
+  }
+
   /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) (older
     * corpus drops) or TIMESTAMP(MICROS) (current). Branch on the dtype
     * the scan actually produces rather than assuming a unit:
@@ -66,13 +72,12 @@ object Tables {
     *  - TIMESTAMP / TIMESTAMP_NTZ (µs) → cast to the session type
     *    (session TZ is pinned to UTC, so the cast is value-stable).
     * Anything else fails loudly — a silently mis-scaled timestamp must
-    * never reach a query.
+    * never reach a query. Applied to the batch scan and to the events
+    * stream source alike (`EventStreams`).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def eventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

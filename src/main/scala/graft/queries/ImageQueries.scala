@@ -108,13 +108,12 @@ object ImageQueries {
     "q183_image_ingest" -> QueryDef(
       (s, d) => {
         import s.implicits._
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
         // NOTE: the staging dir is DRIVER-LOCAL and the foreachPartition
         // writers assume executors share the driver filesystem — true
         // only in local mode (fine here: the stage exists to exercise
         // the binaryFile reader). A real cluster stages to a shared
         // store (HDFS/S3) instead; the read side is already generic.
-        val dir = s"/root/repo/target/tmp/png_$safe"
+        val dir = graft.tools.Staging.dir("png", d)
         val p = java.nio.file.Paths.get(dir)
         if (java.nio.file.Files.exists(p)) {
           val ls = java.nio.file.Files.list(p) // close: leaks a dir handle otherwise

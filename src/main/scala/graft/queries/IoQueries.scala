@@ -27,8 +27,7 @@ object IoQueries {
     // timestamp format); aggregate must match the original table.
     "q62_csv_roundtrip" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/csv_rt_$safe"
+        val path = graft.tools.Staging.dir("csv_rt", d)
         val src = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("o_orderdate"))
@@ -56,8 +55,7 @@ object IoQueries {
     // the hash match.
     "q143_orc_roundtrip" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/orc_rt_$safe"
+        val path = graft.tools.Staging.dir("orc_rt", d)
         Tables.lineitem(s, d)
           .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
           .write.mode("overwrite").orc(path)
@@ -76,8 +74,7 @@ object IoQueries {
     // no sampling inference), same oracle-on-the-original pattern.
     "q144_json_roundtrip" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/json_rt_$safe"
+        val path = graft.tools.Staging.dir("json_rt", d)
         Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .write.mode("overwrite").json(path)
@@ -99,8 +96,7 @@ object IoQueries {
     // §2.1 to_parquet → read_parquet round-trip.
     "q63_parquet_roundtrip" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/pq_rt_$safe"
+        val path = graft.tools.Staging.dir("pq_rt", d)
         Tables.lineitem(s, d)
           .filter(col("l_returnflag") === "N")
           .write.mode("overwrite").parquet(path)
@@ -133,8 +129,7 @@ object IoQueries {
     // in the plan, no data filter at all).
     "q92_partitioned_write" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/pq_part_$safe"
+        val path = graft.tools.Staging.dir("pq_part", d)
         Tables.lineitem(s, d)
           .write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
         s.read.parquet(path)

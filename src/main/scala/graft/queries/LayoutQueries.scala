@@ -20,8 +20,7 @@ object LayoutQueries {
 
     "q212_zorder_layout" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/zorder_$safe"
+        val path = graft.tools.Staging.dir("zorder", d)
         ZOrder.clusterWrite2(Tables.lineitem(s, d), "l_partkey", "l_orderkey",
           path, numFiles = 8, blockSize = Some(64 * 1024))
         s.read.parquet(path)

@@ -245,8 +245,7 @@ object Round12Queries {
     "q243_ivfpq_index" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/pq_index_$safe"
+        val path = graft.tools.Staging.dir("pq_index", d)
         PQ.writeCodeIndex(e, coarse, pq, path)
         PQ.searchCodeIndex(s, path, e.filter(col("vec_id") < 16), coarse, pq,
           k = 5, nprobe = 4)

@@ -23,8 +23,7 @@ object Round14Queries {
     // .bz2 CSV still parallelizes across executors.)
     "q250_csv_bz2" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/csv_bz2_$safe"
+        val path = graft.tools.Staging.dir("csv_bz2", d)
         val src = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         CsvPandas.write(src, path, header = true, compression = Some("bzip2"))
@@ -53,8 +52,7 @@ object Round14Queries {
     // fidelity is under test.
     "q251_csv_quotes" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/csv_quotes_$safe"
+        val path = graft.tools.Staging.dir("csv_quotes", d)
         val gnarly = concat(col("o_orderpriority"), lit("\"x,"),
           lit("\n"), col("o_orderstatus"))
         val src = Tables.orders(s, d)

@@ -348,8 +348,7 @@ object Round2Queries {
     // against the table (md5 of content vs md5 of the encoded text).
     "q128_binary_ingest" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val dir = s"/root/repo/target/tmp/binfiles_$safe"
+        val dir = graft.tools.Staging.dir("binfiles", d)
         val docs = Tables.documents(s, d)
         graft.multimodal.Multimodal.stageBinaryDir(docs, "doc_id", "text", dir)
         val files = graft.multimodal.Multimodal.readBinaryDir(s, dir)
@@ -538,8 +537,7 @@ object Round2Queries {
     // text sink; the oracle recomputes from the original table.
     "q106_csv_narep" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/csv_narep_$safe"
+        val path = graft.tools.Staging.dir("csv_narep", d)
         val src = Tables.customer(s, d).select(col("c_custkey"),
           when(col("c_acctbal") < 0, lit(null)).otherwise(col("c_custkey") % 100)
             .as("bucket"))

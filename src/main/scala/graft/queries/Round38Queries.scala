@@ -152,7 +152,7 @@ object Round38Queries {
     // the same split semantics from the source table.
     "q362_parquet_schema_merge" -> QueryDef(
       (s, d) => {
-        val out = s"/root/repo/target/tmp/schema_merge_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
+        val out = graft.tools.Staging.dir("schema_merge", d)
         val o = Tables.orders(s, d)
         o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
           .select(col("o_orderkey"), col("o_totalprice"))

@@ -18,7 +18,7 @@ object Round39Queries {
     // 100 TB).  One aggregate per codec over the re-read data.
     "q363_parquet_codecs" -> QueryDef(
       (s, d) => {
-        val out = s"/root/repo/target/tmp/codecs_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
+        val out = graft.tools.Staging.dir("codecs", d)
         val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
         val codecs = Seq("snappy", "zstd", "gzip")
         codecs.foreach { c =>
@@ -44,7 +44,7 @@ object Round39Queries {
     // source text after restoring the spaces.
     "q364_csv_multiline" -> QueryDef(
       (s, d) => {
-        val out = s"/root/repo/target/tmp/csv_ml_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
+        val out = graft.tools.Staging.dir("csv_ml", d)
         val src = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(97)) === 0)
           .select(col("doc_id"), translate(col("text"), " ", "\n").as("t"))

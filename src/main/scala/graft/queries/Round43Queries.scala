@@ -98,8 +98,7 @@ object Round43Queries {
     // test.
     "q372_uint_roundtrip" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/uint_rt_$safe"
+        val path = graft.tools.Staging.dir("uint_rt", d)
         Tables.uintFixture(s).write.mode("overwrite").parquet(path)
         s.read.parquet(path).agg(
           count(lit(1)).as("n"),

@@ -261,8 +261,7 @@ object Round44Queries {
     "q389_heavy_hitters_prefit" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/mg_sketch_$safe"
+        val path = graft.tools.Staging.dir("mg_sketch", d)
         // r12: fused text paths — fit and verify each tokenize once,
         // with no explode stage (MgTextExpr scaladoc).
         graft.functions.MisraGries.fitSketchText(docs, "text", 512)
@@ -365,8 +364,7 @@ object Round44Queries {
     // MultiIndex.
     "q392_csv_index_col" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/csv_idx_$safe"
+        val path = graft.tools.Staging.dir("csv_idx", d)
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
             col("l_quantity").cast("double"), col("l_extendedprice").cast("double"))
           .write.mode("overwrite").option("header", "false").csv(path)

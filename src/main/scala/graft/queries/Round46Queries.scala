@@ -293,7 +293,7 @@ object Round46Queries {
     // (zlib/snappy/zstd) — same contract as q363's parquet codecs.
     "q403_orc_roundtrip" -> QueryDef(
       (s, d) => {
-        val out = s"/root/repo/target/tmp/orc_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
+        val out = graft.tools.Staging.dir("orc", d)
         val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
         val codecs = Seq("zlib", "snappy", "zstd")
         codecs.foreach { c =>

@@ -31,8 +31,7 @@ object Round51Queries {
     "q419_chunk_index_probe" -> QueryDef(
       (s, d) => {
         val (corpus, batch) = splitDocs(s, d)
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/chunk_index_$safe"
+        val path = graft.tools.Staging.dir("chunk_index_probe", d)
         ChunkIndex.build(corpus, "doc_id", "text", Round49Queries.cdcMod)
           .write.mode("overwrite").parquet(path)
         ChunkIndex.probe(s.read.parquet(path), batch, "doc_id", "text",
@@ -57,8 +56,7 @@ object Round51Queries {
     "q420_chunk_index_merge" -> QueryDef(
       (s, d) => {
         val (corpus, batch) = splitDocs(s, d)
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/chunk_index_$safe"
+        val path = graft.tools.Staging.dir("chunk_index_merge", d)
         ChunkIndex.build(corpus, "doc_id", "text", Round49Queries.cdcMod)
           .write.mode("overwrite").parquet(path)
         ChunkIndex.merge(s.read.parquet(path), batch, "doc_id", "text",

@@ -25,8 +25,7 @@ object Round57Queries {
         val docs = Tables.documents(s, d)
         val deleted = docs.filter(col("doc_id") % 7 === 0)
         val survivors = docs.filter(col("doc_id") % 7 =!= 0)
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/gram_index_full_$safe"
+        val path = graft.tools.Staging.dir("gram_index_full", d)
         GramIndex.build(docs, "doc_id", "text", L)
           .write.mode("overwrite").parquet(path)
         GramIndex.retentionRepair(s.read.parquet(path), deleted, survivors,

@@ -71,8 +71,7 @@ object Round7Queries {
     // compressed round-trip itself is what is under test.
     "q192_csv_gzip" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/csv_gz_$safe"
+        val path = graft.tools.Staging.dir("csv_gz", d)
         val src = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         CsvPandas.write(src, path, header = true, compression = Some("gzip"))
@@ -101,8 +100,7 @@ object Round7Queries {
     // double, long, nulls in o_comment-free columns) is what's tested.
     "q193_arrow_roundtrip" -> QueryDef(
       (s, d) => {
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"/root/repo/target/tmp/arrow_rt_$safe"
+        val path = graft.tools.Staging.dir("arrow_rt", d)
         val src = Tables.orders(s, d).select(
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"))
@@ -135,8 +133,7 @@ object Round7Queries {
         val docs = Tables.documents(s, d)
         val batch = docs.filter(col("doc_id") % 5 === 0)
         val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-        val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val idxPath = s"/root/repo/target/tmp/lsh_index_$safe"
+        val idxPath = graft.tools.Staging.dir("lsh_index", d)
         graft.text.MinHash.bucketIndex(corpus, "doc_id", "text")
           .write.mode("overwrite").partitionBy("band").parquet(idxPath)
         val index = s.read.parquet(idxPath)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,20 +25,10 @@ object DocStreams {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Stage documents.parquet into a watchable dir (repo-local tmp). */
-  private def stageDir(sfDir: String): String = {
-    val dir = Paths.get(graft.tools.Staging.dir("stream_docs", sfDir))
-    Files.createDirectories(dir)
-    val src = Paths.get(s"$sfDir/documents.parquet")
-    val dst = dir.resolve("documents.parquet")
-    val stale = !Files.exists(dst) ||
-      Files.size(dst) != Files.size(src) ||
-      Files.getLastModifiedTime(dst) != Files.getLastModifiedTime(src)
-    if (stale)
-      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.COPY_ATTRIBUTES)
-    dir.toString
-  }
+  /** The documents corpus replayed as a file-source stream. */
+  private def docStream(spark: SparkSession, sfDir: String): DataFrame =
+    spark.readStream.schema(docSchema)
+      .parquet(graft.tools.Staging.streamSource(sfDir, "documents"))
 
   /** Streaming curation: quality gate → stateful exact dedup.
     * Output (fp, keeper = min doc_id, n) — the streaming twin of the
@@ -49,8 +37,8 @@ object DocStreams {
     */
   def curate(spark: SparkSession, sfDir: String,
              minQuality: Double = 0.5): DataFrame = {
-    val docs = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
-    run(spark, curateTransform(docs, minQuality), "graft_stream_curate")
+    val docs = docStream(spark, sfDir)
+    run(spark, curateTransform(docs, minQuality), "graft_stream_curate", "complete")
   }
 
   /** FILE-SINK twin of [[curate]] — the end-to-end production shape:
@@ -69,7 +57,7 @@ object DocStreams {
     // a createTempDirectory in the system /tmp leaked one full result
     // copy per construction (bench eager passes rebuild).
     val out = graft.tools.Staging.dir("curate_files", sfDir)
-    val docs = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val docs = docStream(spark, sfDir)
     val curated = curateTransform(docs, minQuality)
     @volatile var wrote = false
     val q = curated
@@ -96,13 +84,13 @@ object DocStreams {
     * (md5, doc_id-numeric) ranking.
     */
   def reservoirStream(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    val docs = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val docs = docStream(spark, sfDir)
     val keyed = docs.select(col("source"),
       concat(md5(concat(lit("rs:"), col("doc_id"))), lit(":"),
         lpad(col("doc_id").cast("string"), 12, "0")).as("key"))
     val agg = keyed.groupBy("source")
       .agg(graft.functions.TopKMinAgg.topkMin(col("key"), k).as("keys"))
-    val out = run(spark, agg, "graft_stream_reservoir")
+    val out = run(spark, agg, "graft_stream_reservoir", "complete")
     out.select(col("source"), explode(col("keys")).as("key"))
       .select(col("source"),
         expr("cast(substring(key, 34, 12) as long)").as("doc_id"))
@@ -143,15 +131,11 @@ object DocStreams {
   def nearDupPairs(spark: SparkSession, sfDir: String,
                    n: Int = 3, threshold: Double = 0.5,
                    k: Int = 64, r: Int = 4): DataFrame = {
-    val docs = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val docs = docStream(spark, sfDir)
     val staticShingles = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), graft.text.Shingles.shingles(col("text"), n).as("sh"))
-    val name = "graft_stream_neardup"
-    val q = nearDupTransform(docs, staticShingles, n, threshold, k, r)
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).distinct()
+    run(spark, nearDupTransform(docs, staticShingles, n, threshold, k, r),
+      "graft_stream_neardup", "append").distinct()
   }
 
   /** The near-dup transform itself — identical against any streaming
@@ -296,17 +280,13 @@ object DocStreams {
                            n: Int = 3, threshold: Double = 0.5,
                            k: Int = 64, r: Int = 4,
                            horizonMinutes: Long = 100): DataFrame = {
-    val docs = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val docs = docStream(spark, sfDir)
       .withColumn("ts", timestamp_seconds(lit(86400L) + col("doc_id") * 60))
     val staticShingles = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), graft.text.Shingles.shingles(col("text"), n).as("sh"))
-    val name = "graft_stream_neardup_win"
-    val q = nearDupTransformWindowed(docs, staticShingles, n, threshold, k, r,
-        horizonMs = horizonMinutes * 60000L)
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).distinct()
+    run(spark, nearDupTransformWindowed(docs, staticShingles, n, threshold, k, r,
+        horizonMs = horizonMinutes * 60000L),
+      "graft_stream_neardup_win", "append").distinct()
   }
 
   /** STREAMING chunk-index probe — the live-ingest twin of q419: new
@@ -326,7 +306,7 @@ object DocStreams {
       .build(corpus, "doc_id", "text", modulus)
       .select(col("chunk_md5"), lit(true).as("__hit")).cache()
     try {
-      val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+      val stream = docStream(spark, sfDir)
         .filter(col("doc_id") % 10 === 0)
       val report = graft.text.ChunkIndex
         .chunks(stream, "doc_id", "text", modulus)
@@ -336,7 +316,7 @@ object DocStreams {
           sum(when(col("__hit"), 1L).otherwise(0L)).as("n_dup_idx"),
           sum(when(col("__hit"), col("n_toks").cast("long")).otherwise(0L))
             .as("dup_tokens"))
-      run(spark, report, "graft_stream_chunk_probe")
+      run(spark, report, "graft_stream_chunk_probe", "complete")
     } finally index.unpersist(blocking = false)
   }
 
@@ -356,10 +336,10 @@ object DocStreams {
                        maxBucket: Int = 1000): DataFrame = {
     val docs = graft.Tables.documents(spark, sfDir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
       .filter(col("doc_id") % 5 === 0)
     run(spark, incrementalDedupTransform(stream, corpus, maxBucket = maxBucket),
-      "graft_stream_incr_dedup")
+      "graft_stream_incr_dedup", "complete")
   }
 
   /** The transform itself — works against any streaming (or batch)
@@ -393,7 +373,6 @@ object DocStreams {
       .agg(max(col("jaccard")).as("jaccard"))
   }
 
-  /** Drain a streaming frame through a complete-mode memory sink. */
   /** Streaming bloom-gated decontamination (q189's gate, incremental):
     * the eval-set bloom is built ONCE batch-side and rides the
     * microbatch plan as a literal; arriving documents explode to
@@ -413,14 +392,14 @@ object DocStreams {
       .select(explode(col("sh")).as("g")).distinct().cache()
     val bloom = BloomGate.build(evalGrams, col("g"),
       expectedItems = math.max(evalGrams.count(), 1L))
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
     val hits = stream.filter(col("doc_id") % 37 =!= 0)
       .select(col("source"),
         explode(Shingles.shingles(col("text"), 3)).as("g"))
       .filter(BloomGate.mightContain(bloom, col("g")))
       .join(evalGrams, "g") // stream-static exact verify
       .groupBy("source").agg(count(lit(1)).as("n_hits"))
-    run(spark, hits, "graft_stream_decontam")
+    run(spark, hits, "graft_stream_decontam", "complete")
   }
 
   /** Streaming chunk-level dedup election (the stateful half of
@@ -436,10 +415,10 @@ object DocStreams {
   def chunkDedupStream(spark: SparkSession, sfDir: String,
                        k: Int = 10): DataFrame = {
     import graft.text.ChunkDedup
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
     val elected = run(spark,
       ChunkDedup.elect(ChunkDedup.chunks(stream, "doc_id", "text", k), "doc_id"),
-      "graft_stream_chunk_elect")
+      "graft_stream_chunk_elect", "complete")
     val docs = graft.Tables.documents(spark, sfDir)
     ChunkDedup.assemble(docs, ChunkDedup.chunks(docs, "doc_id", "text", k),
       elected, "doc_id")
@@ -457,7 +436,7 @@ object DocStreams {
     */
   def gramIndexProbeStream(spark: SparkSession, sfDir: String,
                            L: Int = 8): DataFrame =
-    gramProbe(spark, sfDir, L)(run(spark, _, "graft_stream_gram_probe"))
+    gramProbe(spark, sfDir, L)(run(spark, _, "graft_stream_gram_probe", "complete"))
 
   /** FILE-SINK twin of [[gramIndexProbeStream]] (the q397 idiom applied
     * to the index-probe family): the identical streaming query, but
@@ -500,13 +479,13 @@ object DocStreams {
     val frozen = graft.text.NaiveBayes.freeze(
       graft.text.NaiveBayes.fitModel(
         docs.filter(col("doc_id") % 10 =!= 0), "text", "lang"))
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
       .filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         (id, graft.text.NaiveBayes.classify(frozen, text)) }
       .toDF("doc_id", "pred_lang")
-    val preds = runAppend(spark, stream, "graft_stream_nb_classify")
+    val preds = run(spark, stream, "graft_stream_nb_classify", "append")
     preds.join(docs.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("lang").as("true_lang")), "doc_id")
       .groupBy("true_lang", "pred_lang")
@@ -521,10 +500,10 @@ object DocStreams {
     */
   def rejectAuditStream(spark: SparkSession, sfDir: String,
                         reason: org.apache.spark.sql.Column): DataFrame = {
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
       .select(col("source"), reason.as("reason"))
       .groupBy("source", "reason").agg(count(lit(1)).as("n_docs"))
-    run(spark, stream, "graft_stream_reject_audit")
+    run(spark, stream, "graft_stream_reject_audit", "complete")
   }
 
   /** STREAMING PSI drift monitor — the live half of q447: the reference
@@ -538,11 +517,11 @@ object DocStreams {
     import graft.operators.Psi
     val docs = graft.Tables.documents(spark, sfDir)
     val ref = Psi.hist(docs.filter(col("doc_id") % 10 =!= 0), nBuckets, "cb")
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
       .filter(col("doc_id") % 10 === 0)
       .select(col("source"), Psi.bucketCol(nBuckets).as("bucket"))
       .groupBy("source", "bucket").agg(count(lit(1)).as("cn"))
-    val hn = run(spark, stream, "graft_stream_psi")
+    val hn = run(spark, stream, "graft_stream_psi", "complete")
     Psi.fold(ref, hn, nBuckets)
   }
 
@@ -594,7 +573,7 @@ object DocStreams {
     val index = graft.text.GramIndex.build(corpus, "doc_id", "text", L)
       .select(col("gram_md5")).cache()
     try {
-      val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+      val stream = docStream(spark, sfDir)
         .filter(col("doc_id") % 10 === 0)
       val report = graft.text.GramIndex.grams(stream, "doc_id", "text", L)
         .join(index, Seq("gram_md5"))
@@ -613,23 +592,18 @@ object DocStreams {
     } finally index.unpersist(blocking = false)
   }
 
-  def run(spark: SparkSession, streamed: DataFrame, name: String): DataFrame = {
-    val q = streamed.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
-
-  /** Append-mode twin of [[run]] for STATELESS transforms (per-row maps
-    * like tokenization — no aggregation, so "complete" is illegal and
-    * unnecessary; each microbatch appends its rows once).
+  /** Drain a streaming frame through a memory sink named `name` and
+    * return the sink table. `mode` is the output mode: "complete" for a
+    * stateful aggregation, "append" for a stateless map or a stream
+    * join, "update" for per-key state that re-emits its rows. The one
+    * memory-sink drain in graft; the query stops even when the drain
+    * throws.
     */
-  def runAppend(spark: SparkSession, streamed: DataFrame, name: String): DataFrame = {
-    val q = streamed.writeStream.outputMode("append")
+  def run(spark: SparkSession, streamed: DataFrame, name: String,
+          mode: String): DataFrame = {
+    val q = streamed.writeStream.outputMode(mode)
       .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
+    try q.processAllAvailable() finally q.stop()
     spark.table(name)
   }
 
@@ -640,12 +614,12 @@ object DocStreams {
     */
   def bpeStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.text.{Bpe, BpeMerges}
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
     val enc = Bpe.encodeKernel(stream, "doc_id", "text",
         Bpe.Model(BpeMerges.pretrained))
       .select(col("doc_id"), col("n_tok"),
         org.apache.spark.sql.functions.md5(col("bpe_repr")).as("bpe_md5"))
-    runAppend(spark, enc, "graft_stream_bpe")
+    run(spark, enc, "graft_stream_bpe", "append")
   }
 
   /** Streaming OVERLAPPING chunking — the ingest-time twin of batch
@@ -656,7 +630,7 @@ object DocStreams {
   def chunkOverlapStream(spark: SparkSession, sfDir: String,
                          k: Int, stride: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
     val out = stream.select(col("doc_id"),
       explode(ColumnBridge.column(graft.text.SlidingChunkSet(
         ColumnBridge.expression(col("text")), k, stride))).as("c"))
@@ -664,7 +638,7 @@ object DocStreams {
         org.apache.spark.sql.functions.size(
           org.apache.spark.sql.functions.split(col("c.chunk"), " ")).as("n_toks"),
         org.apache.spark.sql.functions.md5(col("c.chunk")).as("chunk_md5"))
-    runAppend(spark, out, "graft_stream_chunk_overlap")
+    run(spark, out, "graft_stream_chunk_overlap", "append")
   }
 
   /** Streaming decontamination — the ingest-time twin of batch q221:
@@ -686,13 +660,13 @@ object DocStreams {
       .select(explode(Shingles.shingles(col("text"), n)).as("g"))
       .distinct().orderBy("g")
       .collect().map(_.getString(0)).toSeq
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
       .filter(col("source") =!= "src9")
     val out = stream.select(col("doc_id"),
         size(array_intersect(Shingles.shingles(col("text"), n),
           typedLit(evalGrams))).cast("long").as("hit_grams"))
       .withColumn("contaminated", col("hit_grams") > 0)
-    runAppend(spark, out, "graft_stream_decontam")
+    run(spark, out, "graft_stream_decontam", "append")
   }
 
   /** Streaming heavy hitters — the ingest-time twin of batch q232's
@@ -710,11 +684,11 @@ object DocStreams {
     * outgrows the state store.
     */
   def heavyHittersStream(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
     val counts = stream
       .select(explode(graft.text.TextStats.tokensNonEmpty(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-    val table = run(spark, counts, "graft_stream_hh")
+    val table = run(spark, counts, "graft_stream_hh", "complete")
     graft.operators.Sorts.topK(table, Seq("cnt", "word"), Seq(false, true), k)
   }
 
@@ -729,7 +703,7 @@ object DocStreams {
   def weightedSampleStream(spark: SparkSession, sfDir: String,
                            k: Int = 50): DataFrame = {
     import graft.operators.{EsRow, EsReservoir, WeightedSample}
-    val stream = spark.readStream.schema(docSchema).parquet(stageDir(sfDir))
+    val stream = docStream(spark, sfDir)
       .filter(col("n_chars") > 0)
     val agg = udaf(new EsReservoir(k),
       org.apache.spark.sql.Encoders.product[EsRow])
@@ -738,7 +712,7 @@ object DocStreams {
         col("doc_id").as("docId"), col("source"),
         col("n_chars").as("nChars"))
       .agg(agg(col("key"), col("docId"), col("source"), col("nChars")).as("top"))
-    val table = run(spark, sampled, "graft_stream_wsample")
+    val table = run(spark, sampled, "graft_stream_wsample", "complete")
     table.select(explode(col("top")).as("r"))
       .select(col("r.docId").as("doc_id"), col("r.source"),
         col("r.nChars").as("n_chars"))

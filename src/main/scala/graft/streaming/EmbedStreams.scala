@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,20 +29,10 @@ object EmbedStreams {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  private def stageDir(sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = Paths.get(s"/root/repo/target/tmp/stream_emb_$safe")
-    Files.createDirectories(dir)
-    val src = Paths.get(s"$sfDir/embeddings.parquet")
-    val dst = dir.resolve("embeddings.parquet")
-    val stale = !Files.exists(dst) ||
-      Files.size(dst) != Files.size(src) ||
-      Files.getLastModifiedTime(dst) != Files.getLastModifiedTime(src)
-    if (stale)
-      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.COPY_ATTRIBUTES)
-    dir.toString
-  }
+  /** The embeddings corpus replayed as a file-source stream. */
+  private def embStream(spark: SparkSession, sfDir: String): DataFrame =
+    spark.readStream.schema(embSchema)
+      .parquet(graft.tools.Staging.streamSource(sfDir, "embeddings"))
 
   /** The refresh transform: assign each vector to its (frozen) cell,
     * explode to (cell, dim, value), keep running per-(cell, dim) count
@@ -65,14 +53,10 @@ object EmbedStreams {
     * (cell, dim, n, centroid) — the per-dimension refreshed centroid.
     */
   def centroidRefresh(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.readStream.schema(embSchema).parquet(stageDir(sfDir))
+    val emb = embStream(spark, sfDir)
     val model = graft.similarity.IVF.Model(graft.similarity.IVFCentroids.pretrained)
-    val name = "graft_stream_ivf_refresh"
-    val q = refreshTransform(emb, model)
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    centroids(spark.table(name))
+    centroids(DocStreams.run(spark, refreshTransform(emb, model),
+      "graft_stream_ivf_refresh", "complete"))
   }
 
   /** Ingest-time PQ encoding (the vector twin of the BPE stream): each
@@ -82,17 +66,12 @@ object EmbedStreams {
     * oracle gates both.
     */
   def pqEncodeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.readStream.schema(embSchema).parquet(stageDir(sfDir))
+    val emb = embStream(spark, sfDir)
     val pq = graft.similarity.PQ.Model(graft.similarity.PQCodebooks.pretrained)
-    val name = "graft_stream_pq_encode"
     val out = emb.select(
       col("vec_id") +:
         (0 until pq.m).map(s => pq.code(col("embedding"), s).as(s"code_$s")): _*)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, out, "graft_stream_pq_encode", "append")
   }
 
   /** Ingest-time int8 encode (the streaming twin of q375/q376's batch
@@ -108,8 +87,7 @@ object EmbedStreams {
     val scales: Array[Double] = graft.similarity.Int8.scales(corpus)
       .orderBy("pos").collect().map(_.getDouble(1))
     val sc = typedlit(scales.toSeq)
-    val emb = spark.readStream.schema(embSchema).parquet(stageDir(sfDir))
-    val name = "graft_stream_int8_encode"
+    val emb = embStream(spark, sfDir)
     val out = emb
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("vec_id"), col("pos").cast("long").as("pos"),
@@ -117,11 +95,7 @@ object EmbedStreams {
           round(graft.functions.Num.rnd(col("v").cast("double"), 6)
             / element_at(sc, col("pos").cast("int") + 1)).cast("int")))
           .as("code"))
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, out, "graft_stream_int8_encode", "append")
   }
 
   /** STREAMING incremental embedding dedup against a PERSISTED cell
@@ -148,7 +122,7 @@ object EmbedStreams {
     // guard as the batch probe: empty index errors clearly, a wrong
     // caller-supplied table count can't silently degrade recall)
     val (c, tables) = Similarity.indexMeta(idx)
-    val stream = spark.readStream.schema(embSchema).parquet(stageDir(sfDir))
+    val stream = embStream(spark, sfDir)
       .filter(col("vec_id") % 97 === 0)
     val probes = (0 until tables).map { t =>
       val planes = Similarity.planeLiterals(32, 64, seed = 7L + t)
@@ -167,7 +141,7 @@ object EmbedStreams {
       .filter(col("sim") >= lit(threshold))
       .groupBy(col("new_id"), col("corpus_id"))
       .agg(max(col("sim")).as("sim"))
-    val out = DocStreams.run(spark, verified, "graft_stream_embed_probe")
+    val out = DocStreams.run(spark, verified, "graft_stream_embed_probe", "complete")
     idx.unpersist(blocking = false)
     out
   }

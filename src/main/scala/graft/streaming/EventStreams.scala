@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,56 +21,30 @@ object EventStreams {
 
   /** Stream-source schema with `ts` as the given type — the file source
     * requires an explicit schema, so the ts dtype is probed from the
-    * staged file (see [[readEventStream]]) instead of hardcoded.
+    * staged file (see [[eventsFrom]]) instead of hardcoded.
     */
   private def rawSchema(tsType: org.apache.spark.sql.types.DataType) = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", tsType),
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** Copy the single events.parquet into a directory so the file source
-    * can watch it (repo-local tmp; no testdata mutation). Re-copies when
-    * the source's size or mtime differs from the staged copy, so a
-    * regenerated corpus can never silently pair a stale stream input
-    * with a fresh oracle.
-    */
-  private def stageDir(sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = Paths.get(s"/root/repo/target/tmp/stream_events_$safe")
-    Files.createDirectories(dir)
-    val src = Paths.get(s"$sfDir/events.parquet")
-    val dst = dir.resolve("events.parquet")
-    val stale = !Files.exists(dst) ||
-      Files.size(dst) != Files.size(src) ||
-      Files.getLastModifiedTime(dst) != Files.getLastModifiedTime(src)
-    if (stale)
-      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.COPY_ATTRIBUTES)
-    dir.toString
-  }
+  /** The events corpus replayed as a file-source stream. */
+  private def readEventStream(spark: SparkSession, sfDir: String): DataFrame =
+    eventsFrom(spark, graft.tools.Staging.streamSource(sfDir, "events"))
 
-  /** Stream reader for events. The parquet ts unit has changed across
-    * corpus drops (int64-ns → TIMESTAMP(MICROS)), and a wrong guess is
-    * the *silent* 1000×-mis-scale failure mode — so probe the staged
-    * file's batch-read schema, declare exactly that dtype to the stream
-    * source, and branch (mirrors graft.Tables.events). Unknown dtypes
-    * fail loudly.
+  /** Stream reader over staged events files in `dir`. The parquet ts unit
+    * has changed across corpus drops (int64-ns → TIMESTAMP(MICROS)), and
+    * a wrong guess is the *silent* 1000×-mis-scale failure mode — so
+    * probe the staged files' batch-read schema, declare exactly that
+    * dtype to the stream source, and normalize `ts` with
+    * [[graft.Tables.eventsTs]], the batch reader's own branch.
     */
-  private def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
+  private def eventsFrom(spark: SparkSession, dir: String,
+                         options: Map[String, String] = Map.empty): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = stageDir(sfDir)
     val tsType = spark.read.parquet(dir).schema("ts").dataType
-    val raw = spark.readStream.schema(rawSchema(tsType)).parquet(dir)
-    tsType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => raw
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case other => throw new IllegalStateException(
-        s"staged events.ts read as unsupported dtype $other (expected " +
-          "int64-ns, TIMESTAMP or TIMESTAMP_NTZ) — refusing to guess the time unit")
-    }
+    graft.Tables.eventsTs(
+      spark.readStream.schema(rawSchema(tsType)).options(options).parquet(dir))
   }
 
   /** Streaming data-quality monitor (the incremental twin of
@@ -92,12 +66,7 @@ object EventStreams {
         min(col("vr")).cast("double").as("min_v"),
         max(col("vr")).cast("double").as("max_v"),
         count(col("vr")).as("nv"), sum(col("vr")).as("sv"))
-    val name = "graft_stream_profile"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, agg, "graft_stream_profile", "complete")
       .select(col("event_type"), col("n_rows"), col("n_nulls"),
         col("min_v"), col("max_v"),
         graft.functions.Num.rnd(col("sv").cast("double") / col("nv"), 6).as("mean_v"))
@@ -112,12 +81,7 @@ object EventStreams {
     val agg = readEventStream(spark, sfDir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
-    val name = "graft_stream_win"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, agg, "graft_stream_win", "complete")
       .select(unix_timestamp(col("window.start")).as("ws"), col("event_type"),
         col("n"), graft.functions.Num.rnd(col("sv"), 2).as("sv"))
   }
@@ -132,12 +96,7 @@ object EventStreams {
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
-    val name = "graft_stream_dedup"
-    val q = deduped.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, deduped, "graft_stream_dedup", "complete")
   }
 
   /** Bounded-state streaming dedup: `dropDuplicatesWithinWatermark`
@@ -154,12 +113,7 @@ object EventStreams {
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
-    val name = "graft_stream_dedup_wm"
-    val q = deduped.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, deduped, "graft_stream_dedup_wm", "complete")
   }
 
   /** Streaming Count-Min frequency monitor: the q258 sketch maintained
@@ -176,12 +130,7 @@ object EventStreams {
       .select(col("user_id").cast("string").as("k"))
       .select(CountMin.buckets(col("k")).as("bs"))
       .agg(CountMin.sketch(col("bs")).as("sk"))
-    val name = "graft_stream_cms"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val sk = spark.table(name)
+    val sk = DocStreams.run(spark, agg, "graft_stream_cms", "complete")
     val probes = graft.Tables.events(spark, sfDir)
       .select(col("user_id").cast("string").as("k"))
       .groupBy("k").agg(count(lit(1)).as("exact"))
@@ -203,12 +152,7 @@ object EventStreams {
       .groupBy("user_id")
       .agg(firstTs("signup").as("fs"), firstTs("click").as("fc"),
         firstTs("purchase").as("fp"))
-    val name = "graft_stream_funnel"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).agg(
+    DocStreams.run(spark, agg, "graft_stream_funnel", "complete").agg(
       sum(when(col("fs").isNotNull, 1L).otherwise(0L)).as("n_signup"),
       sum(when(col("fs") < col("fc"), 1L).otherwise(0L)).as("n_click"),
       sum(when(col("fs") < col("fc") && col("fc") < col("fp"), 1L)
@@ -230,12 +174,7 @@ object EventStreams {
       .select(col("user_id").cast("string").as("item"))
       .agg(graft.functions.MisraGries.mg(sketchK)(col("item")).as("cand"),
         count(col("item")).as("n"))
-    val name = "graft_stream_mg"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val row = spark.table(name).collect()(0)
+    val row = DocStreams.run(spark, agg, "graft_stream_mg", "complete").collect()(0)
     val cand = row.getAs[scala.collection.Seq[String]](0).toArray
     val n = row.getLong(1)
     val items = graft.Tables.events(spark, sfDir)
@@ -267,12 +206,7 @@ object EventStreams {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("vr")).as("s"),
         sum(col("vr") * col("vr")).as("ss"))
-    val name = "graft_stream_anomaly"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val stats = spark.table(name)
+    val stats = DocStreams.run(spark, agg, "graft_stream_anomaly", "complete")
       .select(col("event_type"),
         (col("s").cast("double") / col("n")).as("mean"),
         ((col("ss").cast("double")
@@ -311,15 +245,11 @@ object EventStreams {
       .agg(count(lit(1)).as("cnt"), sum(col("tm")).as("dst"),
         sum(col("vr")).as("dsv"), sum(col("tm") * col("vr")).as("dstv"),
         sum(col("tm") * col("tm")).as("dstt"))
-    val name = "graft_stream_ols"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val m = spark.table(name).select(col("event_type"),
-      col("cnt").cast("double").as("n"), col("dst").cast("double").as("st"),
-      col("dsv").cast("double").as("sv"), col("dstv").cast("double").as("stv"),
-      col("dstt").cast("double").as("stt"))
+    val m = DocStreams.run(spark, agg, "graft_stream_ols", "complete")
+      .select(col("event_type"),
+        col("cnt").cast("double").as("n"), col("dst").cast("double").as("st"),
+        col("dsv").cast("double").as("sv"), col("dstv").cast("double").as("stv"),
+        col("dstt").cast("double").as("stt"))
     m.select(col("event_type"),
       Num.rnd((col("n") * col("stv") - col("st") * col("sv"))
         / (col("n") * col("stt") - col("st") * col("st")), 12).as("slope"),
@@ -341,13 +271,9 @@ object EventStreams {
         Num.rnd(col("value"), 6).cast("decimal(18,6)").as("vr"))
       .groupBy("dow", "hod")
       .agg(count(lit(1)).as("n"), sum(col("vr")).as("sv"))
-    val name = "graft_stream_seasonality"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).select(col("dow"), col("hod"), col("n"),
-      Num.rnd(col("sv").cast("double") / col("n"), 6).as("mean_v"))
+    DocStreams.run(spark, agg, "graft_stream_seasonality", "complete")
+      .select(col("dow"), col("hod"), col("n"),
+        Num.rnd(col("sv").cast("double") / col("n"), 6).as("mean_v"))
   }
 
   /** Per-user carry for the streaming transition matrix: the last seen
@@ -384,13 +310,8 @@ object EventStreams {
           last.foreach(state.update)
           out.iterator
       }
-    val name = "graft_stream_transitions"
-    val q = pairs.toDF("src", "dst")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).groupBy("src", "dst").agg(count(lit(1)).as("n"))
+    DocStreams.run(spark, pairs.toDF("src", "dst"), "graft_stream_transitions", "append")
+      .groupBy("src", "dst").agg(count(lit(1)).as("n"))
   }
 
   /** Chronological 4-file staging for multi-batch replay: the events
@@ -406,8 +327,7 @@ object EventStreams {
     * watermark node, so they advance time without joining.
     */
   private def stageSplitDir(spark: SparkSession, sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = Paths.get(s"/root/repo/target/tmp/stream_events_split_$safe")
+    val dir = Paths.get(graft.tools.Staging.dir("stream_events_split", sfDir))
     val srcFile = Paths.get(s"$sfDir/events.parquet")
     val stamp = dir.resolve("_staged_from")
     val tag = s"${Files.size(srcFile)}:${Files.getLastModifiedTime(srcFile)}"
@@ -470,20 +390,8 @@ object EventStreams {
     * outer enrichment join.
     */
   def streamStreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = stageSplitDir(spark, sfDir)
-    val tsType = spark.read.parquet(dir).schema("ts").dataType
-    def side: DataFrame = {
-      val raw = spark.readStream.schema(rawSchema(tsType))
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-      tsType match {
-        case LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => raw
-      }
-    }
+    def side: DataFrame = eventsFrom(spark, dir, Map("maxFilesPerTrigger" -> "1"))
     val purchases = side
       .select(col("event_id").as("p_id"), col("user_id"),
         col("ts").as("p_ts"), col("event_type").as("p_type"))
@@ -500,16 +408,12 @@ object EventStreams {
         col("c_ts") <= col("p_ts"),
       "left_outer")
       .select(col("p_id"), col("c_id"), col("user_id"))
-    val name = "graft_stream_outer_join"
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
+    val sink = DocStreams.run(spark, joined, "graft_stream_outer_join", "append")
     // sentinel rows are dropped POST-sink: filtering p_id in-stream
     // gets pushed below the watermark node into the purchase-side scan
     // and silently re-kills the watermark advance (observed — the
     // whole reason the filter lives here)
-    spark.table(name).filter(col("p_id") >= 0)
+    sink.filter(col("p_id") >= 0)
   }
 
   /** STREAM-STREAM inner interval join: each purchase matched with the
@@ -534,12 +438,7 @@ object EventStreams {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
         col("c_ts") <= col("p_ts"))
       .select(col("p_id"), col("c_id"), col("user_id"))
-    val name = "graft_stream_join"
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, joined, "graft_stream_join", "append")
   }
 
   /** Stream-static join: enrich the event stream with a static
@@ -557,12 +456,7 @@ object EventStreams {
       .join(broadcast(dim), Seq("user_id"), "left")
       .groupBy("cohort")
       .agg(count(lit(1)).as("n"))
-    val name = "graft_stream_static"
-    val q = joined.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, joined, "graft_stream_static", "complete")
   }
 
   /** Per-user state for the streaming as-of join: recent clicks as
@@ -642,13 +536,8 @@ object EventStreams {
           state.update(AsofState(clicks.filter(_._1 >= horizonUs)))
           emitted.iterator
       }
-    val name = "graft_stream_asof"
-    val q = out.toDF("p_id", "user_id", "c_id", "c_value")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, out.toDF("p_id", "user_id", "c_id", "c_value"),
+      "graft_stream_asof", "append")
   }
 
   /** Per-user session state for the streaming sessionizer. */
@@ -680,13 +569,8 @@ object EventStreams {
           state.update(st)
           Iterator.single((user, st.nSessions, st.nEvents))
       }
-    val name = "graft_stream_sessions"
-    val q = out.toDF("user_id", "n_sessions", "n_events")
-      .writeStream.outputMode("update")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, out.toDF("user_id", "n_sessions", "n_events"),
+      "graft_stream_sessions", "update")
   }
 
   /** STREAMING A/B experiment monitor (q315's twin): the stream keeps
@@ -703,12 +587,8 @@ object EventStreams {
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "click", 1L).otherwise(0L)).as("clicked"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("purchased"))
-    val name = "graft_stream_ab"
-    val q = flags.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val users = spark.table(name).filter(col("clicked") === 1L)
+    val users = DocStreams.run(spark, flags, "graft_stream_ab", "complete")
+      .filter(col("clicked") === 1L)
       .withColumn("grp",
         when(conv(substring(md5(concat(lit("ab:"), col("user_id"))), 1, 4),
           16, 10).cast("int") % 2 === 0, lit("A")).otherwise(lit("B")))
@@ -744,12 +624,7 @@ object EventStreams {
         Num.rnd(col("value"), 6).cast("decimal(18,6)").as("vr"))
       .groupBy("event_type", "day")
       .agg(sum(col("vr")).as("sv"))
-    val name = "graft_stream_cusum"
-    val q = cells.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val daily = spark.table(name)
+    val daily = DocStreams.run(spark, cells, "graft_stream_cusum", "complete")
       .select(col("event_type"), col("day"),
         col("sv").cast("decimal(18,6)").as("x"))
     graft.operators.Stats.cusumChangepoint(daily, "event_type", "day", "x")
@@ -769,12 +644,7 @@ object EventStreams {
           .as("h"))
     val agg = hashed.groupBy("event_type")
       .agg(KmvAgg.kmv(col("h"), 64).as("raw"))
-    val name = "graft_stream_kmv"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, agg, "graft_stream_kmv", "complete")
       .select(col("event_type"), Num.rnd(col("raw"), 3).as("est"))
   }
 
@@ -786,31 +656,13 @@ object EventStreams {
     */
   def benfordStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Num
-    // stage orders.parquet as a stream source — size/mtime-checked so a
-    // regenerated corpus can never pair a stale stream with a fresh
-    // oracle (the DocStreams.stageDir discipline)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = Paths.get(s"/root/repo/target/tmp/stream_orders_$safe")
-    Files.createDirectories(dir)
-    val src = Paths.get(s"$sfDir/orders.parquet")
-    val dst = dir.resolve("orders.parquet")
-    val stale = !Files.exists(dst) ||
-      Files.size(dst) != Files.size(src) ||
-      Files.getLastModifiedTime(dst) != Files.getLastModifiedTime(src)
-    if (stale)
-      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.COPY_ATTRIBUTES)
-    val schema = spark.read.parquet(dst.toString).schema
-    val digs = spark.readStream.schema(schema).parquet(dir.toString)
+    val dir = graft.tools.Staging.streamSource(sfDir, "orders")
+    val schema = spark.read.parquet(dir).schema
+    val digs = spark.readStream.schema(schema).parquet(dir)
       .select(substring(Num.dec2(col("o_totalprice")).cast("string"), 1, 1)
         .cast("long").as("dig"))
       .groupBy("dig").agg(count(lit(1)).as("n"))
-    val name = "graft_stream_benford"
-    val q = digs.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val counts = spark.table(name)
+    val counts = DocStreams.run(spark, digs, "graft_stream_benford", "complete")
     val tot = counts.agg(sum(col("n")).as("nn"))
     val cells = counts.crossJoin(broadcast(tot))
       .select(col("dig"), col("n"),
@@ -842,12 +694,7 @@ object EventStreams {
           .as("h"))
     val agg = hashed.groupBy("day")
       .agg(KmvAgg.kmv(col("h"), 64).as("raw"))
-    val name = "graft_stream_dau"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    DocStreams.run(spark, agg, "graft_stream_dau", "complete")
       .select(col("day"), Num.rnd(col("raw"), 3).as("dau_est"))
   }
 

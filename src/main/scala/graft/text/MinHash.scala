@@ -25,14 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object MinHash {
 
-  /** Append a `sig` array<long> column of k minhashes of `shingleCol`. */
-  def withSignature(df: DataFrame, shingleCol: String, k: Int = 64): DataFrame = {
-    val sig = array((0 until k).map { i =>
-      array_min(transform(col(shingleCol), s => xxhash64(lit(i), s)))
-    }: _*)
-    df.withColumn("sig", sig)
-  }
-
   /** Candidate near-dup pairs (idCol pairs, id1 < id2) via LSH banding.
     *
     * Band hashes are built DIRECTLY from per-band minhash expressions so

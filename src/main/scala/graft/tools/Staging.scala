@@ -1,7 +1,14 @@
 package graft.tools
 
-/** Engine-managed staging locations (persisted indexes, stream sources,
-  * file sinks, PCM fixtures).
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+/** The one owner of where graft writes. It has three jobs:
+  *  - query scratch directories ([[dir]]): every round-trip, persisted
+  *    index and file-sink query writes under its own `tag`;
+  *  - stream sources ([[streamSource]]): a corpus table copied into a
+  *    directory a file-source stream can watch;
+  *  - keyed fit artifacts ([[dirKeyedOnSource]]): fit-once models and
+  *    sketches whose directory changes when the source table does.
   *
   * Two contracts (ADVICE r12):
   *  - the root is NOT pinned to the repo checkout: override with
@@ -25,6 +32,27 @@ object Staging {
   def dir(tag: String, sfDir: String): String = {
     val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     s"$root/${tag}_$safe"
+  }
+
+  /** Copy `<sfDir>/<table>.parquet` into its own directory so a file
+    * source can watch it (the corpus itself is never touched), and
+    * return that directory. Re-copies when the source's size or mtime
+    * differs from the staged copy, so a regenerated corpus can never
+    * pair a stale stream input with a fresh oracle. Every stream over
+    * the table shares the copy; only a stale one is written.
+    */
+  def streamSource(sfDir: String, table: String): String = {
+    val d = Paths.get(dir(s"stream_$table", sfDir))
+    Files.createDirectories(d)
+    val src = Paths.get(s"$sfDir/$table.parquet")
+    val dst = d.resolve(s"$table.parquet")
+    val stale = !Files.exists(dst) ||
+      Files.size(dst) != Files.size(src) ||
+      Files.getLastModifiedTime(dst) != Files.getLastModifiedTime(src)
+    if (stale)
+      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.COPY_ATTRIBUTES)
+    d.toString
   }
 
   /** [[dir]] additionally keyed on the SOURCE table's modification time

@@ -23,7 +23,7 @@ class DocStreamsSpec extends SparkSpec {
       .parquet(s"$dir/*/")
     val got = DocStreams.run(spark,
         DocStreams.curateTransform(streamed, minQuality = 0.5),
-        "doc_stream_spec")
+        "doc_stream_spec", "complete")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val want = DocStreams.curateTransform(docs, minQuality = 0.5)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -48,7 +48,7 @@ class DocStreamsSpec extends SparkSpec {
       .parquet(s"$dir/*/")
     val got = DocStreams.run(spark,
         DocStreams.incrementalDedupTransform(streamed, corpus),
-        "doc_stream_incr_spec")
+        "doc_stream_incr_spec", "complete")
       .select(col("new_id"), col("corpus_id"),
         graft.functions.Num.rnd(col("jaccard"), 6).as("j"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -109,7 +109,7 @@ class DocStreamsSpec extends SparkSpec {
       .parquet(s"$dir/*/")
     val elected = DocStreams.run(spark,
       ChunkDedup.elect(ChunkDedup.chunks(streamed, "doc_id", "text", 10), "doc_id"),
-      "doc_stream_chunk_spec")
+      "doc_stream_chunk_spec", "complete")
     val got = ChunkDedup.assemble(docs,
         ChunkDedup.chunks(docs, "doc_id", "text", 10), elected, "doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
@@ -131,9 +131,9 @@ class DocStreamsSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/*/")
     val model = Bpe.Model(BpeMerges.pretrained)
-    val got = DocStreams.runAppend(spark,
+    val got = DocStreams.run(spark,
         Bpe.encodeKernel(streamed, "doc_id", "text", model),
-        "doc_stream_bpe_spec")
+        "doc_stream_bpe_spec", "append")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val want = Bpe.encodeKernel(docs, "doc_id", "text", model)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
