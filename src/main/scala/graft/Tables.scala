@@ -97,9 +97,11 @@ object Tables {
     * along the Types lattice (verified: uint8→short, uint16→int,
     * uint32→long, uint64→decimal(20,0)), so this is the data-path gate for
     * SURVEY §1.3's unsigned mapping (reference
-    * `legate/pandas/common/types.py:72-104`).
+    * `legate/pandas/common/types.py:72-104`). Resolved against the
+    * working directory, like `Staging.root`'s default, so each checkout
+    * reads its own fixture.
     */
-  val uintFixturePath = "/root/repo/fixtures/uint.parquet"
+  val uintFixturePath = s"${sys.props.getOrElse("user.dir", ".")}/fixtures/uint.parquet"
   def uintFixture(s: SparkSession): DataFrame = s.read.parquet(uintFixturePath)
 
   /** Spread a SMALL scan across the cluster when the file layout caps

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the documents corpus — the INCREMENTAL
@@ -60,15 +61,11 @@ object DocStreams {
     val docs = docStream(spark, sfDir)
     val curated = curateTransform(docs, minQuality)
     @volatile var wrote = false
-    val q = curated
-      .writeStream.outputMode("complete")
+    drain(curated.writeStream.outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
         wrote = true
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     if (wrote) spark.read.parquet(out)
     else // zero microbatches (empty source): the result is an empty frame,
          // not an unreadable empty directory
@@ -451,14 +448,11 @@ object DocStreams {
     gramProbe(spark, sfDir, L) { report =>
       val out = graft.tools.Staging.dir("gram_probe_files", sfDir)
       @volatile var wrote = false
-      val q = report.writeStream.outputMode("complete")
+      drain(report.writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
           wrote = true
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        })
       if (wrote) spark.read.parquet(out)
       else spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), report.schema)
@@ -552,16 +546,13 @@ object DocStreams {
       .schema(spark.read.parquet(srcDir).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val q = stream.writeStream.outputMode("append")
+    drain(stream.writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val current = spark.read.parquet(s"$tabDir/v$cur")
         CdcUpsert.applyChanges(current, batch)
           .write.mode(SaveMode.Overwrite).parquet(s"$tabDir/v${cur + 1}")
         cur += 1
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.parquet(s"$tabDir/v$cur")
       .select(col("doc_id"), md5(col("text")).as("text_md5"), col("source"))
   }
@@ -596,16 +587,26 @@ object DocStreams {
     * return the sink table. `mode` is the output mode: "complete" for a
     * stateful aggregation, "append" for a stateless map or a stream
     * join, "update" for per-key state that re-emits its rows. The one
-    * memory-sink drain in graft; the query stops even when the drain
-    * throws.
+    * memory-sink drain in graft.
     */
   def run(spark: SparkSession, streamed: DataFrame, name: String,
           mode: String): DataFrame = {
-    val q = streamed.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
+    drain(streamed.writeStream.outputMode(mode).format("memory").queryName(name))
     spark.table(name)
   }
+
+  /** Start `w`, process everything available, then stop the query, also
+    * when the run throws. Every stream in graft runs through here. Its
+    * checkpoint is a fresh directory under `Staging.root`, deleted with
+    * the run: with no `checkpointLocation` Spark makes a
+    * `/tmp/temporary-<uuid>` per run and keeps it when the run fails,
+    * and a reused one would resume at its old offset and read nothing.
+    */
+  def drain(w: DataStreamWriter[Row]): Unit =
+    graft.tools.Staging.withRunDir("stream_checkpoint") { ckpt =>
+      val q = w.option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+    }
 
   /** Streaming BPE tokenization — the ingest-time twin of batch q217.
     * Stateless scan-stage map (the merge table rides the closure), so

@@ -91,9 +91,10 @@ object BloomGate {
     * and an expression-local lazy val would re-parse per task).
     *
     * Identical filter CONTENT reuses one broadcast: eager bench passes
-    * and ScaleSmoke loops rebuild the gated query per pass, and a fresh
-    * broadcast per construction accumulates MB-scale blocks until the
-    * ContextCleaner happens to collect the dropped plans. The driver-side
+    * and the `perfbench.Main` scale-tier passes rebuild the gated query
+    * per pass, and a fresh broadcast per construction accumulates
+    * MB-scale blocks until the ContextCleaner happens to collect the
+    * dropped plans. The driver-side
     * cache below keys on (length, content hash) + full content equality
     * and keeps the most recent few.
     */

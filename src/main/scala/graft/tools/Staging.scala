@@ -1,14 +1,16 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** The one owner of where graft writes. It has three jobs:
+/** The one owner of where graft writes. It has four jobs:
   *  - query scratch directories ([[dir]]): every round-trip, persisted
   *    index and file-sink query writes under its own `tag`;
   *  - stream sources ([[streamSource]]): a corpus table copied into a
   *    directory a file-source stream can watch;
   *  - keyed fit artifacts ([[dirKeyedOnSource]]): fit-once models and
-  *    sketches whose directory changes when the source table does.
+  *    sketches whose directory changes when the source table does;
+  *  - per-run directories ([[withRunDir]]): state that lives only as
+  *    long as one call, such as a stream's checkpoint.
   *
   * Two contracts (ADVICE r12):
   *  - the root is NOT pinned to the repo checkout: override with
@@ -53,6 +55,21 @@ object Staging {
       Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.COPY_ATTRIBUTES)
     d.toString
+  }
+
+  /** Run `body` with a fresh, empty directory `<root>/<tag>_<random>`,
+    * and delete the directory when `body` returns or throws. Unlike
+    * [[dir]], no two calls share it, so a stream checkpoint never
+    * resumes at an old run's offset.
+    */
+  def withRunDir[T](tag: String)(body: String => T): T = {
+    val d = Files.createTempDirectory(Files.createDirectories(Paths.get(root)), s"${tag}_")
+    try body(d.toString)
+    finally {
+      val walk = Files.walk(d)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally walk.close()
+    }
   }
 
   /** [[dir]] additionally keyed on the SOURCE table's modification time

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.DocStreams
 
@@ -139,5 +144,33 @@ class DocStreamsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got === want)
     assert(got.size === docs.count())
+  }
+
+  test("a drain whose batch throws stops its query and leaves no directory behind") {
+    def entries(dir: String, prefix: String): Set[String] = {
+      val d = Paths.get(dir)
+      if (!Files.isDirectory(d)) Set.empty
+      else {
+        val ls = Files.list(d)
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(prefix)).toSet
+        finally ls.close()
+      }
+    }
+    def left: (Set[String], Set[String]) =
+      (entries(graft.tools.Staging.root, "stream_checkpoint_"),
+        entries(System.getProperty("java.io.tmpdir"), "temporary-"))
+    val before = left
+    val dir = Files.createTempDirectory("drain_spec").toString
+    Tables.documents(spark, sf).limit(5).write.mode("overwrite").parquet(s"$dir/a")
+    val streamed = spark.readStream.schema(DocStreams.schema).parquet(s"$dir/a")
+    val e = intercept[Exception](DocStreams.drain(streamed.writeStream
+      .foreachBatch { (_: DataFrame, _: Long) =>
+        throw new IllegalStateException("batch failed")
+      }))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("batch failed")))
+    assert(spark.streams.active.isEmpty)
+    assert(left === before)
   }
 }

@@ -12,7 +12,8 @@ import graft.tools.Staging
   * (`dirKeyedOnSource`) has no silent fallback for a missing source and
   * moves on a rewrite the modTime alone cannot see; stream sources are
   * re-copied when their table changes; no other `src/main` file builds
-  * a scratch path; and no two queries share one.
+  * a scratch path or names the checkout's own path; and no two queries
+  * share one.
   */
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -58,7 +59,8 @@ class StagingSpec extends SparkSpec {
   test("no src/main file but Staging builds a scratch path or sanitizes a data dir") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
-    val banned = Seq("target/tmp", """replaceAll("[^A-Za-z0-9.]"""")
+    val checkout = Paths.get("").toAbsolutePath.toString
+    val banned = Seq("target/tmp", """replaceAll("[^A-Za-z0-9.]"""", checkout)
     val walk = Files.walk(root)
     val hits = try walk.iterator().asScala
       .filter(f => f.toString.endsWith(".scala") &&
