@@ -3,25 +3,23 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.{GraphIter, PageRankKernel}
+
 /** Fixed-point integer PageRank over an undirected graph — the
   * iterative-propagation graph operator beside [[Components]]'s
   * union-find connected components (domain/source authority
   * weighting is a standard curation signal next to quality scores).
   *
-  * Distributed shape (the 100 TB lens):
-  *   - each iteration is ONE hash join (ranks ⋈ edges on src) + ONE
-  *     partial-aggregated groupBy(dst) — the same shuffle pattern
-  *     GraphX/Pregel lowers to; no driver-side loop over rows, and the
-  *     iteration count is a compile-time constant;
-  *   - the loop itself (session, width, per-iteration checkpoints,
-  *     releases) is [[Iterative]]'s; this object gives only the edge
-  *     projection, the vertex frames, the initial ranks and the step.
+  * Each variant is one lazy [[graft.plans.GraphIterNode]] running
+  * [[graft.plans.PageRankKernel]]: the edges are laid out once inside
+  * the exec and every iteration is one message shuffle, so building the
+  * Dataset fires no job.
   *
   * Arithmetic discipline: ranks are FIXED-POINT LONGS (scale 1e12).
   * Every step is integer `div` / multiply / add, so the per-vertex sum
-  * of contributions is order-independent (exact long addition partial-
-  * aggregates map-side) AND bit-replayable in a SQL oracle — a
-  * floating-point PageRank would make Σ contributions depend on the
+  * of contributions is order-independent (exact long addition, combined
+  * per target in each sending task) AND bit-replayable in a SQL oracle —
+  * a floating-point PageRank would make Σ contributions depend on the
   * shuffle's merge order.  `pr` of a vertex after k iterations is
   * identical on both engines down to the last unit.
   */
@@ -36,18 +34,19 @@ object PageRank {
     * (3·Scale)/(20·n) in units. Returns (id, deg, pr).
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame =
-    kernel(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), iters, _ => lit(true), "deg")
+    GraphIter(edges, PageRankKernel(weighted = false), iters, Seq(srcCol, dstCol))
 
   /** PERSONALIZED PageRank (topic-sensitive, Haveliwala 2002): the
     * teleport mass lands only on the `seed` vertices — authority *as
     * seen from* a seed set, the domain-weighting variant a curation
     * pipeline uses to score sources against a trusted whitelist.  Same
     * fixed-point integer discipline as [[run]]; non-seed vertices start
-    * at 0 and receive only propagated mass. Returns (id, deg, pr).
+    * at 0 and receive only propagated mass. A seed set that selects no
+    * vertex fails when the plan executes. Returns (id, deg, pr).
     */
   def runPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
                       iters: Int, seed: Column => Column): DataFrame =
-    kernel(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), iters, seed, "deg")
+    GraphIter(edges, PageRankKernel(weighted = false), iters, Seq(srcCol, dstCol), seed)
 
   /** WEIGHTED PageRank: mass splits proportionally to integer edge
     * weights instead of uniformly — `contribution = (pr · w) div sw`
@@ -58,63 +57,7 @@ object PageRank {
     */
   def runWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                   weightCol: String, iters: Int): DataFrame =
-    kernel(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w")), iters, _ => lit(true), "sw")
-
-  /** The one kernel behind all three variants, over (src, dst[, w]).
-    * An unweighted edge has weight 1 after dedupe, so `(pr·w) div sw` is
-    * `pr div deg`; with every vertex a seed the teleport column is the
-    * uniform (3·Scale)/(20·n) — the plain PageRank arithmetic, unit for
-    * unit.
-    *
-    * Each iteration is ONE join + ONE aggregation, hence one exchange:
-    * the symmetrized edges are laid out by src on the loop width, the
-    * rank frame is the previous aggregate (already hash-partitioned by
-    * id at that width), so the shuffle-hash join plans no exchange and
-    * only the partial-aggregated contributions move. The apply step is
-    * folded into that aggregation as a zero-contribution union branch
-    * carrying each vertex's out-weight and teleport (max ignores the
-    * contribution rows' nulls), so vertices receiving no mass still get
-    * pure teleport without a second join.
-    */
-  private def kernel(edges: DataFrame, iters: Int, seed: Column => Column,
-                     wName: String): DataFrame =
-    Iterative.loop(edges) { g =>
-      val weighted = g.edges.columns.contains("w")
-      // Fan a narrow checkpoint out to machine width before the
-      // symmetrize map (r14, as Tables.fanout): the explode + hash of
-      // 2·|E| rows otherwise runs on however few partitions the edge
-      // derivation produced (570 ms on 3 tasks at sf0.1, ~150 ms wide).
-      // A one-partition layout (a graph under ~32k edges) gains nothing
-      // from it, only an extra exchange.
-      val cores = g.edges.sparkSession.sparkContext.defaultParallelism
-      val fan = if (g.parts > 1 && g.edges.rdd.getNumPartitions * 2 < cores)
-        g.edges.repartition(cores, col("src")) else g.edges
-      // laid out by src: the dedupe on (src, dst), the per-src vertex
-      // aggregate and every iteration's join then plan no exchange
-      val both = g.bothWays(fan).repartition(g.parts, col("src"))
-      val sym = g.keep(
-        if (weighted) both.groupBy("src", "dst").agg(sum("w").as("w")) else both.distinct())
-      val verts = g.keep(sym.groupBy(col("src").as("id"))
-        .agg(sum(if (weighted) col("w") else lit(1L)).as("sw"))
-        .withColumn("seed", seed(col("id"))))
-      val n = verts.filter(col("seed")).count() // one driver scalar, like a dim cardinality
-      require(n > 0, "PageRank needs at least one seed vertex")
-      val apply = verts.select(col("id"), lit(0L).as("c"), col("sw"),
-        when(col("seed"), lit((3L * Scale) / (20L * n))).otherwise(0L).as("tele"))
-      val init = verts.select(col("id"), col("sw"),
-        when(col("seed"), lit(Scale / n)).otherwise(0L).as("pr"))
-      val contrib = expr(if (weighted) "(pr * w) div sw" else "pr div sw")
-      g.fixed(init, iters) { pr =>
-        sym.hint("shuffle_hash").join(pr.hint("shuffle_hash"), sym("src") === pr("id"))
-          .select(col("dst").as("id"), contrib.as("c"),
-            lit(null).cast("long").as("sw"), lit(null).cast("long").as("tele"))
-          .unionByName(apply)
-          .groupBy("id").agg(sum("c").as("mass"), max("sw").as("sw"), max("tele").as("tele"))
-          .select(col("id"), col("sw"),
-            (col("tele") + expr("(85 * mass) div 100").cast("long")).as("pr"))
-      }.withColumnRenamed("sw", wName)
-    }
+    GraphIter(edges, PageRankKernel(weighted = true), iters, Seq(srcCol, dstCol, weightCol))
 
   /** customer↔supplier trade graph from the TPC-H-ish tables: distinct
     * (o_custkey, l_suppkey) pairs, vertex ids disjoint by prefix.
@@ -144,10 +87,10 @@ object PageRank {
     val o = graft.Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
     val l = graft.Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
     // May contain duplicate pairs, deliberately (r14): the only consumer
-    // is run(), whose sym construction dedupes on its own layout anyway —
-    // a distinct here cost a full extra exchange+aggregate (measured
-    // ~0.8 s of q263's construction at sf0.1) to shave 600k rows to 587k
-    // before a shuffle that dedupes regardless.
+    // is run(), whose layout dedupes each vertex's neighbours anyway — a
+    // distinct here cost a full extra exchange+aggregate (measured ~0.8 s
+    // at sf0.1) to shave 600k rows to 587k before a shuffle that dedupes
+    // regardless.
     o.join(l, o("o_orderkey") === l("l_orderkey"))
       .select((col("o_custkey") * 2).as("cust"),
         (col("l_suppkey") * 2 + 1).as("supp"))

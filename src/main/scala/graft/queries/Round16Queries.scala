@@ -198,9 +198,9 @@ object Round16Queries {
 
     // §2.12 PageRank (operators/PageRank): 3 fixed-point integer
     // iterations over the symmetrized customer↔supplier trade graph —
-    // one hash join + one partial-agg groupBy per iteration, persisted
-    // so lineage stays flat.  Integer `div` arithmetic makes the
-    // per-vertex mass sum order-independent and bit-replayable.
+    // one lazy GraphIter node, one message shuffle per iteration inside
+    // its exec.  Integer `div` arithmetic makes the per-vertex mass sum
+    // order-independent and bit-replayable.
     "q263_pagerank" -> QueryDef(
       (s, d) => {
         // iterate on LONG vertex ids (string hashing dominated the
@@ -245,8 +245,8 @@ object Round16Queries {
     // §2.12 label-propagation communities (operators/LabelProp):
     // deterministic LPA (majority neighbor label, ties → smallest) —
     // the density-community operator beside q114's connected
-    // components.  One join + one partial-agg groupBy + one argmax
-    // per iteration.
+    // components.  One vote shuffle and one per-vertex argmax per
+    // iteration, inside one GraphIter node.
     "q266_label_prop" -> QueryDef(
       (s, d) => graft.operators.LabelProp.run(
         graft.operators.PageRank.tradeEdges(s, d), "cust", "supp", iters = 2),

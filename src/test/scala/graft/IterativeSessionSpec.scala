@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{LabelProp, PageRank}
 
-/** r14 (VERDICT r13 item 7): iterative graph loops run on a dedicated
-  * AQE-off session CLONE instead of toggling the caller's session conf —
-  * a concurrent query on the shared session must never observe AQE
-  * flipped off, and the loop's result must come back rooted on the
+/** Graph operators run on the caller's session: no call flips the
+  * caller's AQE conf, even for a moment, and results are rooted on the
   * caller's session.
   */
 class IterativeSessionSpec extends SparkSpec {
@@ -21,18 +17,6 @@ class IterativeSessionSpec extends SparkSpec {
   test("graph loop leaves the caller session's AQE conf untouched") {
     val k = "spark.sql.adaptive.enabled"
     spark.conf.set(k, "true")
-    val out = LabelProp.run(edgesDf, "src", "dst", iters = 1)
-    assert(spark.conf.get(k) == "true")
-    // result is rooted back on the caller's session
-    assert(out.sparkSession eq spark)
-    // one round: each vertex takes its neighbors' most frequent label, min on ties
-    val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == Map(1L -> 2L, 2L -> 1L, 3L -> 2L, 10L -> 11L, 11L -> 10L))
-  }
-
-  test("concurrent AQE query on the shared session never sees AQE off during a loop") {
-    val k = "spark.sql.adaptive.enabled"
-    spark.conf.set(k, "true")
     @volatile var sawFalse = false
     @volatile var done = false
     val probe = new Thread(() => {
@@ -43,16 +27,19 @@ class IterativeSessionSpec extends SparkSpec {
     })
     probe.start()
     try {
-      // a loop heavy enough to span many probe ticks
+      val out = LabelProp.run(edgesDf, "src", "dst", iters = 1)
+      assert(out.sparkSession eq spark)
+      // one round: each vertex takes its neighbors' most frequent label, min on ties
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels == Map(1L -> 2L, 2L -> 1L, 3L -> 2L, 10L -> 11L, 11L -> 10L))
       val pr = PageRank.run(edgesDf, "src", "dst", iters = 3)
+      assert(pr.sparkSession eq spark)
       assert(pr.count() == 5)
-      // and a plain AQE query interleaved on the parent session
-      val agg = edgesDf.groupBy("src").count().collect()
-      assert(agg.nonEmpty)
     } finally {
       done = true
       probe.join()
     }
-    assert(!sawFalse, "parent session observed spark.sql.adaptive.enabled != true during a graph loop")
+    assert(spark.conf.get(k) == "true")
+    assert(!sawFalse, "the caller's spark.sql.adaptive.enabled changed during a graph call")
   }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * PLANS.md audit tables); they were measured identical at
   * sf0.001 and sf0.01, so the pins are SF-stable. ALL 30 headline
   * queries are covered (r11): lazily-returned plans through the `pins`
-  * table; eager-construction queries (q232/q249/q263/q373 — whose
-  * corpus plans only exist during construction) through
+  * table and the q263 test; eager-construction queries (q232/q249/q373
+  * — whose corpus plans only exist during construction) through
   * QueryExecutionListener capture in the dedicated tests below.
   */
 class PlanPinSpec extends SparkSpec {
@@ -157,7 +157,7 @@ class PlanPinSpec extends SparkSpec {
   }
 
   // ---- eager-construction headliners (r11, VERDICT r10 item 3) ----
-  // q232/q249/q263/q373 return materialized literals / checkpoint
+  // q232/q249/q373 return materialized literals / checkpoint
   // scans, so their corpus plans only exist DURING construction: capture
   // every executed plan through a QueryExecutionListener and pin the
   // captured shapes. Counts use the FINAL AQE plan only (executed AQE
@@ -176,19 +176,11 @@ class PlanPinSpec extends SparkSpec {
       override def onFailure(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    // register on BOTH the suite session and the iterative loops'
-    // dedicated AQE-off clone (r14): graph loops execute there, and
-    // ExecutionListenerManager is per-session
-    val loopSession = graft.operators.Iterative.aqeOffSession(spark)
     spark.listenerManager.register(l)
-    loopSession.listenerManager.register(l)
     try {
       f
       org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    } finally {
-      spark.listenerManager.unregister(l)
-      loopSession.listenerManager.unregister(l)
-    }
+    } finally spark.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
     plans.asScala.toSeq
   }
@@ -265,15 +257,12 @@ class PlanPinSpec extends SparkSpec {
       "q373 lost its sign-signature cell assignment")
   }
 
-  test("q263 pagerank: every iteration joins hash/broadcast over persisted ranks") {
-    val ps = run("q263_pagerank")
-    assert(ps.nonEmpty)
-    for (p <- ps) {
-      assert(count(p, CART) == 0 && count(p, BNLJ) == 0)
-    }
-    // lineage control: iterations read the PERSISTED previous ranks
-    assert(ps.count(_.contains("InMemoryTableScan")) >= 2,
-      "q263 iterations no longer read persisted ranks")
+  test("q263 pagerank: one GraphIter node, no cartesian or nested-loop join") {
+    // the whole loop is one lazy plan: the edge derivation under one
+    // GraphIter node, whose supersteps run inside its exec
+    val p = planOf("q263_pagerank")
+    assert(count(p, "GraphIter") == 1, p)
+    assert(count(p, CART) == 0 && count(p, BNLJ) == 0, p)
   }
 
   test("pin predicates reject a deliberately de-optimized plan") {

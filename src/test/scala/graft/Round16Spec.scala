@@ -124,20 +124,55 @@ class Round16Spec extends SparkSpec {
 
   // ----------------------------------------------------------------- PageRank
 
-  /** Driver-side fixed-point replica (same integer ops). */
-  private def prReplay(edges: Seq[(String, String)], iters: Int): Map[String, Long] = {
-    val sym = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
-    val deg = sym.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-    val n = deg.size.toLong
+  /** In-memory fixed-point PageRank replica (same integer ops) over
+    * (src, dst, w) edges: uniform, personalized (`seed`) or weighted.
+    * Returns id → (deg or sw, pr).
+    */
+  private def prReplay[K](edges: Seq[(K, K, Long)], iters: Int, weighted: Boolean = false,
+                          seed: K => Boolean = (_: K) => true): Map[K, (Long, Long)] = {
+    val both = edges.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+    val sym = both.groupBy(e => (e._1, e._2))
+      .map { case (k, es) => k -> (if (weighted) es.map(_._3).sum else 1L) }
+    val sw = sym.groupBy(_._1._1).map { case (k, v) => k -> v.values.sum }
+    val n = sw.keys.count(seed).toLong
     val tele = (3L * PageRank.Scale) / (20L * n)
-    var pr = deg.map { case (k, _) => k -> PageRank.Scale / n }
+    var pr = sw.map { case (k, _) => k -> (if (seed(k)) PageRank.Scale / n else 0L) }
     (1 to iters).foreach { _ =>
-      val mass = sym.groupBy(_._2).map { case (dst, in) =>
-        dst -> in.map { case (src, _) => pr(src) / deg(src) }.sum
+      val mass = sym.groupBy(_._1._2).map { case (dst, in) =>
+        dst -> in.map { case ((src, _), w) => pr(src) * w / sw(src) }.sum
       }
-      pr = deg.map { case (k, _) => k -> (tele + (85L * mass.getOrElse(k, 0L)) / 100L) }
+      pr = sw.map { case (k, _) =>
+        k -> ((if (seed(k)) tele else 0L) + (85L * mass.getOrElse(k, 0L)) / 100L)
+      }
     }
-    pr
+    sw.map { case (k, s) => k -> (s, pr(k)) }
+  }
+
+  /** In-memory HITS replica: (id, side, score) rows. */
+  private def hitsReplay[K](edges: Seq[(K, K)], iters: Int): Set[(K, String, Long)] = {
+    val e = edges.distinct
+    def half(from: Map[K, Long], along: Seq[(K, K)]): Map[K, Long] = {
+      val raw = along.groupBy(_._2).map { case (t, in) => t -> in.map(p => from(p._1)).sum }
+      val d = math.max(raw.values.sum / PageRank.Scale, 1L)
+      raw.map { case (k, x) => k -> x / d }
+    }
+    val hubs = e.map(_._1).distinct
+    var h = hubs.map(_ -> PageRank.Scale / hubs.size).toMap
+    var a = Map.empty[K, Long]
+    (1 to iters).foreach { _ => a = half(h, e); h = half(a, e.map(_.swap)) }
+    h.map { case (k, x) => (k, "hub", x) }.toSet ++ a.map { case (k, x) => (k, "auth", x) }
+  }
+
+  /** In-memory label propagation replica: majority label, ties → smallest. */
+  private def lpaReplay[K: Ordering](edges: Seq[(K, K)], iters: Int): Map[K, K] = {
+    val sym = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+    var lab = sym.map(e => e._1 -> e._1).toMap
+    (1 to iters).foreach { _ =>
+      lab = sym.groupBy(_._2).map { case (v, in) =>
+        v -> in.groupBy(e => lab(e._1)).iterator.map { case (l, es) => (-es.size, l) }.min._2
+      }
+    }
+    lab
   }
 
   test("PageRank matches the driver replay exactly on a known graph") {
@@ -145,10 +180,58 @@ class Round16Spec extends SparkSpec {
     val df = edges.toDF("s", "t")
     val got = PageRank.run(df, "s", "t", iters = 3)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    val exp = prReplay(edges, 3)
+    val exp = prReplay(edges.map { case (a, b) => (a, b, 1L) }, 3).map { case (k, v) => k -> v._2 }
     assert(got == exp)
     // hub c (deg 3) outranks pendant d (deg 1)
     assert(got("c") > got("d"))
+  }
+
+  /** A seeded random multigraph over `v` vertices: repeated pairs,
+    * both orientations and self-loops included, weights 1..5.
+    */
+  private def randomGraph(seed: Int, v: Int, e: Int): Seq[(Long, Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(e)((rnd.nextInt(v).toLong * 7919L, rnd.nextInt(v).toLong * 7919L, 1L + rnd.nextInt(5)))
+  }
+
+  test("all five graph operators equal their replays on 1 and 8 pieces, long and string ids") {
+    import graft.operators.{Hits, LabelProp}
+    for (g <- Seq(1, 2); asString <- Seq(false, true)) {
+      val raw = randomGraph(g, 24, 70)
+      def id(x: Long): Any = if (asString) s"v$x" else x
+      val edges = raw.map { case (a, b, w) => (id(a), id(b), w) }
+      val seeds = edges.take(3).map(_._1).toSet
+      val df0 = if (asString) raw.map { case (a, b, w) => (s"v$a", s"v$b", w) }.toDF("s", "t", "w")
+                else raw.toDF("s", "t", "w")
+      for (pieces <- Seq(1, 8)) {
+        val df = df0.repartition(pieces)
+        val tag = s"graph $g, ${if (asString) "string" else "long"} ids, $pieces pieces"
+        def ranks(out: org.apache.spark.sql.DataFrame) =
+          out.collect().map(r => r.get(0) -> (r.getLong(1), r.getLong(2))).toMap
+        val pairs = edges.map(e => (e._1, e._2))
+        assert(ranks(PageRank.run(df, "s", "t", 3)) ==
+          prReplay(edges.map(e => (e._1, e._2, 1L)), 3), s"PageRank, $tag")
+        assert(ranks(PageRank.runPersonalized(df, "s", "t", 3, _.isin(seeds.toSeq: _*))) ==
+          prReplay(edges.map(e => (e._1, e._2, 1L)), 3, seed = seeds), s"PPR, $tag")
+        assert(ranks(PageRank.runWeighted(df, "s", "t", "w", 3)) ==
+          prReplay(edges, 3, weighted = true), s"weighted PageRank, $tag")
+        assert(Hits.run(df, "s", "t", 2).collect().map(r => (r.get(0), r.getString(1), r.getLong(2)))
+          .toSet == hitsReplay(pairs, 2), s"HITS, $tag")
+        val lab = LabelProp.run(df, "s", "t", 2).collect().map(r => r.get(0) -> r.get(1)).toMap
+        val exp = if (asString) lpaReplay(pairs.map(p => (p._1.toString, p._2.toString)), 2)
+                  else lpaReplay(pairs.map(p => (p._1.asInstanceOf[Long], p._2.asInstanceOf[Long])), 2)
+        assert(lab == exp, s"LabelProp, $tag")
+      }
+    }
+  }
+
+  test("an all-false PPR seed fails when the plan executes, not when it is built") {
+    val df = Seq("a" -> "b", "b" -> "c").toDF("s", "t")
+    val (out, jobs) = jobsWhile(PageRank.runPersonalized(df, "s", "t", 2, _ => lit(false)))
+    assert(jobs == 0)
+    val e = intercept[Exception](out.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("at least one seed vertex")), e.toString)
   }
 
   test("Personalized PageRank: non-seed vertices hold no teleport mass at iter 1") {
