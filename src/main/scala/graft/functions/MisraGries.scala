@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions.udaf
   * shuffle-every-word aggregation with a bounded sketch plus a
   * candidate-only aggregation.  The sketch alone gives approximate
   * counts; the verify pass makes the reported top-k EXACT (same
-  * sketch-then-verify shape as BloomGate).
+  * sketch-then-verify shape as the bloom pre-filter,
+  * [[graft.plans.BloomFilterNode]]).
   *
   * Buffer: Map[item → counter].  The merge sums counters, then applies
   * the MG decrement: subtract the (k+1)-largest counter from all and
@@ -215,9 +216,9 @@ object MisraGries {
     * same one-row parquet every call, which costs a full Spark job per
     * probe — the dominant per-call overhead once the fit is amortized.
     * Keyed by the staging directory's modification time, so a re-fit
-    * (overwrite) invalidates; bounded LRU like BloomGate's broadcast
-    * cache. Correctness does not depend on freshness — a stale sketch
-    * only risks the exact fallback via certification.
+    * (overwrite) invalidates; bounded LRU. Correctness does not depend
+    * on freshness — a stale sketch only risks the exact fallback via
+    * certification.
     */
   private val sketchCache =
     new java.util.LinkedHashMap[String, (Long, (Array[String], Long, Int))](

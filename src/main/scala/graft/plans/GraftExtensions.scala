@@ -14,10 +14,11 @@ import graft.text.SimHash64
   * }}}
   *
   * (SURVEY §4.3: the extension surface is function registration only.
-  * graft's four planner strategies — [[GroupTopKStrategy]],
-  * [[CarryScanStrategy]], [[ComponentsStrategy]] and [[GraphIterStrategy]]
-  * — are installed on the session that builds the Dataset by
-  * [[GroupTopK.register]], which every operator's Dataset factory calls.)
+  * graft's five planner strategies — [[GroupTopKStrategy]],
+  * [[CarryScanStrategy]], [[ComponentsStrategy]], [[GraphIterStrategy]]
+  * and [[BloomFilterStrategy]] — are installed on the session that
+  * builds the Dataset by [[GroupTopK.register]], which every operator's
+  * Dataset factory calls.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

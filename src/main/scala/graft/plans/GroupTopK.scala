@@ -103,14 +103,14 @@ object GroupTopKStrategy extends SparkStrategy {
 object GroupTopK {
 
   /** Register graft's planning strategies ([[GroupTopKStrategy]],
-    * [[CarryScanStrategy]], [[ComponentsStrategy]], [[GraphIterStrategy]])
-    * on a live session (idempotent).
+    * [[CarryScanStrategy]], [[ComponentsStrategy]], [[GraphIterStrategy]],
+    * [[BloomFilterStrategy]]) on a live session (idempotent).
     */
   def register(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     exp.synchronized {
       val missing = Seq(GroupTopKStrategy, CarryScanStrategy, ComponentsStrategy,
-          GraphIterStrategy).filterNot(exp.extraStrategies.contains)
+          GraphIterStrategy, BloomFilterStrategy).filterNot(exp.extraStrategies.contains)
       if (missing.nonEmpty) exp.extraStrategies = exp.extraStrategies ++ missing
     }
   }

@@ -125,21 +125,21 @@ object Round47Queries {
     // pair-shaped, so the q54 quadratic-output caveat and its bounded
     // twins (q55 banding) apply unchanged.
     "q409_containment_dup" -> QueryDef(
-      // r12b: reuses q54's gated pair-counting core (adaptive singleton
-      // bloom pre-filter + PackedPairs) instead of re-implementing the
-      // pipeline. Same-run salted smoke pins the cost AT q54-parity
+      // r12b: reuses q54's gated pair-counting core (PairCounts: the
+      // adaptive singleton bloom pre-filter + PackedPairs) instead of
+      // re-implementing the pipeline. Same-run salted smoke pins the
+      // cost AT q54-parity
       // (100×: q409 28.4 s vs q54 28.8 s; factors 15.5× vs 13.4× —
       // both the exact metric's own growth on this machine state, see
       // BASELINE round-12b smoke note).
       (s, d) => {
-        val docs = Tables.documents(s, d)
-        graft.text.ScaleGuidance.checkExactPairs(docs, "q409_containment_dup")
-        val (common, sizes) = TextQueries.gatedPairCounts(docs)
+        val (common, sizes) = TextQueries.shinglePairCounts(
+          Tables.documents(s, d), "q409_containment_dup")
         common
           .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
           .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
           .withColumn("cont", Num.rnd(
-            col("common").cast("double") / least(col("n1"), col("n2")), 6))
+            col("n_shared").cast("double") / least(col("n1"), col("n2")), 6))
           .filter(col("cont") >= 0.8)
           .select(col("id1"), col("id2"), col("cont"))
       },

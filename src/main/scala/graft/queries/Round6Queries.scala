@@ -341,7 +341,8 @@ object Round6Queries {
       // story (the w=1 index exceeds single-node spill space at the
       // 100×-salted tier; q198 is the bounded twin that runs it).
       (s, d) => graft.text.SubstringDup.pairs(
-        Tables.documents(s, d), "doc_id", "text", k = 20, w = 1, minShared = 25),
+        Tables.fanout(Tables.documents(s, d), d, "documents"),
+        "doc_id", "text", k = 20, w = 1, minShared = 25),
       Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
                  FROM documents WHERE length(text) >= 20),
              pos AS (SELECT doc_id, text,
@@ -817,26 +818,22 @@ object Round6Queries {
                ON a.term = b.term AND a.source < b.source
              GROUP BY 1, 2""")),
 
-    // q161's decontamination with a BLOOM PRE-FILTER (BloomGate: the
-    // same BloomFilterAggregate/MightContain pair Spark's runtime
-    // row-level filtering injects) — the at-scale shape when the eval
-    // gram set is too large to broadcast as rows: corpus grams that
-    // fail the bloom drop AT THE SCAN, before any shuffle; the exact
-    // join over surviving candidates removes false positives, so the
-    // result (and the oracle) is IDENTICAL to the exact q161.
+    // q161's decontamination with a BLOOM PRE-FILTER (BloomFilterNode:
+    // a bloom of the eval grams, built and broadcast when the plan
+    // executes) — the at-scale shape when the eval gram set is too
+    // large to broadcast as rows: corpus grams that fail the bloom drop
+    // AT THE SCAN, before any shuffle; the exact join over surviving
+    // candidates removes false positives, so the result (and the
+    // oracle) is IDENTICAL to the exact q161.
     "q189_decontam_bloom" -> QueryDef(
       (s, d) => {
         val sh = Tables.documents(s, d)
           .select(col("doc_id"), Shingles.shingles(col("text"), 3).as("sh"))
-          .cache()
         val evalGrams = sh.filter(col("doc_id") % 37 === 0)
-          .select(explode(col("sh")).as("g")).distinct().cache()
-        val bloom = graft.text.BloomGate.build(evalGrams, col("g"),
-          expectedItems = math.max(evalGrams.count(), 1L))
+          .select(explode(col("sh")).as("g")).distinct()
         val train = sh.filter(col("doc_id") % 37 =!= 0)
-        val candidates = train
-          .select(col("doc_id"), explode(col("sh")).as("g"))
-          .filter(graft.text.BloomGate.mightContain(bloom, col("g")))
+        val candidates = graft.plans.BloomFilterNode.filter(
+          train.select(col("doc_id"), explode(col("sh")).as("g")), col("g"), evalGrams)
         val hits = candidates.join(evalGrams, "g") // exact verify
           .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
         train.select(col("doc_id"), size(col("sh")).cast("long").as("n_grams"))
@@ -865,8 +862,9 @@ object Round6Queries {
              FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id""")),
 
     // q189's bloom gate running INCREMENTALLY: streamed documents,
-    // bloom literal in the microbatch plan, stream-static exact verify,
-    // one stateful per-source aggregation. Oracle = the batch SQL.
+    // a bloom of the static eval grams built in each microbatch's
+    // execution, stream-static exact verify, one stateful per-source
+    // aggregation. Oracle = the batch SQL.
     "q190_stream_decontam" -> QueryDef(
       (s, d) => graft.streaming.DocStreams.decontamGate(s, d),
       Some(s"""WITH ${TextQueries.shingleCte},

@@ -257,7 +257,8 @@ object Round7Queries {
     // at k=20) — the sampling is checked, not assumed.
     "q198_substring_dup_winnowed" -> QueryDef(
       (s, d) => graft.text.SubstringDup.pairs(
-        Tables.documents(s, d), "doc_id", "text", k = 20, w = 8, minShared = 5),
+        Tables.fanout(Tables.documents(s, d), d, "documents"),
+        "doc_id", "text", k = 20, w = 8, minShared = 5),
       Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
                  FROM documents WHERE length(text) >= 27),
              pos AS (SELECT doc_id, text, n,

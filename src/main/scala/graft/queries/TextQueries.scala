@@ -19,37 +19,31 @@ object TextQueries {
     * equivalents are [[graft.text.MinHash]] LSH (q55_minhash_lsh /
     * q166_minhash_dedup end-to-end), [[graft.text.ExactNearDup]]
     * prefix filtering for t ≥ 0.8 (q138), and [[graft.text.SimHash]]
-    * (q56). A [[graft.text.ScaleGuidance]] warning fires at plan-build
-    * time when the input's Catalyst size estimate exceeds
-    * `spark.graft.exactPairs.warnBytes` (default 1 GiB).
+    * (q56); [[graft.text.PairCounts]] warns at plan-build time.
     */
   def exactPairs(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val docs = Tables.documents(s, d)
-    graft.text.ScaleGuidance.checkExactPairs(docs, "TextQueries.exactPairs")
-    val (common, sizes) = gatedPairCounts(docs)
+    val (common, sizes) = shinglePairCounts(Tables.documents(s, d), "TextQueries.exactPairs")
     common
       .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
       .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
       .withColumn("jaccard", Num.rnd(
-        col("common").cast("double") / (col("n1") + col("n2") - col("common")), 6))
+        col("n_shared").cast("double") / (col("n1") + col("n2") - col("n_shared")), 6))
       .filter(col("jaccard") >= 0.5)
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** The shared gated pair-counting core (q54 Jaccard, q409
-    * containment): distinct-3-shingle inverted index with the ADAPTIVE
-    * singleton bloom pre-filter, map-side PackedPairs expansion and
-    * partial-agg counts. Returns (common(id1, id2, common),
+  /** The shared 3-shingle pair counts of q54 (Jaccard) and q409
+    * (containment): [[graft.text.PairCounts]] over the distinct-shingle
+    * inverted index. Returns (common(id1, id2, n_shared),
     * sizes(doc_id, n)).
     */
-  private[queries] def gatedPairCounts(docs: org.apache.spark.sql.DataFrame):
+  private[queries] def shinglePairCounts(docs: org.apache.spark.sql.DataFrame, op: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val sh = Shingles.cachedSets(docs, "doc_id", "text", 3)
       // ^ shared with q55's identical subplan via CacheManager — cache
       //   once, silently (r11: the second cache() logged a spurious
       //   "already cached" warning in the bench tail); r13: fanned out
       //   + carries the set size as a cached column (see cachedSets)
-    val sizes = sh.select(col("doc_id"), col("n"))
     // Keyed by the shingle STRING, deliberately: keying by xxhash64(s)
     // (8-byte shuffle keys) was measured FASTER at sf0.1 (1.54s vs
     // 1.72s warm) but 30% SLOWER on the 10×-cloned smoke corpus
@@ -58,52 +52,7 @@ object TextQueries {
     // adds scan CPU. The duplication-heavy regime is the one near-dup
     // detection exists for, so the string key stays.
     val inv = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-    // ADAPTIVE singleton pre-filter (same decision pass as q169): on a
-    // real corpus most shingles occur in exactly one document and
-    // contribute no pairs, yet they dominate the Exchange and the
-    // collect_list object-agg. One HLL sketch pass (partial-agg only)
-    // estimates the singleton fraction; when singleton-dominated, an
-    // exact duplicated-shingle set is bloomed and the heavy machinery
-    // only sees candidates. A bloom false positive admits a singleton
-    // whose 1-element list dies at the size>=2 filter — exactness
-    // untouched. On a duplication-heavy corpus (the 10×-cloned smoke)
-    // the ratio is low and the gate is skipped outright — its build
-    // would cost more than it filters.
-    val st = inv.agg(count(lit(1)).as("rows"),
-      approx_count_distinct(col("s")).as("grams")).head()
-    val ratio = st.getLong(1).toDouble / math.max(st.getLong(0), 1L).toDouble
-    val gatedInv =
-      if (ratio < 0.6) inv
-      else {
-        val dups = inv.groupBy("s").agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2).select("s").cache()
-        val nDups = dups.count()
-        // the bloom is a driver-side literal once built — the dups
-        // cache has no consumers after it (r11 ownership)
-        val gated =
-          if (nDups == 0) inv.filter(lit(false))
-          else inv.filter(graft.text.BloomGate.mightContain(
-            graft.text.BloomGate.build(dups, col("s"), nDups), col("s")))
-        dups.unpersist(blocking = false)
-        gated
-      }
-    // group the inverted index by shingle and expand doc-id pairs
-    // map-side; singleton shingles contribute no pairs and are
-    // filtered free.
-    val lists = gatedInv.groupBy("s")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    // |A∩B| per packed (id1,id2) key
-    val common = lists.select(explode(
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          graft.text.PackedPairs(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("ds"))))).as("pk"))
-      .groupBy("pk")
-      .agg(count(lit(1)).as("common"))
-      .select(shiftrightunsigned(col("pk"), 32).as("id1"),
-        col("pk").bitwiseAND(lit(0xffffffffL)).as("id2"),
-        col("common"))
-    (common, sizes)
+    (graft.text.PairCounts(docs, inv, op), sh.select(col("doc_id"), col("n")))
   }
 
   /** Oracle CTE chain ending in `pairs(id1, id2, jaccard)` — the naive

@@ -371,29 +371,24 @@ object DocStreams {
   }
 
   /** Streaming bloom-gated decontamination (q189's gate, incremental):
-    * the eval-set bloom is built ONCE batch-side and rides the
-    * microbatch plan as a literal; arriving documents explode to
-    * grams, non-candidates drop at the scan via the codegen'd
-    * `BloomFilterMightContain`, and the stream-static join against the
-    * exact eval grams removes false positives — one stateful
+    * arriving documents explode to grams, non-candidates drop in the
+    * scan stage at a [[graft.plans.BloomFilterNode]] over the static
+    * eval grams (the node builds and broadcasts the bloom when each
+    * microbatch's plan executes), and the stream-static join against
+    * the exact eval grams removes false positives — one stateful
     * aggregation (per-source hit totals), state keyed by source only.
     * At 100 TB this is the live-ingest contamination monitor: the
     * bloom is the only thing every executor holds of a 10⁹-gram eval
     * set.
     */
   def decontamGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.{BloomGate, Shingles}
-    val sh = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), Shingles.shingles(col("text"), 3).as("sh"))
-    val evalGrams = sh.filter(col("doc_id") % 37 === 0)
-      .select(explode(col("sh")).as("g")).distinct().cache()
-    val bloom = BloomGate.build(evalGrams, col("g"),
-      expectedItems = math.max(evalGrams.count(), 1L))
-    val stream = docStream(spark, sfDir)
-    val hits = stream.filter(col("doc_id") % 37 =!= 0)
-      .select(col("source"),
-        explode(Shingles.shingles(col("text"), 3)).as("g"))
-      .filter(BloomGate.mightContain(bloom, col("g")))
+    import graft.text.Shingles
+    val evalGrams = graft.Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 37 === 0)
+      .select(explode(Shingles.shingles(col("text"), 3)).as("g")).distinct()
+    val grams = docStream(spark, sfDir).filter(col("doc_id") % 37 =!= 0)
+      .select(col("source"), explode(Shingles.shingles(col("text"), 3)).as("g"))
+    val hits = graft.plans.BloomFilterNode.filter(grams, col("g"), evalGrams)
       .join(evalGrams, "g") // stream-static exact verify
       .groupBy("source").agg(count(lit(1)).as("n_hits"))
     run(spark, hits, "graft_stream_decontam", "complete")

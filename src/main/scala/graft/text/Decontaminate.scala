@@ -10,16 +10,17 @@ import org.apache.spark.sql.functions._
   *
   * Not a reference operator (legate.pandas has no text surface); this
   * is training-pipeline surface built on the engine's shingle + bloom
-  * machinery ([[Shingles]], [[BloomGate]]).
+  * machinery ([[Shingles]], [[graft.plans.BloomFilterNode]]).
   *
-  * Scale shape (the BloomGate scaladoc's motivating pipeline): the
-  * eval set is orders of magnitude smaller than the corpus, but at
-  * 10⁹ distinct eval grams it does not broadcast as rows. So:
+  * Scale shape: the eval set is orders of magnitude smaller than the
+  * corpus, but at 10⁹ distinct eval grams it does not broadcast as rows.
+  * So:
   *
   *   1. distinct eval grams (one shuffle over the SMALL side),
   *   2. a bloom built from them gates the corpus-side exploded grams
   *      INSIDE the scan stage — non-candidate grams (the vast
-  *      majority) never reach a shuffle,
+  *      majority) never reach a shuffle; the node counts the eval grams
+  *      and sizes the bloom to them when the plan executes,
   *   3. an exact semi-join over the survivors removes bloom false
   *      positives, so the flags are exact and oracle-checkable.
   *
@@ -33,32 +34,15 @@ object Decontaminate {
     * with one row per corpus document. `hit_grams` counts the DISTINCT
     * n-grams of the document that occur anywhere in the eval set
     * (shingle sets are distinct by construction).
-    *
-    * `expectedEvalGrams` sizes the bloom (see BloomGate.build's clamp
-    * note); the default (≤ 0) SELF-SIZES by counting the cached eval
-    * grams first — one cheap job on the small side that keeps the
-    * per-partition partial filters (and their 32-way driver merge)
-    * proportional to the actual eval set instead of a worst-case bound
-    * (measured r12: a 4M-item default meant 5 MB partials and a 0.8 s
-    * single-task merge for a 200k-gram eval set).
     */
   def flag(corpus: DataFrame, idCol: String, textCol: String,
-           eval: DataFrame, evalTextCol: String, n: Int,
-           expectedEvalGrams: Long = 0L): DataFrame = {
-    // Two consumers (bloom build + verify join); cached so the eval set
-    // is shingled once. Small side by contract — at scale this is a
-    // persisted gram table reused across corpus batches.
+           eval: DataFrame, evalTextCol: String, n: Int): DataFrame = {
     val evalGrams = eval
       .select(explode(Shingles.shingles(col(evalTextCol), n)).as("g"))
       .distinct()
-      .cache()
-    val sizing =
-      if (expectedEvalGrams > 0) expectedEvalGrams
-      else math.max(evalGrams.count(), 1024L)
-    val bloom = BloomGate.build(evalGrams, col("g"), sizing)
-    val hits = corpus
+    val candidates = corpus
       .select(col(idCol), explode(Shingles.shingles(col(textCol), n)).as("g"))
-      .filter(BloomGate.mightContain(bloom, col("g")))
+    val hits = graft.plans.BloomFilterNode.filter(candidates, col("g"), evalGrams)
       // exact verify kills bloom FPs; BROADCAST: the eval-gram table is
       // small by contract (bounded eval suites vs unbounded corpus), and
       // the alternative is a sort-merge join that sorts every surviving
@@ -79,10 +63,8 @@ object Decontaminate {
     * table.
     */
   def clean(corpus: DataFrame, idCol: String, textCol: String,
-            eval: DataFrame, evalTextCol: String, n: Int,
-            expectedEvalGrams: Long = 0L): DataFrame = {
-    val bad = flag(corpus, idCol, textCol, eval, evalTextCol, n,
-      expectedEvalGrams)
+            eval: DataFrame, evalTextCol: String, n: Int): DataFrame = {
+    val bad = flag(corpus, idCol, textCol, eval, evalTextCol, n)
       .filter(col("contaminated"))
       .select(col(idCol))
     corpus.join(bad, Seq(idCol), "left_anti")

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Exact substring-duplication pairs (Lee et al. "Deduplicating
   * Training Data Makes Language Models Better" family): documents
@@ -20,13 +19,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * same tier in bounded space). `minShared` calibrates to the sampling
   * rate: the w=1 threshold t corresponds to ≈ t·2/(w+1) at window w.
   *
-  * The singleton pre-filter is ADAPTIVE (same decision as q54/q169
-  * inline history): one HLL sketch pass estimates the singleton
-  * fraction; the duplicated-gram bloom gate is built only when
-  * singleton-dominated (ratio ≥ 0.6) — its cost is unconditional but
-  * its benefit is not (a duplication-heavy corpus passes everything).
-  * Exactness is gate-independent: a bloom FP admits a singleton whose
-  * 1-element list dies at the size ≥ 2 filter.
+  * Pair counting is [[PairCounts]], whose adaptive singleton gate
+  * bloom-filters the index when most grams occur in one document.
   */
 object SubstringDup {
 
@@ -35,35 +29,13 @@ object SubstringDup {
     val g = docs
       .filter(length(col(textCol)) >= k + w - 1)
       .select(col(idCol), Fingerprint.winnowSetLong(col(textCol), k, w).as("hs"))
-      .cache()
     val sizes = g.select(col(idCol), size(col("hs")).as("ng"))
-    val inv = g.select(col(idCol), explode(col("hs")).as("h"))
-    val st = inv.agg(count(lit(1)).as("rows"),
-      approx_count_distinct(col("h")).as("grams")).head()
-    val gramRatio =
-      st.getLong(1).toDouble / math.max(st.getLong(0), 1L).toDouble
-    val gated =
-      if (gramRatio < 0.6) inv // duplication-heavy: gate can't pay
-      else {
-        val dups = inv.groupBy("h").agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2).select("h").cache()
-        val nDups = dups.count()
-        if (nDups == 0) inv.filter(lit(false))
-        else inv.filter(BloomGate.mightContain(
-          BloomGate.build(dups, col("h"), nDups), col("h")))
-      }
-    val lists = gated
-      .groupBy("h")
-      .agg(sort_array(collect_list(col(idCol))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val common = lists.select(explode(ColumnBridge.column(
-        PackedPairs(ColumnBridge.expression(col("ds"))))).as("pk"))
-      .groupBy("pk")
-      .agg(count(lit(1)).as("n_shared"))
-      .select(shiftrightunsigned(col("pk"), 32).as("id1"),
-        col("pk").bitwiseAND(lit(0xffffffffL)).as("id2"),
-        col("n_shared"))
-    common
+    // explode_outer: an inner explode infers `size(hs) > 0`, which the
+    // optimizer pushes below the caller's fan-out exchange, so the
+    // fingerprints would be computed twice, the first time in one task
+    // (hs is never empty after the length filter, so the rows are equal)
+    val inv = g.select(col(idCol), explode_outer(col("hs")).as("h"))
+    PairCounts(docs, inv, "SubstringDup.pairs")
       .join(sizes.select(col(idCol).as("id1"), col("ng").as("ng1")), "id1")
       .join(sizes.select(col(idCol).as("id2"), col("ng").as("ng2")), "id2")
       .filter(col("n_shared") >= minShared)

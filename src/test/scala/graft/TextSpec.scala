@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.functions.StringOps
 import graft.text.{MinHash, Shingles, SimHash, TextStats}
@@ -239,43 +241,60 @@ class TextSpec extends SparkSpec {
     } finally spark.conf.unset(ScaleGuidance.WarnBytesConf)
   }
 
-  test("BloomGate: no false negatives, bounded false positives, codegen expr") {
-    import graft.text.BloomGate
-    val members = (0L until 2000L).map(i => s"gram_$i")
-    val df = members.toDF("g")
-    val bloom = BloomGate.build(df, col("g"), expectedItems = 2000)
-    // every member passes (bloom admits no false negatives)
-    assert(df.filter(BloomGate.mightContain(bloom, col("g"))).count() == 2000)
-    // non-members mostly fail (10 bits/item -> ~1% fpp; allow 5%)
+  test("BloomFilterNode: no false negatives, bounded false positives, on 1 and 8 pieces") {
+    import graft.plans.BloomFilterNode
+    val members = (0L until 2000L).map(i => s"gram_$i").toDF("g")
     val probes = (0L until 2000L).map(i => s"absent_$i").toDF("g")
-    val fp = probes.filter(BloomGate.mightContain(bloom, col("g"))).count()
-    assert(fp < 100, s"false-positive count $fp")
-    // the predicate is a Catalyst expression, not a UDF
-    val plan = probes.filter(BloomGate.mightContain(bloom, col("g")))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("UDF"), plan)
+    for (pieces <- Seq(1, 8)) {
+      val keys = members.repartition(pieces)
+      // every member passes (bloom admits no false negatives)
+      assert(BloomFilterNode.filter(members.repartition(pieces), col("g"), keys)
+        .count() == 2000, s"$pieces pieces")
+      // non-members mostly fail (10 bits/item -> ~1% fpp; allow 5%)
+      val gated = BloomFilterNode.filter(probes.repartition(pieces), col("g"), keys)
+      val fp = gated.count()
+      assert(fp < 100, s"false-positive count $fp on $pieces pieces")
+      // the filter is the plan node, not a UDF
+      val plan = gated.queryExecution.executedPlan.toString
+      assert(plan.contains("BloomFilter") && !plan.contains("UDF"), plan)
+    }
   }
 
-  test("BloomGate: build raises the silent size-clamp confs and restores them") {
-    import graft.text.BloomGate
-    // BloomFilterAggregate silently clamps to these confs; with a tiny
-    // clamp a 20k-item build would saturate (~100% false positives)
+  test("BloomFilterNode: sized by its own count, leaving the session's bloom confs alone") {
+    import graft.plans.BloomFilterNode
+    // Spark's BloomFilterAggregate clamps to these confs; the node does
+    // not read them, so with a tiny clamp a 20k-key filter still gates
     val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     spark.conf.set(itemsKey, "64")
     spark.conf.set(bitsKey, "512")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val probe = new Thread(() => while (!done.get) {
+      seen.add((spark.conf.get(itemsKey), spark.conf.get(bitsKey)))
+      Thread.sleep(1)
+    })
     try {
-      val df = spark.range(0, 20000).toDF("v")
-      val bloom = BloomGate.build(df, col("v"), expectedItems = 20000)
+      probe.start()
+      val keys = spark.range(0, 20000).toDF("v")
       val probes = spark.range(100000, 110000).toDF("v")
-      val fp = probes.filter(BloomGate.mightContain(bloom, col("v"))).count()
-      assert(fp < 1000, s"filter saturated despite raise: fp=$fp/10000")
-      // caller's confs come back exactly as they were
-      assert(spark.conf.get(itemsKey) == "64")
-      assert(spark.conf.get(bitsKey) == "512")
+      val fp = BloomFilterNode.filter(probes, col("v"), keys).count()
+      assert(fp < 1000, s"filter saturated: fp=$fp/10000")
+      done.set(true)
+      probe.join()
+      // a concurrent reader of the session saw only the caller's values
+      assert(!seen.isEmpty && seen.asScala.toSet == Set(("64", "512")), seen)
     } finally {
+      done.set(true)
       spark.conf.unset(itemsKey)
       spark.conf.unset(bitsKey)
     }
+  }
+
+  test("BloomFilterNode: an empty keys side passes no row") {
+    import graft.plans.BloomFilterNode
+    val big = (0L until 100L).map(i => s"gram_$i").toDF("g").repartition(3)
+    val none = big.filter(lit(false))
+    assert(BloomFilterNode.filter(big, col("g"), none).count() == 0)
   }
 }
