@@ -31,12 +31,9 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val mt =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(path)
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(hp).getModificationTime
-      } catch { case _: java.io.IOException => -1L }
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val mt = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(hp).getModificationTime // FileNotFoundException naming path
     if (relCache.size > 256) relCache.clear() // plans are cheap to rebuild
     relCache.computeIfAbsent(
       (ColumnBridge.sessionUUID(spark), path, mt),

@@ -1,71 +1,30 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 
-/** KMV (k-minimum-values) distinct-count sketch as a typed mergeable
-  * [[Aggregator]] — the proper distributed shape: map-side partial
-  * sketches (k smallest DISTINCT hash values per group per partition)
-  * merge associatively before the shuffle, so the exchange carries at
-  * most k hashes per (partition, group) regardless of input size — the
-  * `sum`-shaped dataflow, applied to approximate nunique.
+/** KMV (k-minimum-values) distinct-count sketch: the k smallest DISTINCT
+  * hash values per group ([[TopKMinAgg]], a mergeable aggregate whose
+  * map-side partial sketches merge before the shuffle, so the exchange
+  * carries at most k hashes per (partition, group) regardless of input
+  * size — the `sum`-shaped dataflow, applied to approximate nunique)
+  * plus an estimate over them.
   *
   * Input is the 12-hex-char md5 prefix (48 bits — exact in a double);
   * the estimate is (k−1)/u_k with u_k the kth smallest normalized hash,
   * or the exact distinct count when fewer than k hashes were seen.
   * Deterministic: same input set → same sketch → same estimate, which
   * is what lets a SQL oracle recompute it (q154).
-  *
-  * Buffer: sorted ascending array of ≤ k distinct hash strings.
   */
-class KmvAgg(k: Int) extends Aggregator[String, Array[String], Double] {
-
-  override def zero: Array[String] = Array.empty
-
-  override def reduce(buf: Array[String], h: String): Array[String] = {
-    if (h == null) return buf
-    if (buf.length == k && buf(k - 1) <= h) return buf // too large, full
-    val pos = java.util.Arrays.binarySearch(buf.asInstanceOf[Array[AnyRef]], h)
-    if (pos >= 0) return buf // duplicate hash
-    val ins = -pos - 1
-    val n = math.min(buf.length + 1, k)
-    val out = new Array[String](n)
-    System.arraycopy(buf, 0, out, 0, ins)
-    out(ins) = h
-    System.arraycopy(buf, ins, out, ins + 1, n - ins - 1)
-    out
-  }
-
-  override def merge(a: Array[String], b: Array[String]): Array[String] = {
-    // merge two sorted distinct arrays, keep k smallest
-    val out = new Array[String](math.min(a.length + b.length, k))
-    var i = 0; var j = 0; var n = 0
-    var last: String = null
-    while (n < out.length && (i < a.length || j < b.length)) {
-      val take =
-        if (j >= b.length || (i < a.length && a(i) <= b(j))) { val v = a(i); i += 1; v }
-        else { val v = b(j); j += 1; v }
-      if (take != last) { out(n) = take; n = n + 1; last = take }
-    }
-    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
-  }
-
-  override def finish(buf: Array[String]): Double =
-    if (buf.isEmpty) 0.0
-    else if (buf.length < k) buf.length.toDouble
-    else (k - 1).toDouble / (java.lang.Long.parseLong(buf(k - 1), 16).toDouble / KmvAgg.SPACE)
-
-  override def bufferEncoder: Encoder[Array[String]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[String]]()
-  override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-}
-
 object KmvAgg {
   /** 16^12 — the 12-hex-digit hash space, for normalizing u_k. */
   val SPACE: Double = math.pow(16.0, 12)
 
   /** Column form: approximate nunique of `hashCol` (12-hex md5 prefix). */
-  def kmv(hashCol: Column, k: Int = 64): Column =
-    udaf(new KmvAgg(k), Encoders.STRING).apply(hashCol)
+  def kmv(hashCol: Column, k: Int = 64): Column = {
+    val mins = TopKMinAgg.topkMin(hashCol, k)
+    when(size(mins) < k, size(mins).cast("double"))
+      .otherwise(lit((k - 1).toDouble) /
+        (conv(get(mins, lit(k - 1)), 16, 10).cast("double") / lit(SPACE)))
+  }
 }

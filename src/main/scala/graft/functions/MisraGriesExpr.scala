@@ -4,27 +4,35 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Misra–Gries heavy-hitters aggregate: the same sketch
-  * semantics as the udaf twin [[MisraGries]] (reduce: present → +1,
-  * room → insert, else decrement-all-drop-zeros; merge: sum then
-  * subtract the (k+1)-largest), but over a MUTABLE java HashMap read
-  * straight from the row — the udaf's immutable-Map buffer copies a
-  * HAMT path per token (≈5 allocations/token, the q232 sketch-pass
-  * hotspot). Candidate-set guarantee is identical (every item with
-  * true frequency > N/(k+1) survives), so topKFrequent's
-  * certify-or-fallback logic is unaffected by the swap.
-  *
-  * Returns the sorted candidate array, same as the twin.
-  */
-final class MGBuffer(val m: java.util.HashMap[String, Long])
+/** Buffer of [[MisraGriesExpr]]: the MG counters and the item total. */
+final class MGBuffer(val m: java.util.HashMap[String, Long], var total: Long)
 
+/** Native Misra–Gries heavy-hitters aggregate: the sketch semantics of
+  * the boxed twin [[MisraGries]] (reduce: present → +1, room → insert,
+  * else decrement-all-drop-zeros; merge: sum then subtract the
+  * (k+1)-largest), over a MUTABLE java HashMap — the twin's
+  * immutable-Map buffer copies a HAMT path per item. Every item with
+  * true frequency > N/(k+1) survives.
+  *
+  * The items come from the child's data type ([[MisraGriesExpr.foreachItem]]):
+  * a `string` child gives its whitespace tokens, an `array<string>`
+  * child its non-null elements (pass an item column as `array(col)`).
+  * The text form needs no Generate stage, and since explode never
+  * splits one document's tokens across partitions, its per-partition
+  * sketches are the exploded form's exactly.
+  *
+  * Returns struct(cand array<string> sorted, n bigint): the candidates
+  * and the item total from one pass — the sketch row
+  * [[MisraGries.fitSketch]] persists.
+  */
 case class MisraGriesExpr(child: Expression, k: Int,
                           mutableAggBufferOffset: Int = 0,
                           inputAggBufferOffset: Int = 0)
@@ -32,16 +40,18 @@ case class MisraGriesExpr(child: Expression, k: Int,
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def dataType: DataType = StructType(Seq(
+    StructField("cand", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("n", LongType, nullable = false)))
   override def prettyName: String = "misra_gries"
+  override def checkInputDataTypes(): TypeCheckResult = MisraGriesExpr.checkItems(child)
 
   override def createAggregationBuffer(): MGBuffer =
-    new MGBuffer(new java.util.HashMap[String, Long](k * 2))
+    new MGBuffer(new java.util.HashMap[String, Long](k * 2), 0L)
 
   override def update(b: MGBuffer, input: InternalRow): MGBuffer = {
     val v = child.eval(input)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String].toString
+    if (v != null) MisraGriesExpr.foreachItem(child.dataType, v) { s =>
       val m = b.m
       // counters in the map are always ≥ 1, so 0 ⟺ absent (getOrDefault
       // avoids the null-unboxing trap of java HashMap.get)
@@ -56,6 +66,7 @@ case class MisraGriesExpr(child: Expression, k: Int,
           if (e.getValue <= 1L) it.remove() else e.setValue(e.getValue - 1L)
         }
       }
+      b.total += 1L
     }
     b
   }
@@ -81,6 +92,7 @@ case class MisraGriesExpr(child: Expression, k: Int,
         if (e.getValue <= cut) ei.remove() else e.setValue(e.getValue - cut)
       }
     }
+    x.total += y.total
     x
   }
 
@@ -90,12 +102,14 @@ case class MisraGriesExpr(child: Expression, k: Int,
     val ki = b.m.keySet().iterator()
     while (ki.hasNext) { keys(i) = ki.next(); i += 1 }
     java.util.Arrays.sort(keys, java.util.Comparator.naturalOrder[String]())
-    new GenericArrayData(keys.map(UTF8String.fromString(_: String)))
+    new GenericInternalRow(Array[Any](
+      new GenericArrayData(keys.map(UTF8String.fromString(_: String))), b.total))
   }
 
   override def serialize(b: MGBuffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
+    out.writeLong(b.total)
     out.writeInt(b.m.size)
     val it = b.m.entrySet().iterator()
     while (it.hasNext) {
@@ -111,6 +125,7 @@ case class MisraGriesExpr(child: Expression, k: Int,
 
   override def deserialize(bytes: Array[Byte]): MGBuffer = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val total = in.readLong()
     val n = in.readInt()
     val m = new java.util.HashMap[String, Long](n * 2)
     var i = 0
@@ -122,7 +137,7 @@ case class MisraGriesExpr(child: Expression, k: Int,
         in.readLong())
       i += 1
     }
-    new MGBuffer(m)
+    new MGBuffer(m, total)
   }
 
   override def withNewMutableAggBufferOffset(o: Int): MisraGriesExpr =
@@ -134,8 +149,113 @@ case class MisraGriesExpr(child: Expression, k: Int,
 }
 
 object MisraGriesExpr {
-  /** `mg(k)(itemCol)` → sorted candidate array (native path). */
+  /** `MisraGriesExpr(k)(items)` → struct(cand sorted array, n item total). */
   def apply(k: Int)(c: Column): Column =
     ColumnBridge.column(
       MisraGriesExpr(ColumnBridge.expression(c), k).toAggregateExpression())
+
+  private[functions] def checkItems(child: Expression): TypeCheckResult =
+    child.dataType match {
+      case _: StringType | ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"items must be a string (whitespace tokens) or array<string>, not ${t.simpleString}")
+    }
+
+  /** The items of one non-null child value, in order: the non-empty
+    * space-separated tokens of a string (`TextStats.tokensNonEmpty`),
+    * or the non-null elements of an array of strings.
+    */
+  private[functions] def foreachItem(dt: DataType, v: Any)(f: String => Unit): Unit =
+    dt match {
+      case _: StringType =>
+        val s = v.asInstanceOf[UTF8String].toString
+        val len = s.length
+        var i = 0
+        while (i < len) {
+          var j = s.indexOf(' ', i)
+          if (j < 0) j = len
+          if (j > i) f(s.substring(i, j))
+          i = j + 1
+        }
+      case _ =>
+        val a = v.asInstanceOf[ArrayData]
+        var i = 0
+        while (i < a.numElements()) {
+          if (!a.isNullAt(i)) f(a.getUTF8String(i).toString)
+          i += 1
+        }
+    }
+}
+
+/** Exact per-candidate item counts + the current item total in ONE
+  * pass, over the same items as [[MisraGriesExpr]]: buffer =
+  * long[cand.size + 1] (last slot = total). This is the certify half of
+  * the heavy-hitters plan ([[MisraGries.topKFrequent]]) without an
+  * explode or an InSet-filtered string hash-agg — the exchange carries
+  * one fixed-size long array per partition however large the corpus.
+  * Slot lookup is a per-executor HashMap built once per task from the
+  * broadcast expression.
+  */
+case class CandTokenCountsExpr(child: Expression, cand: Seq[String],
+                               mutableAggBufferOffset: Int = 0,
+                               inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[Array[Long]] {
+
+  override def children: Seq[Expression] = Seq(child)
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "cand_token_counts"
+  override def checkInputDataTypes(): TypeCheckResult = MisraGriesExpr.checkItems(child)
+
+  @transient private lazy val slot: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer](cand.size * 2)
+    var i = 0
+    cand.foreach { c => m.put(c, i); i += 1 }
+    m
+  }
+
+  override def createAggregationBuffer(): Array[Long] =
+    new Array[Long](cand.size + 1)
+
+  override def update(b: Array[Long], input: InternalRow): Array[Long] = {
+    val v = child.eval(input)
+    if (v != null) MisraGriesExpr.foreachItem(child.dataType, v) { s =>
+      val idx = slot.get(s)
+      if (idx != null) b(idx.intValue()) += 1L
+      b(b.length - 1) += 1L
+    }
+    b
+  }
+
+  override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < x.length) { x(i) += y(i); i += 1 }
+    x
+  }
+
+  override def eval(b: Array[Long]): Any = new GenericArrayData(b)
+
+  override def serialize(b: Array[Long]): Array[Byte] = {
+    val out = java.nio.ByteBuffer.allocate(b.length * 8)
+    b.foreach(out.putLong)
+    out.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(in.getLong)
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): CandTokenCountsExpr =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): CandTokenCountsExpr =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): CandTokenCountsExpr = copy(child = c.head)
+}
+
+object CandTokenCountsExpr {
+  def apply(cand: Seq[String])(c: Column): Column =
+    ColumnBridge.column(
+      CandTokenCountsExpr(ColumnBridge.expression(c), cand).toAggregateExpression())
 }

@@ -4,13 +4,12 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** k-smallest-distinct-strings as a typed mergeable [[Aggregator]] —
-  * the [[KmvAgg]] buffer discipline (sorted ≤k array, associative
-  * merge) with the KEPT KEYS as the output instead of a cardinality
-  * estimate.  This is what makes a deterministic reservoir sample a
+/** k-smallest-distinct-strings as a typed mergeable [[Aggregator]]:
+  * a sorted ≤k array with an associative merge, output as the kept
+  * keys. This is what makes a deterministic reservoir sample a
   * STREAMING state: ≤k keys per group at any input volume, merged
   * across partitions and microbatches in any order to the identical
-  * result.
+  * result. [[KmvAgg.kmv]] is these keys plus a cardinality estimate.
   */
 class TopKMinAgg(k: Int) extends Aggregator[String, Array[String], Array[String]] {
 

@@ -37,6 +37,27 @@ object AsOfJoin {
       case _ => col(c).cast("long")
     }
 
+  /** The union every direction carries over, with identical schemas:
+    * key, the ordering time `__t`, `__tag` (`lTag` on left rows, `rTag`
+    * on right rows, which orders equal times), the left columns (null
+    * on right rows), the payload (null on left rows) and `__rt`, the
+    * right row's time, for the tolerance check (null on left rows).
+    */
+  private def tagged(left: DataFrame, right: DataFrame, key: String,
+                     leftTime: String, rightTime: String, payload: Seq[String],
+                     lTag: Int, rTag: Int): DataFrame = {
+    val leftOnly = left.columns.filterNot(_ == key).toSeq
+    val l = left.select(
+      (Seq(col(key), ordKey(left, leftTime).as("__t"), lit(lTag).as("__tag")) ++
+        leftOnly.map(col) ++ payload.map(p => lit(null).as(p)) :+
+        lit(null).cast("long").as("__rt")): _*)
+    val r = right.select(
+      (Seq(col(key), ordKey(right, rightTime).as("__t"), lit(rTag).as("__tag")) ++
+        leftOnly.map(c => lit(null).as(c)) ++ payload.map(col) :+
+        ordKey(right, rightTime).as("__rt")): _*)
+    l.unionByName(r)
+  }
+
   /** @param left        left (probe) table
     * @param right       right (reference) table
     * @param key         equi-key column present in both
@@ -56,23 +77,13 @@ object AsOfJoin {
     // strict (<): right rows sort AFTER left at equal timestamps, so the
     // running carry can't hand an equal-time right value to the left row
     val rTag = if (allowExactMatches) 0 else 2
-    // Identical schemas: key, __t, __tag, left columns (null on right
-    // rows), payload (null on left rows). __tag=0 sorts right rows first
-    // at equal timestamps → inclusive (<=) asof semantics. __rt carries
-    // the matched right row's time for the tolerance check.
-    val leftOnly = left.columns.filterNot(_ == key).toSeq
-    val l = left.select(
-      (Seq(col(key), ordKey(left, leftTime).as("__t"), lit(1).as("__tag")) ++
-        leftOnly.map(col) ++ payload.map(p => lit(null).as(p)) :+
-        lit(null).cast("long").as("__rt")): _*)
-    val r = right.select(
-      (Seq(col(key), ordKey(right, rightTime).as("__t"), lit(rTag).as("__tag")) ++
-        leftOnly.map(c => lit(null).as(c)) ++ payload.map(col) :+
-        ordKey(right, rightTime).as("__rt")): _*)
+    // __tag=0 sorts right rows first at equal timestamps → inclusive
+    // (<=) asof semantics
+    val both = tagged(left, right, key, leftTime, rightTime, payload, 1, rTag)
     val w = Window.partitionBy(col(key))
       .orderBy(col("__t"), col("__tag"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = (payload :+ "__rt").foldLeft(l.unionByName(r))((d, c) =>
+    val carried = (payload :+ "__rt").foldLeft(both)((d, c) =>
       d.withColumn(c, last(col(c), ignoreNulls = true).over(w)))
     val bounded = tolerance.fold(carried) { tol =>
       payload.foldLeft(carried)((d, c) =>
@@ -95,19 +106,11 @@ object AsOfJoin {
     // strict (>): in the descending traversal right rows must come after
     // left rows at equal timestamps (tag desc: left 0 first needs right < 0)
     val rTag = if (allowExactMatches) 1 else -1
-    val leftOnly = left.columns.filterNot(_ == key).toSeq
-    val l = left.select(
-      (Seq(col(key), ordKey(left, leftTime).as("__t"), lit(0).as("__tag")) ++
-        leftOnly.map(col) ++ payload.map(p => lit(null).as(p)) :+
-        lit(null).cast("long").as("__rt")): _*)
-    val r = right.select(
-      (Seq(col(key), ordKey(right, rightTime).as("__t"), lit(rTag).as("__tag")) ++
-        leftOnly.map(c => lit(null).as(c)) ++ payload.map(col) :+
-        ordKey(right, rightTime).as("__rt")): _*)
+    val both = tagged(left, right, key, leftTime, rightTime, payload, 0, rTag)
     val w = Window.partitionBy(col(key))
       .orderBy(col("__t").desc, col("__tag").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = (payload :+ "__rt").foldLeft(l.unionByName(r))((d, c) =>
+    val carried = (payload :+ "__rt").foldLeft(both)((d, c) =>
       d.withColumn(c, last(col(c), ignoreNulls = true).over(w)))
     val bounded = tolerance.fold(carried) { tol =>
       payload.foldLeft(carried)((d, c) =>
@@ -130,18 +133,10 @@ object AsOfJoin {
               tolerance: Option[Long] = None,
               allowExactMatches: Boolean = true): DataFrame = {
     val rTag = if (allowExactMatches) 0 else 2
-    val leftOnly = left.columns.filterNot(_ == key).toSeq
     // right rows tag 0, left rows tag 1: ascending (__t, __tag) puts an
     // equal-time right row before the left row (inclusive backward);
     // descending __t with ASCENDING __tag does the same for forward.
-    val l = left.select(
-      (Seq(col(key), ordKey(left, leftTime).as("__t"), lit(1).as("__tag")) ++
-        leftOnly.map(col) ++ payload.map(p => lit(null).as(p)) :+
-        lit(null).cast("long").as("__rt")): _*)
-    val r = right.select(
-      (Seq(col(key), ordKey(right, rightTime).as("__t"), lit(rTag).as("__tag")) ++
-        leftOnly.map(c => lit(null).as(c)) ++ payload.map(col) :+
-        ordKey(right, rightTime).as("__rt")): _*)
+    val both = tagged(left, right, key, leftTime, rightTime, payload, 1, rTag)
     val wb = Window.partitionBy(col(key))
       .orderBy(col("__t").asc, col("__tag").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -149,7 +144,7 @@ object AsOfJoin {
       .orderBy(col("__t").desc, col("__tag").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = payload.foldLeft(
-      l.unionByName(r)
+      both
         .withColumn("__bt", last(col("__rt"), ignoreNulls = true).over(wb))
         .withColumn("__ft", last(col("__rt"), ignoreNulls = true).over(wf))
     ) { (d, c) =>

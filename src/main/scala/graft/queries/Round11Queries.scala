@@ -113,13 +113,13 @@ object Round11Queries {
     // to the full exact aggregation if the guarantee doesn't bind.
     // The fit-once/probe-many shape is the 100-TB workload: a repeated
     // heavy-hitters query pays ONE tokenizing scan per call, not two.
-    // Append-only corpus contract as topKFrequentPrefitText documents;
+    // Append-only corpus contract as MisraGries.topKFrequent documents;
     // a corpus that shrank forces the exact fallback, so the result is
     // exact top-k in every case even with a stale sketch.
     "q232_heavy_hitters" -> QueryDef(
-      // r12: fused TEXT exprs — sketch fit and certify each consume
-      // `text` directly (MisraGriesTextExpr / CandTokenCountsExpr), no
-      // Generate stages, no InSet-filtered string hash-agg.
+      // The fit (MisraGriesExpr) and the certify pass
+      // (CandTokenCountsExpr) each read `text` directly as whitespace
+      // tokens: no Generate stage, no InSet-filtered string hash-agg.
       (s, d) => {
         val docs = Tables.fanout(Tables.documents(s, d), d, "documents")
         // modTime-keyed (r14): a corpus rewritten in place can never
@@ -128,10 +128,10 @@ object Round11Queries {
         val hp = new org.apache.hadoop.fs.Path(path)
         val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
         if (!fs.exists(hp))
-          graft.functions.MisraGries.fitSketchText(docs, "text", 512)
+          graft.functions.MisraGries.fitSketch(docs, col("text"), 512)
             .write.mode("overwrite").parquet(path)
-        graft.functions.MisraGries.topKFrequentPrefitText(
-          docs, "text", k = 10,
+        graft.functions.MisraGries.topKFrequent(
+          docs, col("text"), k = 10,
           graft.functions.MisraGries.readSketchCached(s, path))
       },
       Some("""WITH w AS (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word

@@ -262,12 +262,12 @@ object Round44Queries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val path = graft.tools.Staging.dir("mg_sketch", d)
-        // r12: fused text paths — fit and verify each tokenize once,
-        // with no explode stage (MgTextExpr scaladoc).
-        graft.functions.MisraGries.fitSketchText(docs, "text", 512)
+        // fit and certify each tokenize `text` once, with no explode
+        // stage (MisraGriesExpr scaladoc)
+        graft.functions.MisraGries.fitSketch(docs, col("text"), 512)
           .write.mode("overwrite").parquet(path)
-        graft.functions.MisraGries.topKFrequentPrefitText(
-          docs, "text", 10, s.read.parquet(path))
+        graft.functions.MisraGries.topKFrequent(docs, col("text"), 10,
+          graft.functions.MisraGries.sketchRow(s.read.parquet(path)))
       },
       Some("""WITH w AS (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word
                 FROM documents)

@@ -159,37 +159,24 @@ object EventStreams {
         .otherwise(0L)).as("n_purchase"))
   }
 
-  /** Streaming heavy hitters: a Misra-Gries candidate sketch maintained
-    * as the stream's aggregation state (bounded: ≤ sketchK counters),
-    * then the batch certification pass from
-    * [[graft.functions.MisraGries.topKFrequent]] — exact counts for
-    * candidates only, kth-count > N/(sketchK+1) certificate, full-agg
-    * fallback if it doesn't bind.  The result is the EXACT top-k most
-    * active users in every case (bounded replay ⇒ same sketch family
-    * the batch pass produces).
+  /** Streaming heavy hitters: the Misra-Gries sketch row
+    * ([[graft.functions.MisraGries.fitSketch]] over `array(item)`)
+    * maintained as the stream's aggregation state (bounded: ≤ sketchK
+    * counters and the item total), then the batch certify pass of
+    * [[graft.functions.MisraGries.topKFrequent]] over the events table.
+    * The result is the EXACT top-k most active users in every case
+    * (bounded replay ⇒ the stream saw the batch's items).
     */
   def heavyHittersStream(spark: SparkSession, sfDir: String,
                          k: Int = 10, sketchK: Int = 512): DataFrame = {
-    val agg = readEventStream(spark, sfDir)
-      .select(col("user_id").cast("string").as("item"))
-      .agg(graft.functions.MisraGries.mg(sketchK)(col("item")).as("cand"),
-        count(col("item")).as("n"))
-    val row = DocStreams.run(spark, agg, "graft_stream_mg", "complete").collect()(0)
-    val cand = row.getAs[scala.collection.Seq[String]](0).toArray
-    val n = row.getLong(1)
-    val items = graft.Tables.events(spark, sfDir)
-      .select(col("user_id").cast("string").as("item"))
-    def exactAll(d: DataFrame) = d.groupBy("item").agg(count(lit(1)).as("cnt"))
-    val candTop = graft.operators.Sorts.topK(
-      exactAll(items.filter(col("item").isin(cand.toIndexedSeq: _*))),
-      Seq("cnt", "item"), Seq(false, true), k)
-    val topRows = candTop.collect()
-    val certified = topRows.length == k &&
-      topRows.map(_.getLong(1)).min > n.toDouble / (sketchK + 1)
-    val top = if (certified) candTop
-      else graft.operators.Sorts.topK(exactAll(items),
-        Seq("cnt", "item"), Seq(false, true), k)
-    top.select(col("item").cast("long").as("user_id"), col("cnt"))
+    import graft.functions.MisraGries
+    def items(d: DataFrame) = d.select(array(col("user_id").cast("string")).as("item"))
+    val sketch = MisraGries.sketchRow(DocStreams.run(spark,
+      MisraGries.fitSketch(items(readEventStream(spark, sfDir)), col("item"), sketchK),
+      "graft_stream_mg", "complete"))
+    val events = items(graft.Tables.events(spark, sfDir))
+    MisraGries.topKFrequent(events, col("item"), k, sketch)
+      .select(col("word").cast("long").as("user_id"), col("cnt"))
   }
 
   /** Streaming anomaly monitor: per-type DECIMAL-exact running moments
@@ -630,11 +617,12 @@ object EventStreams {
     graft.operators.Stats.cusumChangepoint(daily, "event_type", "day", "x")
   }
 
-  /** STREAMING KMV distinct-user sketch per event type: the typed
-    * mergeable [[graft.functions.KmvAgg]] IS the stream state — ≤ k
-    * sorted hashes per group, merged associatively across microbatches
-    * — so the estimate after any arrival order equals the batch
-    * sketch (q154's machinery).  Output (event_type, est).
+  /** STREAMING KMV distinct-user sketch per event type: the mergeable
+    * k-minimum hashes behind [[graft.functions.KmvAgg.kmv]] ARE the
+    * stream state — ≤ k sorted hashes per group, merged associatively
+    * across microbatches — so the estimate after any arrival order
+    * equals the batch sketch (q154's machinery).  Output (event_type,
+    * est).
     */
   def kmvStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.{KmvAgg, Num}

@@ -17,7 +17,7 @@ import graft.io.ArrowIpc
 class ArrowIpcSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String) = s"target/tmp/arrow_$name"
+  private def tmp(name: String) = graft.tools.Staging.dir(s"arrow_$name", sf)
 
   test("full-type round-trip is value-exact, nulls included") {
     val schema = StructType(Seq(

@@ -79,7 +79,7 @@ class BugfixR9Spec extends SparkSpec {
 
   test("stream staging re-copies when the source changes") {
     import graft.streaming.EventStreams
-    val fixture = "/root/repo/target/tmp/bugfix_r9_events"
+    val fixture = graft.tools.Staging.dir("bugfix_r9_events", sf)
     val p = Paths.get(fixture)
     if (Files.exists(p))
       Files.walk(p).sorted(java.util.Comparator.reverseOrder())

@@ -15,7 +15,7 @@ class DocStreamsSpec extends SparkSpec {
 
   test("curation state accumulates across microbatches (2 files, 1 per trigger)") {
     val docs = Tables.documents(spark, sf).cache()
-    val dir = "/root/repo/target/tmp/doc_stream_spec"
+    val dir = graft.tools.Staging.dir("doc_stream_spec", sf)
     // two halves as separate files; duplicates of a fingerprint can
     // land in DIFFERENT microbatches, so only cross-batch state
     // produces the right counts
@@ -40,7 +40,7 @@ class DocStreamsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf).cache()
     val batch = docs.filter(col("doc_id") % 5 === 0)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val dir = "/root/repo/target/tmp/doc_stream_incr_spec"
+    val dir = graft.tools.Staging.dir("doc_stream_incr_spec", sf)
     // the batch arrives in two microbatches — pairs must not depend on
     // which microbatch carried the new document (static index, so no
     // cross-batch state is even needed; this pins that invariant)
@@ -57,7 +57,7 @@ class DocStreamsSpec extends SparkSpec {
       .select(col("new_id"), col("corpus_id"),
         graft.functions.Num.rnd(col("jaccard"), 6).as("j"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val idxPath = "target/tmp/lsh_index_stream_spec"
+    val idxPath = graft.tools.Staging.dir("lsh_index_stream_spec", sf)
     graft.text.MinHash.bucketIndex(corpus, "doc_id", "text")
       .write.mode("overwrite").partitionBy("band").parquet(idxPath)
     val want = graft.text.MinHash
@@ -72,7 +72,7 @@ class DocStreamsSpec extends SparkSpec {
 
   test("streaming near-dup pair set equals batch LSH across microbatches") {
     val docs = Tables.documents(spark, sf).cache()
-    val dir = "/root/repo/target/tmp/doc_stream_neardup_spec"
+    val dir = graft.tools.Staging.dir("doc_stream_neardup_spec", sf)
     // near-dup PAIRS can straddle the file split: only cross-batch
     // bucket state recovers them
     docs.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -102,7 +102,7 @@ class DocStreamsSpec extends SparkSpec {
   test("streamed chunk election equals batch rewrite across microbatches") {
     import graft.text.ChunkDedup
     val docs = Tables.documents(spark, sf).cache()
-    val dir = "/root/repo/target/tmp/doc_stream_chunk_spec"
+    val dir = graft.tools.Staging.dir("doc_stream_chunk_spec", sf)
     // duplicates of a chunk land in DIFFERENT microbatches; the
     // election must still pick the global (doc_id, idx) minimum
     docs.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -127,7 +127,7 @@ class DocStreamsSpec extends SparkSpec {
   test("streaming BPE encode equals batch encode across microbatches") {
     import graft.text.{Bpe, BpeMerges}
     val docs = Tables.documents(spark, sf).cache()
-    val dir = "/root/repo/target/tmp/doc_stream_bpe_spec"
+    val dir = graft.tools.Staging.dir("doc_stream_bpe_spec", sf)
     docs.filter(col("doc_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/a")
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)

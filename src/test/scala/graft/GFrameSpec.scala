@@ -209,7 +209,7 @@ class GFrameSpec extends SparkSpec {
 
   test("toParquet persists the index contract through the footer and back") {
     import graft.api.GFrame
-    val path = "/root/repo/target/tmp/gframe_idx_roundtrip"
+    val path = graft.tools.Staging.dir("gframe_idx_roundtrip", sf)
     val g = GFrame(orders.df.select("o_orderkey", "o_custkey", "o_totalprice"),
       Seq("o_custkey", "o_orderkey")) // MultiIndex, order matters
     g.toParquet(path)
@@ -224,7 +224,7 @@ class GFrameSpec extends SparkSpec {
 
   test("toParquet strips stale index tags after read + setIndex/resetIndex") {
     import graft.api.GFrame
-    val path = "/root/repo/target/tmp/gframe_idx_stale"
+    val path = graft.tools.Staging.dir("gframe_idx_stale", sf)
     val g = GFrame(orders.df.select("o_orderkey", "o_custkey", "o_totalprice"),
       Seq("o_orderkey"))
     g.toParquet(path)

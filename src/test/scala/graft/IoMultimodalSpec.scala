@@ -8,7 +8,7 @@ import graft.multimodal.Multimodal
 class IoMultimodalSpec extends SparkSpec {
 
   test("CsvPandas: names/usecols/na_values/sep round-trip") {
-    val dir = "/root/repo/target/tmp/csv_spec"
+    val dir = graft.tools.Staging.dir("csv_spec", sf)
     val src = Tables.nation(spark, sf)
     CsvPandas.write(src, dir, header = false, sep = "|", singleFile = true)
     val got = CsvPandas.read(spark, dir, CsvPandas.ReadOptions(
@@ -23,7 +23,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: nullValue sentinel produces nulls") {
-    val dir = "/root/repo/target/tmp/csv_spec_na"
+    val dir = graft.tools.Staging.dir("csv_spec_na", sf)
     import spark.implicits._
     CsvPandas.write(Seq(("a", "NA"), ("b", "x")).toDF("k", "v"), dir, singleFile = true)
     val got = CsvPandas.read(spark, dir, CsvPandas.ReadOptions(
@@ -34,7 +34,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: every na_values sentinel is honored, not just the first") {
-    val dir = "/root/repo/target/tmp/csv_spec_multi_na"
+    val dir = graft.tools.Staging.dir("csv_spec_multi_na", sf)
     import spark.implicits._
     CsvPandas.write(
       Seq(("a", "NA", "1"), ("b", "n/a", "n/a"), ("c", "x", "3"), ("d", "-", "4"))
@@ -51,7 +51,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite rewrites only the touched partitions") {
-    val dir = "/root/repo/target/tmp/dyn_overwrite_spec"
+    val dir = graft.tools.Staging.dir("dyn_overwrite_spec", sf)
     val li = Tables.lineitem(spark, sf)
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
     val before = spark.read.parquet(dir)
@@ -69,8 +69,8 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: multi-file read unions all paths") {
-    val d1 = "/root/repo/target/tmp/csv_multi_1"
-    val d2 = "/root/repo/target/tmp/csv_multi_2"
+    val d1 = graft.tools.Staging.dir("csv_multi_1", sf)
+    val d2 = graft.tools.Staging.dir("csv_multi_2", sf)
     import spark.implicits._
     CsvPandas.write(Seq(("a", 1), ("b", 2)).toDF("k", "v"), d1, singleFile = true)
     CsvPandas.write(Seq(("c", 3)).toDF("k", "v"), d2, singleFile = true)
@@ -83,7 +83,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: na_rep write round-trips nulls through the text sink") {
-    val dir = "/root/repo/target/tmp/csv_narep_spec"
+    val dir = graft.tools.Staging.dir("csv_narep_spec", sf)
     import spark.implicits._
     val src = Seq(("a", Some(1)), ("b", None), ("c", Some(3)))
       .toDF("k", "v")
@@ -98,7 +98,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: gzip-compressed write reads back transparently") {
-    val dir = "/root/repo/target/tmp/csv_spec_gz"
+    val dir = graft.tools.Staging.dir("csv_spec_gz", sf)
     val src = Tables.region(spark, sf)
     CsvPandas.write(src, dir, singleFile = true, compression = Some("gzip"))
     val files = new java.io.File(dir).listFiles().map(_.getName)
@@ -142,7 +142,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: true_values/false_values map to booleans") {
-    val dir = "/root/repo/target/tmp/csv_spec_bool"
+    val dir = graft.tools.Staging.dir("csv_spec_bool", sf)
     import spark.implicits._
     CsvPandas.write(Seq(("a", "yes"), ("b", "no"), ("c", "true")).toDF("k", "flag"),
       dir, singleFile = true)
@@ -155,7 +155,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: skiprows and skipfooter drop leading/trailing lines") {
-    val dir = "/root/repo/target/tmp/csv_spec_skip"
+    val dir = graft.tools.Staging.dir("csv_spec_skip", sf)
     val p = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.exists(p)) java.nio.file.Files.createDirectories(p)
     java.nio.file.Files.writeString(p.resolve("f.csv"),
@@ -171,7 +171,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CsvPandas: schema peek infers dtypes from the head only, one full pass") {
-    val dir = "/root/repo/target/tmp/csv_spec_peek"
+    val dir = graft.tools.Staging.dir("csv_spec_peek", sf)
     import spark.implicits._
     CsvPandas.write(Seq((1L, 1.5, "a", "2024-01-01"), (2L, 2.5, "b", "2024-01-02"))
       .toDF("i", "d", "s", "t"), dir, singleFile = true)

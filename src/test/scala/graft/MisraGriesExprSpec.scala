@@ -1,30 +1,55 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{MisraGries, MisraGriesExpr}
 
-/** Native MisraGriesExpr ≡ the boxed udaf twin, plus the MG frequency
-  * guarantee on a known skew.
+/** Native MisraGriesExpr ≡ the boxed udaf twin, the MG frequency
+  * guarantee on a known skew, and the certified top-k ≡ an exact
+  * groupBy-count top-k.
   */
 class MisraGriesExprSpec extends SparkSpec {
   import spark.implicits._
+  import MisraGriesExprSpec._
 
-  test("single partition: native candidate set == udaf twin exactly") {
+  private def cand(df: DataFrame, k: Int, items: Column): Seq[String] =
+    df.agg(MisraGriesExpr(k)(items).as("s")).select("s.cand").collect()(0)
+      .getSeq[String](0).toSeq
+
+  private def skewed: DataFrame = {
     // deterministic skewed stream: token i appears ~1000/i times
     val items = (1 to 60).flatMap(i => Seq.fill(1000 / i)(s"tok$i"))
-    val df = spark.createDataFrame(
+    spark.createDataFrame(
       spark.sparkContext.parallelize(items.map(Tuple1(_)), 1).map(t =>
         org.apache.spark.sql.Row(t._1)),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("item",
           org.apache.spark.sql.types.StringType))))
+  }
+
+  test("single partition: native candidate set == udaf twin exactly") {
+    val df = skewed
     for (k <- Seq(4, 16, 64)) {
-      val nat = df.agg(MisraGriesExpr(k)(col("item"))).collect()(0)
-        .getSeq[String](0).toSeq
+      val nat = cand(df, k, array(col("item")))
       val twin = df.agg(MisraGries.mgUdaf(k)(col("item"))).collect()(0)
         .getSeq[String](0).toSeq
       assert(nat == twin, s"k=$k")
+    }
+  }
+
+  test("array(item) ≡ boxed twin ≡ one-word-per-row text column") {
+    val df = skewed
+    for (k <- Seq(4, 16, 64)) {
+      val arr = df.agg(MisraGriesExpr(k)(array(col("item"))).as("s"))
+        .select("s.cand", "s.n").collect()(0)
+      val text = df.agg(MisraGriesExpr(k)(col("item")).as("s"))
+        .select("s.cand", "s.n").collect()(0)
+      val twin = df.agg(MisraGries.mgUdaf(k)(col("item"))).collect()(0)
+        .getSeq[String](0)
+      assert(arr.getSeq[String](0) == twin, s"k=$k array vs twin")
+      assert(text.getSeq[String](0) == twin, s"k=$k text vs twin")
+      assert(arr.getLong(1) == df.count() && text.getLong(1) == df.count(), s"k=$k n")
     }
   }
 
@@ -35,37 +60,33 @@ class MisraGriesExprSpec extends SparkSpec {
     val n = items.size
     val df = items.toDF("item").repartition(7)
     val k = 16
-    val cand = df.agg(MisraGriesExpr(k)(col("item"))).collect()(0)
-      .getSeq[String](0).toSet
+    val got = cand(df, k, array(col("item"))).toSet
     val freq = items.groupBy(identity).view.mapValues(_.size)
     val heavy = freq.filter(_._2 > n.toDouble / (k + 1)).keys.toSet
-    assert(heavy.subsetOf(cand),
-      s"missing heavy hitters: ${heavy.diff(cand)}")
-    assert(cand.size <= k)
+    assert(heavy.subsetOf(got),
+      s"missing heavy hitters: ${heavy.diff(got)}")
+    assert(got.size <= k)
   }
 
   test("nulls are skipped; empty input yields empty candidates") {
     val df = Seq(Some("a"), None, Some("a"), Some("b"), None)
       .toDF("item")
-    val cand = df.agg(MisraGriesExpr(4)(col("item"))).collect()(0)
-      .getSeq[String](0).toSeq
-    assert(cand == Seq("a", "b"))
-    val empty = df.filter(col("item") === "zzz")
-      .agg(MisraGriesExpr(4)(col("item"))).collect()(0).getSeq[String](0)
-    assert(empty.isEmpty)
+    assert(cand(df, 4, array(col("item"))) == Seq("a", "b"))
+    assert(cand(df.filter(col("item") === "zzz"), 4, array(col("item"))).isEmpty)
   }
 
-  test("MisraGriesTextExpr ≡ MisraGriesExpr over exploded tokens (1 partition) + total") {
+  test("text child ≡ array child over its exploded tokens (1 partition) + total") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text").coalesce(1)
     for (k <- Seq(8, 64, 512)) {
-      val fused = docs.agg(graft.functions.MisraGriesTextExpr(k)(col("text")).as("s"))
+      val fused = docs.agg(MisraGriesExpr(k)(col("text")).as("s"))
         .select(col("s.cand"), col("s.n")).collect()(0)
       val words = docs.select(explode(
         graft.text.TextStats.tokensNonEmpty(col("text"))).as("word"))
-      val twin = words.agg(MisraGriesExpr(k)(col("word")).as("cand"),
-        count(col("word")).as("n")).collect()(0)
+      val twin = words.agg(MisraGriesExpr(k)(array(col("word"))).as("s"))
+        .select(col("s.cand"), col("s.n")).collect()(0)
       assert(fused.getSeq[String](0) == twin.getSeq[String](0), s"k=$k candidates")
       assert(fused.getLong(1) == twin.getLong(1), s"k=$k total")
+      assert(fused.getLong(1) == words.count(), s"k=$k total vs token count")
     }
   }
 
@@ -82,31 +103,26 @@ class MisraGriesExprSpec extends SparkSpec {
       assert(arr(i) == exact.getOrElse(w, 0L), s"count($w)")
     }
     assert(arr.last == words.count(), "total")
+    // the same counts from the exploded tokens as array(word) items
+    val viaArray = words.agg(graft.functions.CandTokenCountsExpr(cand)(array(col("word"))))
+      .collect()(0).getSeq[Long](0)
+    assert(viaArray == arr)
   }
 
-  test("topKFrequentText ≡ topKFrequent (certified and shrunk-fallback paths)") {
+  test("text topKFrequent ≡ exact top-k (certified, fallback and shrunk paths)") {
     val docs = Tables.documents(spark, sf)
-    val words = docs.select(explode(
+    def words(d: DataFrame) = d.select(explode(
       graft.text.TextStats.tokensNonEmpty(col("text"))).as("word"))
-    val a = graft.functions.MisraGries.topKFrequentText(docs, "text", 10, 512)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val b = graft.functions.MisraGries.topKFrequent(words, "word", 10, 512)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(a == b)
+    val exact = exactTopK(words(docs), 10)
+    assert(exact.length == 10)
+    assert(fitAndCertify(docs, col("text"), 10, 512) == exact)
     // uncertifiable sketch (flat vocab, tiny k) must fall back to exact
-    val c = graft.functions.MisraGries.topKFrequentText(docs, "text", 10, 1)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(c == b)
+    assert(fitAndCertify(docs, col("text"), 10, 1) == exact)
     // shrunk corpus vs sketch: prefit on full, probe on half → exact fallback
-    val sk = graft.functions.MisraGries.fitSketchText(docs, "text", 512)
+    val sk = MisraGries.sketchRow(MisraGries.fitSketch(docs, col("text"), 512))
     val half = docs.filter(col("doc_id") % 2 === 0)
-    val d = graft.functions.MisraGries.topKFrequentPrefitText(half, "text", 10, sk)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val halfWords = half.select(explode(
-      graft.text.TextStats.tokensNonEmpty(col("text"))).as("word"))
-    val e = graft.functions.MisraGries.topKFrequent(halfWords, "word", 10, 512)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(d == e)
+    assert(rows(MisraGries.topKFrequent(half, col("text"), 10, sk)) ==
+      exactTopK(words(half), 10))
   }
 
   test("persisted q232 sketch is invalidated when the corpus changes on disk") {
@@ -135,4 +151,23 @@ class MisraGriesExprSpec extends SparkSpec {
     // candidates; the fresh fit sees only "omega"
     assert(topWord() == "omega")
   }
+}
+
+object MisraGriesExprSpec {
+  import org.apache.spark.sql.{Column, DataFrame}
+
+  def rows(df: DataFrame): Seq[(String, Long)] =
+    df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  /** The exact top-k of the `word` column by a groupBy count (count
+    * desc, item asc) — the answer every certified path must return.
+    */
+  def exactTopK(words: DataFrame, k: Int): Seq[(String, Long)] =
+    rows(words.groupBy("word").count()
+      .orderBy(col("count").desc, col("word")).limit(k))
+
+  /** Fit a sketch over `items` and certify from it in one call. */
+  def fitAndCertify(data: DataFrame, items: Column, k: Int, sketchK: Int): Seq[(String, Long)] =
+    rows(MisraGries.topKFrequent(data, items, k,
+      MisraGries.sketchRow(MisraGries.fitSketch(data, items, sketchK))))
 }

@@ -27,7 +27,7 @@ class PandasMetaSpec extends SparkSpec {
   }
 
   test("toParquet writes the pandas footer key with index columns") {
-    val dir = "/root/repo/target/tmp/pandas_meta_rt"
+    val dir = graft.tools.Staging.dir("pandas_meta_rt", sf)
     GFrame(Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "v"),
       index = Seq("id")).toParquet(dir)
     val key = pandasKey(dir)
@@ -39,7 +39,7 @@ class PandasMetaSpec extends SparkSpec {
   }
 
   test("no index → empty index_columns (resetIndex persists as no-index)") {
-    val dir = "/root/repo/target/tmp/pandas_meta_noidx"
+    val dir = graft.tools.Staging.dir("pandas_meta_noidx", sf)
     GFrame(Seq((1L, 2.0)).toDF("a", "b")).toParquet(dir)
     val key = pandasKey(dir)
     assert(key.isDefined && key.get.contains(""""index_columns": []"""))

@@ -213,23 +213,23 @@ class PlanPinSpec extends SparkSpec {
     // the AMORTIZED path: prefit top-k must fire NO MG pass at all —
     // reintroducing the full-corpus sketch scan fails here
     import org.apache.spark.sql.functions._
+    import graft.functions.MisraGries
+    import MisraGriesExprSpec.{exactTopK, rows}
     val words = Tables.documents(spark, sf)
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
-    val sk = graft.functions.MisraGries.fitSketch(words, "word", 512)
-      .collect()
-    import spark.implicits._
-    val sketch = spark.createDataFrame(
-      java.util.Arrays.asList(sk: _*),
-      graft.functions.MisraGries.fitSketch(words, "word", 512).schema)
-    val prefit = capturedPlans(
-      graft.functions.MisraGries.topKFrequentPrefit(words, "word", 10, sketch)
-        .count())
+    val items = array(col("word"))
+    val sk = MisraGries.sketchRow(MisraGries.fitSketch(words, items, 512))
+    var got = Seq.empty[(String, Long)]
+    val prefit = capturedPlans {
+      got = rows(MisraGries.topKFrequent(words, items, 10, sk))
+    }
     assert(!prefit.exists(_.toLowerCase.contains("misra_gries")),
       "prefit path re-ran the full-corpus MG pass")
+    assert(got == exactTopK(words, 10))
     // sensitivity: the fit-every-call path DOES trip the same predicate
-    val refit = capturedPlans(
-      graft.functions.MisraGries.topKFrequent(words, "word", 10, 512).count())
+    val refit = capturedPlans(MisraGries.topKFrequent(words, items, 10,
+      MisraGries.sketchRow(MisraGries.fitSketch(words, items, 512))).count())
     assert(refit.exists(_.toLowerCase.contains("misra_gries")))
   }
 

@@ -174,17 +174,18 @@ class Round11Spec extends SparkSpec {
   }
 
   test("topKFrequent is exact on skewed data (certified) and flat data (fallback)") {
+    import MisraGriesExprSpec.{exactTopK, fitAndCertify}
     // skewed: certification binds
     val skew = ((1 to 500).map(_ => "a") ++ (1 to 300).map(_ => "b") ++
-      (1 to 50).flatMap(i => Seq(s"r$i"))).toDF("w")
-    val gotS = MisraGries.topKFrequent(skew, "w", 2, 16).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
+      (1 to 50).flatMap(i => Seq(s"r$i"))).toDF("word")
+    val gotS = fitAndCertify(skew, array($"word"), 2, 16)
     assert(gotS == Seq("a" -> 500L, "b" -> 300L))
+    assert(gotS == exactTopK(skew, 2))
     // flat: 40 items × 10 each with a tiny sketch — fallback must fire
-    val flat = (1 to 40).flatMap(i => (1 to 10).map(_ => f"w$i%02d")).toDF("w")
-    val gotF = MisraGries.topKFrequent(flat, "w", 5, 4).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    val flat = (1 to 40).flatMap(i => (1 to 10).map(_ => f"w$i%02d")).toDF("word")
+    val gotF = fitAndCertify(flat, array($"word"), 5, 4)
     assert(gotF == (1 to 5).map(i => f"w$i%02d" -> 10L)) // ties → item asc
+    assert(gotF == exactTopK(flat, 5))
   }
 
   // ---- DSIR ----

@@ -81,7 +81,7 @@ class Round12Spec extends SparkSpec {
     val pq = PQ.Model(PQCodebooks.pretrained)
     val coarse = IVF.Model(IVFCentroids.pretrained)
     val e = Tables.embeddings(spark, sf)
-    val path = "/root/repo/target/tmp/pq_index_spec"
+    val path = graft.tools.Staging.dir("pq_index_spec", sf)
     PQ.writeCodeIndex(e, coarse, pq, path)
     val queries = e.filter(col("vec_id") < 4)
     val res = PQ.searchCodeIndex(spark, path, queries, coarse, pq, k = 3, nprobe = 2)

@@ -4,14 +4,14 @@ import org.apache.spark.sql.functions._
 
 class Round18Spec extends SparkSpec {
 
-  test("streaming heavy hitters equals the batch certified top-k") {
+  test("streaming heavy hitters equals the exact batch top-k") {
     val stream = graft.streaming.EventStreams.heavyHittersStream(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val batch = graft.functions.MisraGries.topKFrequent(
-      Tables.events(spark, sf).select(col("user_id").cast("string").as("item")),
-      "item", k = 10, sketchK = 512)
-      .collect().map(r => (r.getString(0).toLong, r.getLong(1))).sortBy(_._1)
-    assert(stream.sameElements(batch))
+    val exact = MisraGriesExprSpec.exactTopK(
+      Tables.events(spark, sf).select(col("user_id").cast("string").as("word")), 10)
+      .map { case (u, c) => (u.toLong, c) }.sortBy(_._1)
+    assert(exact.length == 10)
+    assert(stream.sameElements(exact))
   }
 
   test("anomaly z-scores: every flagged row exceeds the threshold, none is double-counted") {

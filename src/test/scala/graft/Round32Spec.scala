@@ -177,60 +177,50 @@ class Round32Spec extends SparkSpec {
 
   test("heavy hitters: prefit sketch ≡ refit; stale-superset sketch stays exact via fallback") {
     import graft.functions.MisraGries
+    import MisraGriesExprSpec.{exactTopK, fitAndCertify, rows}
     val words = Tables.documents(spark, sf)
       .select(explode(filter(split(col("text"), " "), w => w =!= ""))
         .as("word")).cache()
-    val refit = MisraGries.topKFrequent(words, "word", 10, 512)
-      .collect().map(_.toSeq).toSeq
-    val path = "/root/repo/target/tmp/mg_sketch_spec"
-    MisraGries.fitSketch(words, "word", 512)
-      .write.mode("overwrite").parquet(path)
-    val prefit = MisraGries.topKFrequentPrefit(
-      words, "word", 10, spark.read.parquet(path))
-      .collect().map(_.toSeq).toSeq
-    assert(prefit == refit && refit.length == 10)
-    // a sketch whose candidate list misses the heavy items cannot
-    // certify (kth exact count vs N/(k+1) threshold) — the call must
-    // fall back to the full exact aggregation, not return wrong rows
-    import spark.implicits._
-    val bogus = Seq((Array("zzz_not_a_word"), refit.length.toLong, 512))
-      .toDF("cand", "n", "sketch_k")
-      .select(col("cand"), lit(1000000000L).as("n"), col("sketch_k"))
-    val fallback = MisraGries.topKFrequentPrefit(words, "word", 10, bogus)
-      .collect().map(_.toSeq).toSeq
-    assert(fallback == refit)
-    // GROWN corpus: the sketch predates a brand-new heavy word. The
-    // stale fit-time threshold would certify a wrong answer; the
-    // current-total-aware certification (bound = n_sketch/(k+1) +
-    // growth) must fall back to the exact aggregation instead.
-    import spark.implicits._
-    val grown = words.unionByName(
-      Seq.fill(3000)("zzznewheavy").toDF("word"))
-    val staleAnswer = MisraGries.topKFrequentPrefit(
-      grown, "word", 10, spark.read.parquet(path))
-      .collect().map(_.toSeq).toSeq
-    val exactGrown = MisraGries.topKFrequent(grown, "word", 10, 512)
-      .collect().map(_.toSeq).toSeq
-    assert(exactGrown.exists(_.head == "zzznewheavy"))
-    assert(staleAnswer == exactGrown,
-      "stale sketch on a grown corpus returned a wrong top-k")
-    // SHRUNK corpus: nNow < nSketch proves the append-only precondition
-    // was violated — certification must refuse and fall back to exact,
-    // regardless of how healthy the candidate counts look.
-    val shrunk = words.limit(words.count().toInt / 2)
-    val shrunkAnswer = MisraGries.topKFrequentPrefit(
-      shrunk, "word", 10, spark.read.parquet(path))
-      .collect().map(_.toSeq).toSeq
-    val exactShrunk = MisraGries.topKFrequent(shrunk, "word", 10, 512)
-      .collect().map(_.toSeq).toSeq
-    assert(shrunkAnswer == exactShrunk,
-      "shrunk corpus must force the exact fallback")
+    val items = array(col("word"))
+    val exact = exactTopK(words, 10)
+    val refit = fitAndCertify(words, items, 10, 512)
+    graft.tools.Staging.withRunDir("mg_sketch_spec") { dir =>
+      val path = s"$dir/sketch"
+      MisraGries.fitSketch(words, items, 512)
+        .write.mode("overwrite").parquet(path)
+      def prefit(d: org.apache.spark.sql.DataFrame) =
+        rows(MisraGries.topKFrequent(d, items, 10,
+          MisraGries.sketchRow(spark.read.parquet(path))))
+      assert(prefit(words) == exact && refit == exact && exact.length == 10)
+      // a sketch whose candidate list misses the heavy items cannot
+      // certify (kth exact count vs N/(k+1) threshold) — the call must
+      // fall back to the full exact aggregation, not return wrong rows
+      val bogus = (Array("zzz_not_a_word"), 1000000000L, 512)
+      assert(rows(MisraGries.topKFrequent(words, items, 10, bogus)) == exact)
+      // GROWN corpus: the sketch predates a brand-new heavy word. The
+      // stale fit-time threshold would certify a wrong answer; the
+      // current-total-aware certification (bound = n_sketch/(k+1) +
+      // growth) must fall back to the exact aggregation instead.
+      import spark.implicits._
+      val grown = words.unionByName(
+        Seq.fill(3000)("zzznewheavy").toDF("word"))
+      val exactGrown = exactTopK(grown, 10)
+      assert(exactGrown.exists(_._1 == "zzznewheavy"))
+      assert(prefit(grown) == exactGrown,
+        "stale sketch on a grown corpus returned a wrong top-k")
+      // SHRUNK corpus: nNow < nSketch proves the append-only precondition
+      // was violated — certification must refuse and fall back to exact,
+      // regardless of how healthy the candidate counts look.
+      val shrunk = words.limit(words.count().toInt / 2)
+      assert(prefit(shrunk) == exactTopK(shrunk, 10),
+        "shrunk corpus must force the exact fallback")
+    }
     words.unpersist()
   }
 
   test("read_csv contract: index_col by position ≡ by name; errors raise eagerly (read_csv_errors.py)") {
     import graft.io.CsvPandas
-    val path = "/root/repo/target/tmp/csv_idx_spec"
+    val path = graft.tools.Staging.dir("csv_idx_spec", sf)
     Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast("double"))
       .limit(100).write.mode("overwrite").option("header", "false").csv(path)
@@ -267,8 +257,8 @@ class Round32Spec extends SparkSpec {
     val big = "x" * 70000
     val items = (Seq.fill(40)(big) ++ Seq.fill(25)("y") ++
       (1 to 35).map(i => s"z$i")).toDF("item").repartition(4)
-    val cand = items.agg(graft.functions.MisraGriesExpr(2)(col("item")))
-      .collect()(0).getSeq[String](0)
+    val cand = items.agg(graft.functions.MisraGriesExpr(2)(array(col("item"))).as("s"))
+      .select("s.cand").collect()(0).getSeq[String](0)
     // the 70000-byte key is a true heavy hitter — it must survive
     // serialize/merge across partitions and come back intact
     assert(cand.contains(big))

@@ -69,7 +69,7 @@ class Round6Spec extends SparkSpec {
   test("windowed streaming near-dup: time-filtered pairs + state eviction across batches") {
     import graft.streaming.DocStreams
     val docs = Tables.documents(spark, sf).cache()
-    val dir = "/root/repo/target/tmp/doc_stream_neardup_win_spec"
+    val dir = graft.tools.Staging.dir("doc_stream_neardup_win_spec", sf)
     // split in EVENT-TIME order (ts = doc_id minutes) so batch 2 is
     // never late; the watermark rises between batches and evicts
     val mid = 250
@@ -114,7 +114,7 @@ class Round6Spec extends SparkSpec {
   test("streaming IVF refresh equals the batch computation across microbatches") {
     import graft.streaming.EmbedStreams
     val emb = Tables.embeddings(spark, sf).cache()
-    val dir = "/root/repo/target/tmp/emb_stream_refresh_spec"
+    val dir = graft.tools.Staging.dir("emb_stream_refresh_spec", sf)
     emb.filter(col("vec_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/a")
     emb.filter(col("vec_id") % 2 === 1).coalesce(1)
@@ -254,7 +254,7 @@ class Round6Spec extends SparkSpec {
   test("streaming session_window emits the batch sessions once closed") {
     val ev = Tables.events(spark, sf)
       .select("user_id", "ts", "event_id").cache()
-    val dir = "/root/repo/target/tmp/session_stream_spec"
+    val dir = graft.tools.Staging.dir("session_stream_spec", sf)
     ev.orderBy("ts").limit(500).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/a")
     ev.orderBy(col("ts").desc).limit(ev.count().toInt - 500).coalesce(1)
@@ -294,7 +294,7 @@ class Round6Spec extends SparkSpec {
   test("dropDuplicatesWithinWatermark dedups a replayed stream with bounded state") {
     val ev = Tables.events(spark, sf)
       .select("event_id", "ts", "user_id").orderBy("ts").limit(400).cache()
-    val dir = "/root/repo/target/tmp/ddww_spec"
+    val dir = graft.tools.Staging.dir("ddww_spec", sf)
     // write each event twice across two batch files: duplicates arrive
     // within the watermark delay, so every one must be suppressed
     ev.coalesce(1).write.mode("overwrite").parquet(s"$dir/a")
@@ -325,7 +325,7 @@ class Round6Spec extends SparkSpec {
 
   test("stream-stream interval join equals the batch range join") {
     val ev = Tables.events(spark, sf).cache()
-    val dir = "/root/repo/target/tmp/ss_join_spec"
+    val dir = graft.tools.Staging.dir("ss_join_spec", sf)
     ev.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/clicks")

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 /** The testdata dtype tripwire (SchemaContract): all three SF dirs
-  * must satisfy the pinned contract, and a deliberately-mutated
-  * fixture must fail it loudly.
+  * must satisfy the pinned contract, a deliberately-mutated fixture
+  * must fail it loudly, and a missing table fails naming its path.
   */
 class SchemaContractSpec extends SparkSpec {
 
@@ -17,7 +17,7 @@ class SchemaContractSpec extends SparkSpec {
   }
 
   test("a retyped column fails the check and names the column") {
-    val dir = "/root/repo/target/tmp/contract_mutated"
+    val dir = graft.tools.Staging.dir("contract_mutated", sf)
     val p = Paths.get(dir)
     if (Files.exists(p))
       Files.walk(p).sorted(java.util.Comparator.reverseOrder())
@@ -35,7 +35,7 @@ class SchemaContractSpec extends SparkSpec {
   }
 
   test("a dropped column fails the check") {
-    val dir = "/root/repo/target/tmp/contract_mutated2"
+    val dir = graft.tools.Staging.dir("contract_mutated2", sf)
     Tables.names.foreach { t =>
       val df = spark.read.parquet(s"$sf/$t.parquet")
       val out = if (t == "documents") df.drop("lang") else df
@@ -43,5 +43,12 @@ class SchemaContractSpec extends SparkSpec {
     }
     val e = intercept[IllegalStateException](SchemaContract.check(spark, dir))
     assert(e.getMessage.contains("documents"))
+  }
+
+  test("a missing table fails naming its path") {
+    val sfDir = graft.tools.Staging.dir("tables_missing", sf)
+    assert(!Files.exists(Paths.get(sfDir)))
+    val e = intercept[java.io.FileNotFoundException](Tables.documents(spark, sfDir))
+    assert(e.getMessage.contains(s"$sfDir/documents.parquet"))
   }
 }

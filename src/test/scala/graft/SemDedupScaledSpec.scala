@@ -68,7 +68,7 @@ class SemDedupScaledSpec extends SparkSpec {
   test("embed cell index survives parquet persistence; probe flags exact clones") {
     val em = Tables.embeddings(spark, sf).limit(300).cache()
     val idx = Similarity.embedCellIndex(em, tables = 2)
-    val path = "/root/repo/target/tmp/embidx_spec"
+    val path = graft.tools.Staging.dir("embidx_spec", sf)
     idx.write.mode("overwrite").parquet(path)
     val persisted = spark.read.parquet(path)
     // probe the corpus's own vectors under new ids: every one is an

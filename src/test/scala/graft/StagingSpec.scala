@@ -11,9 +11,9 @@ import graft.tools.Staging
 /** `Staging` owns where graft writes: the fit-once staging key
   * (`dirKeyedOnSource`) has no silent fallback for a missing source and
   * moves on a rewrite the modTime alone cannot see; stream sources are
-  * re-copied when their table changes; no other `src/main` file builds
-  * a scratch path or names the checkout's own path; and no two queries
-  * share one.
+  * re-copied when their table changes; no other `src/main` file and no
+  * `src/test` file builds a scratch path or names the checkout's own
+  * path; and no two queries share one.
   */
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -56,21 +56,32 @@ class StagingSpec extends SparkSpec {
     assert(Files.readAllBytes(staged).toSeq == Seq[Byte](4, 5, 6, 7))
   }
 
-  test("no src/main file but Staging builds a scratch path or sanitizes a data dir") {
-    val root = Paths.get("src/main/scala")
+  /** Lines under `dir` (except in `owner`) that build a scratch path,
+    * sanitize a data dir or name the checkout's own path.
+    */
+  private def scratchPathHits(dir: String, owner: java.nio.file.Path): List[String] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
     val checkout = Paths.get("").toAbsolutePath.toString
     val banned = Seq("target/tmp", """replaceAll("[^A-Za-z0-9.]"""", checkout)
     val walk = Files.walk(root)
-    val hits = try walk.iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") &&
-        !f.endsWith(Paths.get("tools", "Staging.scala")))
+    try walk.iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.endsWith(owner))
       .flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
           case (line, i) if banned.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
         }
       }.toList
       finally walk.close()
+  }
+
+  test("no src/main file but Staging builds a scratch path or sanitizes a data dir") {
+    val hits = scratchPathHits("src/main/scala", Paths.get("tools", "Staging.scala"))
+    if (hits.nonEmpty) fail(hits.mkString(s"${hits.size} hits:\n", "\n", ""))
+  }
+
+  test("no src/test file builds a scratch path or names the checkout") {
+    val hits = scratchPathHits("src/test/scala", Paths.get("StagingSpec.scala"))
     if (hits.nonEmpty) fail(hits.mkString(s"${hits.size} hits:\n", "\n", ""))
   }
 

@@ -25,8 +25,8 @@ class StreamingWatermarkSpec extends SparkSpec {
   }
 
   test("checkpoint recovery: restart resumes aggregation state without reprocessing") {
-    val dir = "/root/repo/target/tmp/cp_stream_spec"
-    val cp = "/root/repo/target/tmp/cp_stream_spec_ckpt"
+    val dir = graft.tools.Staging.dir("cp_stream_spec", sf)
+    val cp = graft.tools.Staging.dir("cp_stream_spec_ckpt", sf)
     Seq(dir, cp).foreach { d =>
       val p = Paths.get(d)
       if (Files.exists(p)) {
@@ -69,7 +69,7 @@ class StreamingWatermarkSpec extends SparkSpec {
   }
 
   test("append mode emits closed windows once and drops late events") {
-    val dir = "/root/repo/target/tmp/wm_stream_spec"
+    val dir = graft.tools.Staging.dir("wm_stream_spec", sf)
     val p = Paths.get(dir)
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._

@@ -184,7 +184,7 @@ class TextSpec extends SparkSpec {
         .select("new_id", "corpus_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     }
-    val idxPath = "target/tmp/lsh_index_spec"
+    val idxPath = graft.tools.Staging.dir("lsh_index_spec", sf)
     MinHash.bucketIndex(corpus, "doc_id", "text")
       .write.mode("overwrite").partitionBy("band").parquet(idxPath)
     val got = MinHash.probeIndex(spark.read.parquet(idxPath), batch, corpus,

@@ -62,8 +62,8 @@ class ZOrderSpec extends SparkSpec {
 
   test("z-ordered layout round-trips exactly and prunes a 2-D rectangle") {
     val li = Tables.lineitem(spark, sf)
-    val zPath = "/root/repo/target/tmp/ztest_z"
-    val linPath = "/root/repo/target/tmp/ztest_linear"
+    val zPath = graft.tools.Staging.dir("ztest_z", sf)
+    val linPath = graft.tools.Staging.dir("ztest_linear", sf)
     ZOrder.clusterWrite2(li, "l_partkey", "l_orderkey", zPath,
       numFiles = 4, blockSize = Some(32 * 1024))
     // control: same data, same row-group granule, sorted on ONE column
