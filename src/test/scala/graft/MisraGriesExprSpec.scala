@@ -154,8 +154,6 @@ class MisraGriesExprSpec extends SparkSpec {
 }
 
 object MisraGriesExprSpec {
-  import org.apache.spark.sql.{Column, DataFrame}
-
   def rows(df: DataFrame): Seq[(String, Long)] =
     df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
 
