@@ -75,6 +75,12 @@ class MisraGriesExprSpec extends SparkSpec {
     assert(cand(df.filter(col("item") === "zzz"), 4, array(col("item"))).isEmpty)
   }
 
+  test("a child that is neither string nor array<string> fails analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(1L, 2L).toDF("i").agg(MisraGriesExpr(4)(col("i"))))
+    assert(e.getMessage.contains("array<string>"))
+  }
+
   test("text child ≡ array child over its exploded tokens (1 partition) + total") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text").coalesce(1)
     for (k <- Seq(8, 64, 512)) {
