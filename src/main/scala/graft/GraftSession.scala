@@ -64,6 +64,11 @@ object GraftSession {
       // scale path.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       .config("spark.sql.session.timeZone", "UTC")
+      // Read parquet INT64 TIMESTAMP(NANOS) columns as int64 nanoseconds
+      // (older corpus drops store `events.ts` so; `Tables.eventsTs`
+      // truncates them to µs). Set once here so that reading a table
+      // never writes the caller's session conf.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"${sys.props.getOrElse("user.dir", ".")}/target/spark-warehouse")

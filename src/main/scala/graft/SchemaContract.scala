@@ -59,7 +59,6 @@ object SchemaContract {
     * exception naming ALL mismatches (missing/extra/retyped columns).
     */
   def check(spark: SparkSession, sfDir: String): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val problems = Tables.names.flatMap { t =>
       val want = expected(t)
       try {

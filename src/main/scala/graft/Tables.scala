@@ -54,15 +54,13 @@ object Tables {
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def part(s: SparkSession, d: String): DataFrame = apply(s, d, "part")
   /** The events table, `ts` normalized by [[eventsTs]]. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    eventsTs(apply(s, d, "events"))
-  }
+  def events(s: SparkSession, d: String): DataFrame = eventsTs(apply(s, d, "events"))
 
   /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) (older
     * corpus drops) or TIMESTAMP(MICROS) (current). Branch on the dtype
     * the scan actually produces rather than assuming a unit:
-    *  - int64 (ns under the legacy nanosAsLong conf) → truncate to µs,
+    *  - int64 (ns under the legacy nanosAsLong conf, which
+    *    `GraftSession.builder` sets) → truncate to µs,
     *    the same ns→µs truncation the reference's int64 timestamps imply
     *    (reference `legate/pandas/common/types.py:112-121` stores
     *    datetime64[ns] as int64);
@@ -127,8 +125,7 @@ object Tables {
       s.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     val path = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bytes =
-      if (fs.exists(path)) fs.getContentSummary(path).getLength else Long.MaxValue
+    val bytes = fs.getContentSummary(path).getLength // FileNotFoundException naming path
     val splits = math.max(1L, bytes / maxPart)
     // Fanout width is SIZE-DERIVED, capped at machine width (r14): a
     // flat repartition(cores) gave a 584 KB corpus 32 ~18 KB tasks whose

@@ -76,4 +76,13 @@ object Num {
   /** price × discount variant (TPC-H Q6). */
   def sumPriceTimes(price: Column, factor: Column): Column =
     round(Int128Sum(cents(price) * cents(factor), 4), 2).cast("double")
+
+  /** DuckDB's `quantile_disc(c, p)` for each p in `ps`, as one aggregate
+    * returning an array of doubles: element i is the smallest value v of
+    * column `c` with count(c ≤ v) ≥ ceil(ps(i)·n), over the non-null
+    * values, exact for |v| < 2^53. All `ps` share one buffer of `c`'s
+    * values; a `percentile_disc` per p would build one each.
+    */
+  def quantileDisc(c: String, ps: Double*): Column =
+    expr(s"percentile_disc(array(${ps.mkString(", ")})) WITHIN GROUP (ORDER BY $c)")
 }

@@ -44,20 +44,17 @@ object RankMethods {
     val dense = Cumulative.globalScanRowNumber(
       counts, Seq(valueCol), "__cnt", "__cum", "__dense")
     // total row count — only the descending variant needs it
-    lazy val n = counts.agg(sum("__cnt")).collect()(0) match {
-      case r if r.isNullAt(0) => 0.0
-      case r                  => r.getDouble(0)
-    }
+    lazy val n = counts.agg(sum("__cnt")).scalar()
     // counts are integers carried in doubles (exact to 2^53); descending
     // ranks are the mirrored arithmetic on the same scan.
     val rmax0 = col("__cum")
     val rmin0 = col("__cum") - col("__cnt") + lit(1.0)
     val (rmin, rmax) =
       if (ascending) (rmin0, rmax0)
-      else (lit(n) - rmax0 + lit(1.0), lit(n) - rmin0 + lit(1.0))
+      else (n - rmax0 + lit(1.0), n - rmin0 + lit(1.0))
     val denseExpr =
       if (ascending) col("__dense")
-      else lit(dense.count()) - col("__dense") + lit(1L) // renumber from top
+      else counts.agg(count(lit(1))).scalar() - col("__dense") + lit(1L) // from top
     val ranks = dense.select(
       col(valueCol).as("__rank_v"), // renamed: the join is a self-derived
       rmin.cast("long").as(s"${out}_min"), // lineage, an ambiguous name

@@ -59,13 +59,13 @@ object Round21Queries {
             ((col("r") * col("c")).cast("double") / col("n").cast("double")).as("e"))
           .select(col("source"), col("lang"),
             ((col("ob") - col("e")) * (col("ob") - col("e")) / col("e")).as("term"))
-        val nR = r.count()
-        val nC = c.count()
+        val nR = r.agg(count(lit(1))).scalar()
+        val nC = c.agg(count(lit(1))).scalar()
         cells.agg(sort_array(collect_list(struct(col("source"), col("lang"),
             col("term")))).as("ts"))
           .select(Num.rnd(aggregate(col("ts"), lit(0.0),
             (acc, x) => acc + x.getField("term")), 6).as("chi2"),
-            lit((nR - 1) * (nC - 1)).as("dof"))
+            ((nR - 1) * (nC - 1)).as("dof"))
       },
       Some("""WITH o AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS o
             FROM documents GROUP BY 1, 2),

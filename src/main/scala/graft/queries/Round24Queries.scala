@@ -71,10 +71,11 @@ object Round24Queries {
             explode(graft.text.TextStats.tokensNonEmpty(col("text"))).as("w"))
         val tf = sw.groupBy("source", "w").agg(count(lit(1)).as("tf"))
         val df = tf.groupBy("w").agg(count(lit(1)).as("df"))
-        val nS = Tables.documents(s, d).select("source").distinct().count()
+        val nS = Tables.documents(s, d).select("source").distinct()
+          .agg(count(lit(1))).scalar()
         val scored = tf.join(df, "w")
           .select(col("source"), col("w"),
-            (col("tf").cast("double") * ((lit(nS) + 1).cast("double")
+            (col("tf").cast("double") * ((nS + 1).cast("double")
               / (col("df") + 1).cast("double"))).as("tfidf"))
         graft.plans.GroupTopK.topKPerKey(scored, Seq("source"),
           Seq("tfidf" -> true, "w" -> false), 5)

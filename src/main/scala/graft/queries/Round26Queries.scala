@@ -16,10 +16,10 @@ object Round26Queries {
     "q313_rank_pct" -> QueryDef(
       (s, d) => {
         val o = Tables.orders(s, d).select("o_orderkey", "o_totalprice")
-        val n = o.count()
+        val n = o.agg(count(lit(1))).scalar()
         graft.operators.RankMethods.rank(o, "o_totalprice", "r")
           .select(col("o_orderkey"), col("o_totalprice"),
-            (col("r_avg") / lit(n.toDouble)).as("pct_rank"))
+            (col("r_avg") / n.cast("double")).as("pct_rank"))
       },
       Some("""WITH c AS (SELECT o_totalprice AS v, CAST(count(*) AS DOUBLE) AS cnt
             FROM orders GROUP BY 1),

@@ -245,13 +245,13 @@ object Round29Queries {
         val ev = Tables.events(s, d).select(col("user_id"), col("event_type"))
         val uc = ev.groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
         val un = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
-        val gTot = ev.count()
+        val gTot = ev.agg(count(lit(1))).scalar()
         val gc = ev.groupBy("event_type").agg(count(lit(1)).as("gc"))
         val terms = uc.join(un, Seq("user_id")).join(broadcast(gc), Seq("event_type"))
           .select(col("user_id"), col("event_type"), col("n"),
             Num.rnd({
               val pu = col("c").cast("double") / col("n").cast("double")
-              val pg = col("gc").cast("double") / lit(gTot.toDouble)
+              val pg = col("gc").cast("double") / gTot.cast("double")
               pu * log(pu / pg)
             }, 6).as("term"))
         terms.groupBy("user_id")

@@ -494,7 +494,7 @@ object Round2Queries {
     "q118_tfidf" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val n = docs.count()
+        val n = docs.agg(count(lit(1))).scalar()
         val terms = docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
           .filter(col("term") =!= "")
@@ -503,7 +503,7 @@ object Round2Queries {
           .groupBy("term").agg(count(lit(1)).as("df"))
         val scored = tf.join(df_, "term")
           .withColumn("score", Num.rnd(
-            col("tf") * (lit(n.toDouble) / col("df")), 6))
+            col("tf") * (n.cast("double") / col("df")), 6))
         graft.plans.GroupTopK.topKPerKey(
             scored.select("doc_id", "term", "score"),
             Seq("doc_id"), Seq(("score", true), ("term", false)), 3)

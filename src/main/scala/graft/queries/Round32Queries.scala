@@ -83,12 +83,12 @@ object Round32Queries {
         val o = docs.groupBy("source", "lang").agg(count(lit(1)).as("o"))
         val r = docs.groupBy("source").agg(count(lit(1)).as("r"))
         val c = docs.groupBy("lang").agg(count(lit(1)).as("c"))
-        val nTot = docs.count()
+        val nTot = docs.agg(count(lit(1))).scalar().cast("double")
         val cells = o.join(r, Seq("source")).join(broadcast(c), Seq("lang"))
           .select(col("source"), col("lang"),
             Num.rnd({
-              val p = col("o").cast("double") / lit(nTot.toDouble)
-              p * log(col("o").cast("double") * lit(nTot.toDouble)
+              val p = col("o").cast("double") / nTot
+              p * log(col("o").cast("double") * nTot
                 / (col("r").cast("double") * col("c").cast("double")))
             }, 6).as("term"))
         cells.agg(

@@ -69,19 +69,19 @@ object Round33Queries {
     "q348_stopword_discovery" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val nDocs = docs.count()
+        val nDocs = docs.agg(count(lit(1))).scalar()
         val tok = docs.select(col("doc_id"),
           explode(graft.text.TextStats.tokensNonEmpty(col("text"))).as("w"))
         val dfreq = tok.select(col("doc_id"), col("w")).distinct()
           .groupBy("w").agg(count(lit(1)).as("df"))
         val mass = tok.groupBy("w").agg(count(lit(1)).as("tf"))
-        val totalTf = tok.count()
+        val totalTf = tok.agg(count(lit(1))).scalar()
         dfreq.join(mass, Seq("w"))
-          .filter(col("df") * 2 > lit(nDocs))
+          .filter(col("df") * 2 > nDocs)
           .select(col("w"), col("df"), col("tf"),
-            Num.rnd(col("df").cast("double") / lit(nDocs.toDouble), 6)
+            Num.rnd(col("df").cast("double") / nDocs.cast("double"), 6)
               .as("df_ratio"),
-            Num.rnd(col("tf").cast("double") / lit(totalTf.toDouble), 6)
+            Num.rnd(col("tf").cast("double") / totalTf.cast("double"), 6)
               .as("mass_share"))
       },
       Some("""WITH tok AS (SELECT doc_id, unnest(list_filter(

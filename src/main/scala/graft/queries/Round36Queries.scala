@@ -3,28 +3,28 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.functions.Num
 
-/** Round-36 additions: exact scalable quantiles via bisection. */
+/** Round-36 additions: exact discrete quantiles as one aggregate. */
 object Round36Queries {
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
-    // Exact discrete quantiles WITHOUT value buffering
-    // (operators/Selection): the price column scaled to integer cents,
-    // median and p90 found by value-domain bisection — ~24 codegen'd
-    // count passes, O(1) executor state, exact at any scale.  This is
-    // the third quantile path beside `percentile` (exact, memory-heavy)
-    // and the q271 histogram sketch (bounded, bracketing); the oracle
-    // pins the semantics to DuckDB's quantile_disc.
+    // Exact discrete quantiles of the price column scaled to integer
+    // cents: one aggregate computes the count, the median and the p90
+    // (`Num.quantileDisc`, DuckDB's `quantile_disc`). This is the exact
+    // quantile path beside `percentile` (interpolating) and the q271
+    // histogram sketch (bounded, bracketing); the oracle pins the
+    // semantics.
     "q354_bisect_quantiles" -> QueryDef(
       (s, d) => {
         val cents = Tables.lineitem(s, d)
           .select(expr("cast(round(l_extendedprice * 100) as long)").as("c"))
-        val med = graft.operators.Selection.quantileDisc(cents, col("c"), 0.5)
-        val p90 = graft.operators.Selection.quantileDisc(cents, col("c"), 0.9)
-        val n = cents.count()
-        import s.implicits._
-        Seq((n, med / 100.0, p90 / 100.0)).toDF("n", "median", "p90")
+        // the quantiles' doubles hold the cents exactly: a decimal(15,2)
+        // price is below 2^53 cents
+        def dollars(i: Int) = col("q")(i).cast("bigint") / 100.0
+        cents.agg(count(lit(1)).as("n"), Num.quantileDisc("c", 0.5, 0.9).as("q"))
+          .select(col("n"), dollars(0).as("median"), dollars(1).as("p90"))
       },
       Some("""WITH c AS (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS c
             FROM lineitem)

@@ -364,24 +364,21 @@ object Round43Queries {
           .cosinePairsTiledKernel(em, 0.4)
           .select(col("id1"), col("id2"))
         // q373's cell assignment (count-derived C, same planes)
-        val planes = graft.similarity.Similarity.planeLiterals(32, 64, seed = 7L)
-        val n = em.count()
-        val c = math.max(1L, (n + 255) / 256)
+        val sim = graft.similarity.Similarity
         val assigned = em.select(col("vec_id"),
-          pmod(graft.similarity.Similarity.signBits(col("embedding"), planes),
-            lit(c)).as("cell"))
+          sim.signCell(col("embedding"), 0, sim.foldModulus(em, 256)).as("cell"))
         val cand = assigned.as("x").join(
             assigned.select(col("vec_id").as("vid2"), col("cell").as("cell2")),
             col("cell") === col("cell2") && col("vec_id") < col("vid2"))
           .select(col("vec_id").as("id1"), col("vid2").as("id2"))
         val tp = cand.join(truth, Seq("id1", "id2"), "left_semi")
-        val row = truth.agg(count(lit(1))).collect()(0).getLong(0)
+        val nTruth = truth.agg(count(lit(1))).scalar()
         cand.agg(count(lit(1)).as("n_cand"))
           .crossJoin(tp.agg(count(lit(1)).as("n_tp")))
-          .select(lit(row).as("n_truth"), col("n_cand"), col("n_tp"),
+          .select(nTruth.as("n_truth"), col("n_cand"), col("n_tp"),
             Num.rnd(col("n_tp").cast("double") / col("n_cand").cast("double"), 6)
               .as("precision"),
-            Num.rnd(col("n_tp").cast("double") / lit(row.toDouble), 6)
+            Num.rnd(col("n_tp").cast("double") / nTruth.cast("double"), 6)
               .as("recall"))
       },
       Some(s"""WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
@@ -424,13 +421,13 @@ object Round43Queries {
         val cand = graft.similarity.Similarity
           .bandedCandidatePairs(em.select(col("vec_id"), col("embedding")), 4)
         val tp = cand.join(truth, Seq("id1", "id2"), "left_semi")
-        val nTruth = truth.agg(count(lit(1))).collect()(0).getLong(0)
+        val nTruth = truth.agg(count(lit(1))).scalar()
         cand.agg(count(lit(1)).as("n_cand"))
           .crossJoin(tp.agg(count(lit(1)).as("n_tp")))
-          .select(lit(nTruth).as("n_truth"), col("n_cand"), col("n_tp"),
+          .select(nTruth.as("n_truth"), col("n_cand"), col("n_tp"),
             Num.rnd(col("n_tp").cast("double") / col("n_cand").cast("double"), 6)
               .as("precision"),
-            Num.rnd(col("n_tp").cast("double") / lit(nTruth.toDouble), 6)
+            Num.rnd(col("n_tp").cast("double") / nTruth.cast("double"), 6)
               .as("recall"))
       },
       Some {

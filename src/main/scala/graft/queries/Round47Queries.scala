@@ -11,8 +11,7 @@ import graft.text.{Shingles, SlidingChunkSet, TextStats}
   *
   *  - q405 exact-quantile length filter (drop the p10/p90 tails of the
   *    token-length distribution — the most common web-curation filter),
-  *    composed from the bounded-memory exact quantile (value-domain
-  *    bisection, q354's operator);
+  *    on q354's discrete-quantile aggregate;
   *  - q406 OVERLAPPING sliding-window chunking (window 64, stride 48)
   *    via the native one-pass [[SlidingChunkSet]] kernel — context-
   *    window prep that keeps boundary-crossing text learnable;
@@ -31,21 +30,24 @@ object Round47Queries {
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
-    // Length filter on exact percentiles: two value-domain bisections
-    // (O(log range) count passes, O(1) executor state — no sort, no
-    // percentile buffering) fix the [p10, p90] token-length band, then
-    // one scan-stage aggregation reports the per-language effect.
+    // Length filter on exact percentiles: a one-row aggregate of both
+    // discrete quantiles fixes the [p10, p90] token-length band and is
+    // crossed into the scan (the oracle's `FROM t, q`), then one
+    // scan-stage aggregation reports the per-language effect.
     "q405_length_filter" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
           TextStats.nTokens(col("text")).as("tok"))
-        val p10 = graft.operators.Selection.quantileDisc(docs, col("tok"), 0.1)
-        val p90 = graft.operators.Selection.quantileDisc(docs, col("tok"), 0.9)
-        docs.groupBy("lang").agg(
+        // the quantiles' doubles hold the token counts exactly: ints
+        val band = docs.agg(Num.quantileDisc("tok", 0.1, 0.9).as("q"))
+          .select(col("q")(0).cast("bigint").as("p10"),
+            col("q")(1).cast("bigint").as("p90"))
+        docs.crossJoin(broadcast(band)).groupBy("lang").agg(
           count(lit(1)).as("n_docs"),
-          sum(when(col("tok") < p10, 1L).otherwise(0L)).as("n_short"),
-          sum(when(col("tok") > p90, 1L).otherwise(0L)).as("n_long"),
-          sum(when(col("tok") >= p10 && col("tok") <= p90, col("tok").cast("long"))
+          sum(when(col("tok") < col("p10"), 1L).otherwise(0L)).as("n_short"),
+          sum(when(col("tok") > col("p90"), 1L).otherwise(0L)).as("n_long"),
+          sum(when(col("tok") >= col("p10") && col("tok") <= col("p90"),
+            col("tok").cast("long"))
             .otherwise(0L)).as("kept_tokens"))
       },
       Some("""WITH t AS (SELECT doc_id, lang,

@@ -98,12 +98,9 @@ object Round58Queries {
     "q438_cluster_cap" -> QueryDef(
       (s, d) => {
         val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val n = emb.count()
-        val c = math.max(1L, (n + 255) / 256)
-        val planes = graft.similarity.Similarity.planeLiterals(32, 64, seed = 7L)
+        val sim = graft.similarity.Similarity
         val assigned = emb.select(col("vec_id"),
-          pmod(graft.similarity.Similarity.signBits(col("embedding"), planes),
-            lit(c)).as("cell"),
+          sim.signCell(col("embedding"), 0, sim.foldModulus(emb, 256)).as("cell"),
           md5(concat(lit("cap:"), col("vec_id").cast("string"))).as("h"))
         val kept = graft.plans.GroupTopK.topKPerKey(
             assigned, Seq("cell"), Seq(("h", false)), CAP)

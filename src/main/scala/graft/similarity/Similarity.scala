@@ -61,6 +61,24 @@ object Similarity {
       planes.map(_.toSeq).toSeq))
   }
 
+  /** Sign-signature cell of `vec` in table `t`: the 32-plane signature
+    * (planes from seed 7 + t) folded mod `c`. Table 0 is
+    * [[semDedupScaled]]'s; the oracle side is
+    * `SimilarityQueries.sigSql32At`.
+    */
+  def signCell(vec: Column, t: Int, c: Column): Column =
+    pmod(signBits(vec, planeLiterals(32, 64, seed = 7L + t)), c)
+
+  /** Fold modulus C = max(1, ⌈n / targetCell⌉) over `df`'s row count, as
+    * an uncorrelated scalar subquery: the count runs inside the plan
+    * that reads it, not while the Dataset is built. The uses of one
+    * returned Column run it once: AQE plans the others as
+    * `ReusedSubquery` (SemDedupScaledSpec).
+    */
+  def foldModulus(df: DataFrame, targetCell: Int): Column =
+    df.agg(expr(s"greatest(1, (count(1) + ${targetCell - 1}) div $targetCell)"))
+      .scalar()
+
   /** Composed-expression twin of [[signBits]] (differential tests). */
   def signBitsComposed(vec: Column, planes: Array[Array[Double]]): Column = {
     val bits = planes.zipWithIndex.map { case (p, i) =>
@@ -329,7 +347,7 @@ object Similarity {
     * centroid model, where cell population grows linearly with the
     * corpus and per-cell pair work is quadratic by construction.
     *
-    * Shape: one `count()` (the only driver action), then cell =
+    * Shape: C is a count subquery ([[foldModulus]]), then cell =
     * (32-bit Rademacher signature) mod C — a per-row scan-stage hash,
     * NO assignment join (nearest-of-k-centroids with k ∝ n would cost
     * n·k = n²/targetCell; this costs n) — then the same min-id dominance
@@ -350,18 +368,15 @@ object Similarity {
     */
   def semDedupScaled(corpus: DataFrame, threshold: Double,
       targetCell: Int = 256, maxCell: Int = 1000): DataFrame = {
-    val planes = planeLiterals(32, 64, seed = 7L)
-    // r11 shape: ONE count() for the fold modulus, then scan -> cell
-    // assignment -> single hash exchange on cell -> partition-local
+    // r11 shape: scan -> cell assignment (fold modulus from a count
+    // subquery) -> single hash exchange on cell -> partition-local
     // election kernel ([[semDedupKernel]]). No caches (nothing to
     // release - closes the r10 cache-ownership advice), no pair join,
     // no candidate-fetch joins: each embedding crosses the wire ONCE.
     val proj = corpus.select(col("vec_id"), col("embedding"))
-    val n = proj.count()
-    val c = math.max(1L, (n + targetCell - 1) / targetCell)
+    val c = foldModulus(proj, targetCell)
     val assigned = proj.select(col("vec_id"),
-      pmod(signBits(col("embedding"), planes), lit(c)).as("cell"),
-      col("embedding"))
+      signCell(col("embedding"), 0, c).as("cell"), col("embedding"))
     semDedupKernel(assigned, threshold, maxCell)
   }
 
@@ -498,25 +513,21 @@ object Similarity {
     */
   def bandedCandidatePairs(corpus: DataFrame, tables: Int,
       targetCell: Int = 256): DataFrame = {
-    // 2R+1 consumers (count + both sides of each table's cell join):
-    // cache the two-column projection once. Ownership as in
-    // [[semDedupScaled]]: materialize-and-release — the pair set is
-    // localCheckpointed below and the cache released before return.
-    val proj = corpus.select(col("vec_id"), col("embedding")).cache()
-    val n = proj.count()
-    val c = math.max(1L, (n + targetCell - 1) / targetCell)
+    // No cache of the projection: the count subquery reads no column,
+    // and a traced sf0.1 A/B of q379 measured the cached variant no
+    // faster. The pair set is localCheckpointed: callers read it more
+    // than once (q379: the candidate count and the truth semi-join).
+    val proj = corpus.select(col("vec_id"), col("embedding"))
+    val c = foldModulus(proj, targetCell)
     val perTable = (0 until tables).map { t =>
-      val planes = planeLiterals(32, 64, seed = 7L + t)
       val assigned = proj.select(col("vec_id"),
-        pmod(signBits(col("embedding"), planes), lit(c)).as("cell"))
+        signCell(col("embedding"), t, c).as("cell"))
       assigned.as("x").join(
           assigned.select(col("vec_id").as("vid2"), col("cell").as("cell2")),
           col("cell") === col("cell2") && col("vec_id") < col("vid2"))
         .select(col("vec_id").as("id1"), col("vid2").as("id2"))
     }
-    val result = perTable.reduce(_.unionAll(_)).distinct().localCheckpoint(true)
-    proj.unpersist(blocking = false)
-    result
+    perTable.reduce(_.unionAll(_)).distinct().localCheckpoint(true)
   }
 
   /** Persistable sign-signature cell index of a deduplicated corpus —
@@ -533,15 +544,10 @@ object Similarity {
     // frozenC reuses an EXISTING index's modulus (for rebuild-equivalence
     // checks against [[mergeEmbedIndex]]); the default derives it from
     // the corpus count as at first build.
-    val c = frozenC.getOrElse {
-      val n = corpus.count()
-      math.max(1L, (n + targetCell - 1) / targetCell)
-    }
+    val c = frozenC.fold(foldModulus(corpus, targetCell))(lit(_))
     (0 until tables).map { t =>
-      val planes = planeLiterals(32, 64, seed = 7L + t)
-      corpus.select(lit(t).as("t"),
-        pmod(signBits(col("embedding"), planes), lit(c)).as("cell"),
-        col("vec_id"), lit(c).as("c"))
+      corpus.select(lit(t).as("t"), signCell(col("embedding"), t, c).as("cell"),
+        col("vec_id"), c.as("c"))
     }.reduce(_.unionAll(_))
   }
 
@@ -582,9 +588,8 @@ object Similarity {
       threshold: Double): DataFrame = {
     val (c, tables) = indexMeta(index)
     val probes = (0 until tables).map { t =>
-      val planes = planeLiterals(32, 64, seed = 7L + t)
       batch.select(col("vec_id").as("new_id"), lit(t).as("t"),
-        pmod(signBits(col("embedding"), planes), lit(c)).as("cell"))
+        signCell(col("embedding"), t, lit(c)).as("cell"))
     }.reduce(_.unionAll(_))
     val cand = probes
       .join(index.select(col("t"), col("cell"), col("vec_id").as("corpus_id")),
@@ -623,8 +628,8 @@ object Similarity {
       rs: Seq[Int] = Seq(1, 2, 4, 8),
       cells: Seq[Int] = Seq(128, 256, 512)): DataFrame = {
     import corpus.sparkSession.implicits._
+    // read by the truth pass and by each grid cell's count and R tables
     val proj = corpus.select(col("vec_id"), col("embedding")).cache()
-    val n = proj.count()
     val truth = cosinePairsTiledKernel(proj, threshold)
       .select(col("id1"), col("id2"), lit(1L).as("__tp"))
       .localCheckpoint(true)
@@ -632,11 +637,10 @@ object Similarity {
     val maxR = rs.max
     val rsDf = rs.toDF("r")
     val perCell = cells.map { targetCell =>
-      val c = math.max(1L, (n + targetCell - 1) / targetCell)
+      val c = foldModulus(proj, targetCell)
       val sigs = (0 until maxR).map { t =>
-        val planes = planeLiterals(32, 64, seed = 7L + t)
         proj.select(col("vec_id"), lit(t).as("t"),
-          pmod(signBits(col("embedding"), planes), lit(c)).as("cell"))
+          signCell(col("embedding"), t, c).as("cell"))
       }.reduce(_.unionAll(_))
       // min first-colliding table per pair: R covers the pair iff mt < R
       val firstT = sigs.as("x")
@@ -744,9 +748,7 @@ object Similarity {
   def mergeEmbedIndex(index: DataFrame, accepted: DataFrame): DataFrame = {
     val (c, tables) = indexMeta(index)
     val batchRows = (0 until tables).map { t =>
-      val planes = planeLiterals(32, 64, seed = 7L + t)
-      accepted.select(lit(t).as("t"),
-        pmod(signBits(col("embedding"), planes), lit(c)).as("cell"),
+      accepted.select(lit(t).as("t"), signCell(col("embedding"), t, lit(c)).as("cell"),
         col("vec_id"), lit(c).as("c"))
     }.reduce(_.unionAll(_))
     index.unionByName(batchRows)
@@ -767,13 +769,10 @@ object Similarity {
   def semDedupBanded(corpus: DataFrame, threshold: Double,
       tables: Int = 4, targetCell: Int = 256): DataFrame = {
     val proj = corpus.select(col("vec_id"), col("embedding"))
-    val n = proj.count()
-    val c = math.max(1L, (n + targetCell - 1) / targetCell)
+    val c = foldModulus(proj, targetCell)
     val perTable = (0 until tables).map { t =>
-      val planes = planeLiterals(32, 64, seed = 7L + t)
       proj.select(col("vec_id"),
-        (pmod(signBits(col("embedding"), planes), lit(c)) + lit(t * c))
-          .as("cell"),
+        (signCell(col("embedding"), t, c) + lit(t) * c).as("cell"),
         col("embedding"))
     }.reduce(_.unionAll(_))
     semDedupScored(perTable, maxCell = Int.MaxValue)

@@ -125,10 +125,8 @@ object EmbedStreams {
     val stream = embStream(spark, sfDir)
       .filter(col("vec_id") % 97 === 0)
     val probes = (0 until tables).map { t =>
-      val planes = Similarity.planeLiterals(32, 64, seed = 7L + t)
       stream.select(col("vec_id").as("new_id"), col("embedding").as("nb"),
-        lit(t).as("t"),
-        pmod(Similarity.signBits(col("embedding"), planes), lit(c)).as("cell"))
+        lit(t).as("t"), Similarity.signCell(col("embedding"), t, lit(c)).as("cell"))
     }.reduce(_.unionByName(_))
     val verified = probes
       .join(idx.select(col("t"), col("cell"), col("vec_id").as("corpus_id")),

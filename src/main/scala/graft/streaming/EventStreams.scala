@@ -41,7 +41,6 @@ object EventStreams {
     */
   private def eventsFrom(spark: SparkSession, dir: String,
                          options: Map[String, String] = Map.empty): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(dir).schema("ts").dataType
     graft.Tables.eventsTs(
       spark.readStream.schema(rawSchema(tsType)).options(options).parquet(dir))

@@ -6,6 +6,10 @@ package graft
   * does building a bloom-gated decontamination (q221, q224, q189): the
   * bloom is built inside its `BloomFilter` node's exec. Their tables are
   * resolved first, as any caller's are, so the count is the query's own.
+  * Size-derived scalars (q354's and q405's quantiles, the sign-cell fold
+  * modulus of q373, q378, q380 and q438, and the row counts of q118,
+  * q293, q308, q313, q332, q345 and q348) are scalar subqueries or
+  * one-row aggregates inside the plan, so those build with 0 jobs too.
   * Triangle counting (q321) still counts and collects while it is built:
   * its lazy form measured slower (see CHANGES.md).
   *
@@ -24,13 +28,19 @@ class ConstructionJobsSpec extends SparkSpec {
   private val lazyQueries = Seq("q263_pagerank", "q266_label_prop", "q268_ppr",
     "q294_hits", "q302_weighted_pagerank",
     "q146_embed_dedup", "q166_minhash_dedup", "q281_survivorship",
-    "q221_decontaminate", "q224_gframe_curation", "q189_decontam_bloom")
+    "q221_decontaminate", "q224_gframe_curation", "q189_decontam_bloom",
+    "q354_bisect_quantiles", "q405_length_filter",
+    "q373_semdedup_scaled", "q378_lsh_operating_point", "q380_semdedup_banded",
+    "q438_cluster_cap", "q118_tfidf", "q293_chi2", "q308_source_keywords",
+    "q313_rank_pct", "q332_kl_anomaly", "q345_mutual_information",
+    "q348_stopword_discovery")
 
   private val gatedQueries = Seq("q54_ngram_jaccard", "q114_dedup_clusters",
     "q169_substring_dup", "q198_substring_dup_winnowed")
 
   private def buildJobs(q: String): Int = {
-    Seq("lineitem", "orders", "documents", "embeddings").foreach(Tables(spark, sf, _))
+    Seq("lineitem", "orders", "documents", "embeddings", "events")
+      .foreach(Tables(spark, sf, _))
     jobsWhile(SparkEntry.queries(q)(spark, sf))._2
   }
 

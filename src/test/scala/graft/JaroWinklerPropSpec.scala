@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Property tests for the native Jaro-Winkler expression and the
-  * bisection selection operator, each against an INDEPENDENT
-  * reference implementation (different code path, naive and readable).
+/** Property tests for the native Jaro-Winkler expression against an
+  * INDEPENDENT reference implementation (different code path, naive and
+  * readable).
   */
 class JaroWinklerPropSpec extends SparkSpec {
 
@@ -80,37 +80,6 @@ class JaroWinklerPropSpec extends SparkSpec {
       assert(r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0)
       assert(r.getString(0).isEmpty || r.getDouble(3) == 1.0) // identity
     }
-  }
-
-  test("bisection quantile matches sorted-rank selection on random data") {
-    import graft.operators.Selection
-    import spark.implicits._
-    val lists = Gen.nonEmptyListOf(Gen.chooseNum(-1000L, 1000L))
-    for (seed <- 1 to 20) {
-      val xs = sample(lists, seed.toLong)
-      val pct = sample(Gen.chooseNum(1, 99), seed + 500L)
-      val p = pct / 100.0
-      val got = Selection.quantileDisc(xs.toDF("v"), col("v"), p)
-      val sorted = xs.sorted
-      val rank = math.max(1, math.ceil(p * xs.length).toInt)
-      assert(got == sorted(rank - 1), s"seed $seed")
-    }
-  }
-
-  test("bisection quantile ignores nulls (ADVICE r9: rank must stay reachable)") {
-    import graft.operators.Selection
-    val df = spark.createDataFrame(
-      java.util.Arrays.asList(
-        org.apache.spark.sql.Row(1L), org.apache.spark.sql.Row(null),
-        org.apache.spark.sql.Row(2L), org.apache.spark.sql.Row(null),
-        org.apache.spark.sql.Row(3L), org.apache.spark.sql.Row(4L)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType, nullable = true))))
-    // non-null domain {1,2,3,4}: p=0.5 → rank 2 → value 2. With nulls
-    // inflating n (old bug) rank would be 3 → value 3.
-    assert(Selection.quantileDisc(df, col("v"), 0.5) == 2L)
-    assert(Selection.quantileDisc(df, col("v"), 1.0) == 4L)
   }
 
   test("odd transposition counts pin to DuckDB jaro_winkler_similarity") {

@@ -1,9 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
-/** Round-35 wave: image hamming near-dup, interval union. */
+import graft.functions.Num
+
+/** Round-35 wave: image hamming near-dup, interval union, exact
+  * discrete quantiles. */
 class Round29Spec extends SparkSpec {
+
+  /** The discrete p-quantile of `c` in `df`, by q354's aggregate. */
+  private def quantileDisc(df: DataFrame, c: String, p: Double): Long =
+    df.agg(Num.quantileDisc(c, p)(0).cast("bigint")).head().getLong(0)
 
   test("image near-dup equals the driver brute force over all hash pairs") {
     val got = SparkEntry.queries("q352_image_neardup")(spark, sf).collect()
@@ -32,20 +42,44 @@ class Round29Spec extends SparkSpec {
     assert(islands == sessions)
   }
 
-  test("bisection quantile equals the sort-based discrete quantile") {
-    import graft.operators.Selection
+  test("discrete quantile aggregate equals the sort-based discrete quantile") {
     import spark.implicits._
     val vals = Seq(5L, 1L, 9L, 3L, 3L, 7L, 100L, -4L).toDF("v")
-    assert(Selection.quantileDisc(vals, col("v"), 0.5) == 3L) // rank ceil(4)=4 → 3
-    assert(Selection.quantileDisc(vals, col("v"), 0.9) == 100L)
-    assert(Selection.quantileDisc(vals, col("v"), 0.0) == -4L)
-    // against the engine's own exact percentile on real data
+    assert(quantileDisc(vals, "v", 0.5) == 3L) // rank ceil(4)=4 → 3
+    assert(quantileDisc(vals, "v", 0.9) == 100L)
+    assert(quantileDisc(vals, "v", 0.0) == -4L)
+    // against a driver sort of real data
     val cents = Tables.lineitem(spark, sf)
       .select(expr("cast(round(l_extendedprice * 100) as long)").as("c"))
-    val med = Selection.quantileDisc(cents, col("c"), 0.5)
+    val med = quantileDisc(cents, "c", 0.5)
     val sorted = cents.collect().map(_.getLong(0)).sorted
     val rank = math.ceil(0.5 * sorted.length).toInt
     assert(med == sorted(rank - 1))
+  }
+
+  test("discrete quantile aggregate matches sorted-rank selection on random data") {
+    import spark.implicits._
+    def sample[A](g: Gen[A], seed: Long): A =
+      g.apply(Gen.Parameters.default, Seed(seed)).get
+    val lists = Gen.nonEmptyListOf(Gen.chooseNum(-1000L, 1000L))
+    for (seed <- 1 to 20) {
+      val xs = sample(lists, seed.toLong)
+      val pct = sample(Gen.chooseNum(1, 99), seed + 500L)
+      val p = pct / 100.0
+      val got = quantileDisc(xs.toDF("v"), "v", p)
+      val sorted = xs.sorted
+      val rank = math.max(1, math.ceil(p * xs.length).toInt)
+      assert(got == sorted(rank - 1), s"seed $seed")
+    }
+  }
+
+  test("discrete quantile aggregate ignores nulls (rank must stay reachable)") {
+    import spark.implicits._
+    val df = Seq(Some(1L), None, Some(2L), None, Some(3L), Some(4L)).toDF("v")
+    // non-null domain {1,2,3,4}: p=0.5 → rank 2 → value 2. With nulls
+    // inflating n, rank would be 3 → value 3.
+    assert(quantileDisc(df, "v", 0.5) == 2L)
+    assert(quantileDisc(df, "v", 1.0) == 4L)
   }
 
   test("streaming Benford equals the batch q330 report") {

@@ -72,8 +72,9 @@ class Round35Spec extends SparkSpec {
     val out = SparkEntry.queries("q405_length_filter")(spark, sf).collect()
     val docs = Tables.documents(spark, sf).select(
       graft.text.TextStats.nTokens(col("text")).as("tok"))
-    val p10 = graft.operators.Selection.quantileDisc(docs, col("tok"), 0.1)
-    val p90 = graft.operators.Selection.quantileDisc(docs, col("tok"), 0.9)
+    val band = docs.agg(graft.functions.Num.quantileDisc("tok", 0.1, 0.9)).head()
+      .getSeq[Double](0).map(_.toLong)
+    val (p10, p90) = (band(0), band(1))
     assert(p10 <= p90)
     val totalShort = out.map(_.getLong(2)).sum
     val expectShort = docs.filter(col("tok") < p10).count()

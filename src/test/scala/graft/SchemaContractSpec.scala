@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** The testdata dtype tripwire (SchemaContract): all three SF dirs
   * must satisfy the pinned contract, a deliberately-mutated fixture
-  * must fail it loudly, and a missing table fails naming its path.
+  * must fail it loudly, a missing table fails naming its path, and
+  * reading events leaves the session conf as it was.
   */
 class SchemaContractSpec extends SparkSpec {
 
@@ -50,5 +51,16 @@ class SchemaContractSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(sfDir)))
     val e = intercept[java.io.FileNotFoundException](Tables.documents(spark, sfDir))
     assert(e.getMessage.contains(s"$sfDir/documents.parquet"))
+    val f = intercept[java.io.FileNotFoundException](
+      Tables.fanout(Tables.documents(spark, sf), sfDir, "documents"))
+    assert(f.getMessage.contains(s"$sfDir/documents.parquet"))
+  }
+
+  test("reading events writes no session conf") {
+    // a fresh session: no earlier test in this suite has touched its conf
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    Tables.events(s, sf).collect()
+    assert(s.conf.getAll == before)
   }
 }

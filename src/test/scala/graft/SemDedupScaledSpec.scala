@@ -89,6 +89,21 @@ class SemDedupScaledSpec extends SparkSpec {
     em.unpersist()
   }
 
+  test("banded variant plans its fold modulus as one count subquery") {
+    import org.apache.spark.sql.execution.{BaseSubqueryExec, ReusedSubqueryExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val out = Similarity.semDedupBanded(Tables.embeddings(spark, sf), 0.4, tables = 4)
+    out.collect()
+    val subs = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(out.queryExecution.executedPlan) {
+        case s: BaseSubqueryExec => s
+      }
+    val (reused, planned) = subs.partition(_.isInstanceOf[ReusedSubqueryExec])
+    // each of the 4 tables reads C twice: its cell and its t·C offset
+    assert(planned.size == 1, s"planned subqueries: $planned")
+    assert(reused.size == 2 * 4 - 1)
+  }
+
   test("maxCell cap: rows past the per-cell cap are conservatively kept") {
     val em = Tables.embeddings(spark, sf)
     // force one cell (targetCell huge → C = 1) and a tiny cap: only the
