@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,19 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * which the oracle uses (q417 pins the agreement on injected
   * composed/decomposed fixtures).
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc_normalize"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("nfcnorm", this, classOf[NfcNormalize].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): UTF8String = {
     val s = text.toString

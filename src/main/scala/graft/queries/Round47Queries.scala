@@ -64,7 +64,7 @@ object Round47Queries {
     // Overlapping chunking: one native pass tokenizes and emits every
     // (idx, chunk) window — zero shuffles, pure scan stage; the
     // composed transform(sequence)/slice twin would re-tokenize per
-    // chunk through interpreted lambdas (the ChunkSet lesson).
+    // chunk through interpreted lambdas (see SlidingChunkSet).
     "q406_chunk_overlap" -> QueryDef(
       (s, d) => Tables.documents(s, d)
         .select(col("doc_id"),

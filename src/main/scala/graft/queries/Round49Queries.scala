@@ -56,7 +56,7 @@ object Round49Queries {
 
     // Content-defined chunking: ONE native scan pass per document
     // (no explode + per-doc window — the same Generate-stage economics
-    // as ChunkSet), boundaries from the token's own hash. The oracle
+    // as SlidingChunkSet), boundaries from the token's own hash. The oracle
     // replays the boundary draw and the running-count chunk ids as a
     // window over the exploded tokens.
     "q415_cdc_chunking" -> QueryDef(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.{QueryDef, Tables}
-import graft.text.{NgramList, TokensWs}
+import graft.text.{NgramList, TextStats}
 
 /** Round-55 additions (build round 12, wave 11): acting on the span
   * report —
@@ -48,8 +48,7 @@ object Round55Queries {
             explode(sequence(col("p"), col("p") + lit(L - 1))).as("pos"))
           .distinct()
         val tok = docs
-          .select(col("doc_id"), posexplode(ColumnBridge.column(TokensWs(
-            ColumnBridge.expression(col("text"))))).as(Seq("pos0", "tok")))
+          .select(col("doc_id"), posexplode(TextStats.tokensNonEmpty(col("text"))).as(Seq("pos0", "tok")))
           .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("tok"))
         tok.join(cov, Seq("doc_id", "pos"), "left_anti")
           .groupBy("doc_id")

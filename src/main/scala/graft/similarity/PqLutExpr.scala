@@ -1,7 +1,7 @@
 package graft.similarity
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import graft.functions.NativeUnary
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * slice+dot chain.
   */
 case class PqLut(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData] {
 
   private val m = codebooks.length
   private val ksub = codebooks(0).length
@@ -80,13 +80,6 @@ case class PqLut(child: Expression, codebooks: Array[Array[Array[Double]]])
       s += 1
     }
     new GenericArrayData(outer)
-  }
-
-  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqlut", this, classOf[PqLut].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $self.compute($a);")
   }
 
   override protected def withNewChildInternal(c: Expression): PqLut =

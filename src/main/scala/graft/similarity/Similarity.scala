@@ -73,11 +73,16 @@ object Similarity {
     * an uncorrelated scalar subquery: the count runs inside the plan
     * that reads it, not while the Dataset is built. The uses of one
     * returned Column run it once: AQE plans the others as
-    * `ReusedSubquery` (SemDedupScaledSpec).
+    * `ReusedSubquery` (SemDedupScaledSpec). A frame that later plans
+    * read again (a persisted index) takes [[foldModulusOf]] instead.
     */
   def foldModulus(df: DataFrame, targetCell: Int): Column =
     df.agg(expr(s"greatest(1, (count(1) + ${targetCell - 1}) div $targetCell)"))
       .scalar()
+
+  /** [[foldModulus]] of a row count `n` known on the driver. */
+  private def foldModulusOf(n: Long, targetCell: Int): Long =
+    math.max(1L, (n + targetCell - 1) / targetCell)
 
   /** Composed-expression twin of [[signBits]] (differential tests). */
   def signBitsComposed(vec: Column, planes: Array[Array[Double]]): Column = {
@@ -543,11 +548,13 @@ object Similarity {
       targetCell: Int = 256, frozenC: Option[Long] = None): DataFrame = {
     // frozenC reuses an EXISTING index's modulus (for rebuild-equivalence
     // checks against [[mergeEmbedIndex]]); the default derives it from
-    // the corpus count as at first build.
-    val c = frozenC.fold(foldModulus(corpus, targetCell))(lit(_))
+    // the corpus count as at first build. Either way C is a literal: the
+    // index is read by several plans (indexMeta, each probe), and a count
+    // subquery would rerun with every one of them.
+    val c = frozenC.getOrElse(foldModulusOf(corpus.count(), targetCell))
     (0 until tables).map { t =>
-      corpus.select(lit(t).as("t"), signCell(col("embedding"), t, c).as("cell"),
-        col("vec_id"), c.as("c"))
+      corpus.select(lit(t).as("t"), signCell(col("embedding"), t, lit(c)).as("cell"),
+        col("vec_id"), lit(c).as("c"))
     }.reduce(_.unionAll(_))
   }
 
@@ -628,8 +635,10 @@ object Similarity {
       rs: Seq[Int] = Seq(1, 2, 4, 8),
       cells: Seq[Int] = Seq(128, 256, 512)): DataFrame = {
     import corpus.sparkSession.implicits._
-    // read by the truth pass and by each grid cell's count and R tables
+    // read by the count, the truth pass and each grid cell's R tables;
+    // one count derives every grid cell's fold modulus
     val proj = corpus.select(col("vec_id"), col("embedding")).cache()
+    val n = proj.count()
     val truth = cosinePairsTiledKernel(proj, threshold)
       .select(col("id1"), col("id2"), lit(1L).as("__tp"))
       .localCheckpoint(true)
@@ -637,7 +646,7 @@ object Similarity {
     val maxR = rs.max
     val rsDf = rs.toDF("r")
     val perCell = cells.map { targetCell =>
-      val c = foldModulus(proj, targetCell)
+      val c = lit(foldModulusOf(n, targetCell))
       val sigs = (0 until maxR).map { t =>
         proj.select(col("vec_id"), lit(t).as("t"),
           signCell(col("embedding"), t, c).as("cell"))

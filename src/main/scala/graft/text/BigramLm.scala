@@ -1,7 +1,11 @@
 package graft.text
 
+import graft.functions.NativeUnary
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashed interpolated bigram language-model fluency scoring — the
   * CCNet-style "LM filter" stage of a curation pipeline (Wenzek et al.
@@ -144,24 +148,11 @@ object BigramLm {
   * position; this is a MessageDigest call per position in a tight
   * loop. Bit-identical by BigramLmSpec.
   */
-case class BigramLmScore(
-    child: org.apache.spark.sql.catalyst.expressions.Expression,
-    pu: Array[Double], pb: Array[Double])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.unsafe.types.UTF8String
+case class BigramLmScore(child: Expression, pu: Array[Double], pb: Array[Double])
+    extends NativeUnary[UTF8String] {
 
-  override def dataType: org.apache.spark.sql.types.DataType =
-    org.apache.spark.sql.types.DoubleType
+  override def dataType: DataType = DoubleType
   override def prettyName: String = "bigram_lm_score"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bigramlmscore", this, classOf[BigramLmScore].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): Double = {
     val toks = TextStats.words(text.toString)
@@ -182,7 +173,6 @@ case class BigramLmScore(
     acc / (n - 1)
   }
 
-  override protected def withNewChildInternal(
-      c: org.apache.spark.sql.catalyst.expressions.Expression): BigramLmScore =
+  override protected def withNewChildInternal(c: Expression): BigramLmScore =
     copy(child = c)
 }

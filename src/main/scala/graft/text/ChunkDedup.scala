@@ -26,16 +26,18 @@ import org.apache.spark.sql.functions._
 object ChunkDedup {
 
   /** Explode to one row per chunk: (idCol, idx, chunk, h) where h is
-    * the 64-bit xxhash64 of the chunk text, fused into the same
-    * native one-pass [[ChunkSet]] kernel that tokenizes and chunks (an
-    * 8-byte shuffle/state key; same 2^-64 collision odds as the
-    * md5-prefix key it replaced, at a fraction of the cost). Stateless —
-    * works identically on a batch frame or a streaming source.
+    * the 64-bit xxhash64 of the chunk text, fused into the native
+    * one-pass [[SlidingChunkSet]] kernel that tokenizes and chunks; at
+    * stride = k its chunks tile the document in k-token runs, the last
+    * possibly shorter. The hash is an 8-byte shuffle/state key (the
+    * same 2^-64 collision odds as the md5-prefix key it replaced, at a
+    * fraction of the cost). Stateless — works identically on a batch
+    * frame or a streaming source.
     */
   def chunks(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     df.select(col(idCol), explode(ColumnBridge.column(
-        ChunkSet(ColumnBridge.expression(col(textCol)), k))).as("c"))
+        SlidingChunkSet(ColumnBridge.expression(col(textCol)), k, k))).as("c"))
       .select(col(idCol), col("c.idx").as("idx"),
         col("c.chunk").as("chunk"), col("c.h").as("h"))
   }

@@ -32,7 +32,9 @@ import org.apache.spark.sql.functions._
 object Fingerprint {
 
   /** Distinct winnowed fingerprints as an array column — the native
-    * one-pass [[WinnowSet]] expression (scan-stage, no shuffle).
+    * one-pass [[WinnowSet]] expression (scan-stage, no shuffle). It and
+    * [[winnowSetLong]] run one winnow kernel over unsigned-long gram
+    * hashes; this form renders each emitted long as its 16 hex chars.
     */
   def winnowSet(text: org.apache.spark.sql.Column, k: Int, w: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge

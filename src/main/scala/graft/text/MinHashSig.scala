@@ -1,84 +1,34 @@
 package graft.text
 
+import graft.functions.NativeUnary
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** k-minhash signature in ONE pass over the shingle array.
+/** k/r LSH band hashes in ONE pass over the shingle array: the k-minhash
+  * signature folded into per-band hashes.
   *
-  * Bit-compatible with the composed-expression form
+  * Slot i of the signature is bit-compatible with the composed form
   * `array_min(transform(sh, s -> xxhash64(lit(i), s)))` — Spark's
   * XxHash64 expression folds its children left-to-right
   * (hashInt(i, 42) then hashUTF8String(s, carry)), reproduced here —
-  * but evaluated with 64 running minima in registers instead of 64
-  * separate array traversals with per-element lambda dispatch.
-  * (MinHashSigSpec pins the equivalence.)
-  */
-case class MinHashSignature(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  // seed-hash per slot: XxHash64(lit(i), s) = hashUTF8String(s, hashInt(i, 42))
-  private lazy val seeds: Array[Long] =
-    Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("mhsig", this, classOf[MinHashSignature].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  def compute(arr: ArrayData): ArrayData = {
-    val mins = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    while (j < arr.numElements()) {
-      if (!arr.isNullAt(j)) {
-        val s = arr.getUTF8String(j)
-        var i = 0
-        while (i < k) {
-          val h = XXH64.hashUTF8String(s, seeds(i))
-          if (h < mins(i)) mins(i) = h
-          i += 1
-        }
-      }
-      j += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def withNewChildInternal(c: Expression): MinHashSignature =
-    copy(child = c)
-}
-
-/** k/r LSH band hashes in one pass: minhash signature (as above) folded
-  * into per-band hashes (XXH64 left-fold over each band's r slots, the
-  * same fold `xxhash64(v0..v3)` performs). One expression → evaluated
-  * once per row regardless of how many bands explode out of it.
+  * but evaluated with k running minima in registers instead of k
+  * separate array traversals with per-element lambda dispatch. Band b
+  * is the XXH64 left-fold over its r slots, the same fold
+  * `xxhash64(v0..v3)` performs (MinHashSigSpec pins both against the
+  * composed forms). One expression → evaluated once per row regardless
+  * of how many bands explode out of it.
   */
 case class MinHashBandHashes(child: Expression, k: Int, r: Int)
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData] {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_band_hashes"
 
+  // seed-hash per slot: XxHash64(lit(i), s) = hashUTF8String(s, hashInt(i, 42))
   private lazy val seeds: Array[Long] =
     Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("mhband", this, classOf[MinHashBandHashes].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
 
   def compute(arr: ArrayData): ArrayData = {
     val mins = Array.fill(k)(Long.MaxValue)
@@ -114,9 +64,6 @@ case class MinHashBandHashes(child: Expression, k: Int, r: Int)
 
 object MinHashSig {
   import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  def signature(shingles: Column, k: Int = 64): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingles), k))
 
   def bandHashes(shingles: Column, k: Int = 64, r: Int = 4): Column =
     ColumnBridge.column(MinHashBandHashes(ColumnBridge.expression(shingles), k, r))

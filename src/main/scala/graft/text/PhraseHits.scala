@@ -1,7 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import graft.functions.NativeUnary
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * n-gram-equality oracle replay.
   */
 case class PhraseHits(child: Expression, phrases: Seq[String])
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   require(phrases.nonEmpty && phrases.forall(_.trim.nonEmpty),
     "phrase lexicon must be non-empty")
@@ -53,15 +53,6 @@ case class PhraseHits(child: Expression, phrases: Seq[String])
     m.forEach((k, v) => out.put(k, v.toArray))
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("phrasehits", this, classOf[PhraseHits].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): ArrayData = {
     val toks = TextStats.words(text.toString)

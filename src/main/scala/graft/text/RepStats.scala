@@ -1,8 +1,8 @@
 package graft.text
 
+import graft.functions.NativeUnary
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,42 +29,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * topk/nk) are left to the caller as Column arithmetic on the integers
   * so the oracle computes them in SQL from the same counts.
   */
-case class RepStatsExpr(child: Expression) extends UnaryExpression {
+case class RepStatsExpr(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "rep_stats"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("repstats", this, classOf[RepStatsExpr].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
   def compute(text: UTF8String): GenericArrayData = {
-    // tokenize: split on single space, drop empties (the Shingles
+    // tokens: split on single space, drop empties (the Shingles
     // contract — whitespace runs are not word material)
-    val raw = text.toString
-    val words = new scala.collection.mutable.ArrayBuffer[String]()
-    var i = 0
-    val len = raw.length
-    while (i < len) {
-      var j = raw.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) words += raw.substring(i, j)
-      i = j + 1
-    }
-    val n = words.length
+    val words = TextStats.words(text.toString)
+    val n = words.size
 
     // intern words to dense ids so the n-gram keys are packed longs,
     // not concatenated strings
     val ids = new scala.collection.mutable.HashMap[String, Int]()
     val wid = new Array[Int](n)
-    i = 0
+    var i = 0
     while (i < n) {
-      wid(i) = ids.getOrElseUpdate(words(i), ids.size)
+      wid(i) = ids.getOrElseUpdate(words.get(i), ids.size)
       i += 1
     }
     val nDistinct = ids.size

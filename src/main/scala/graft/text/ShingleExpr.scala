@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import graft.functions.NativeUnary
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,40 +20,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * Distinct keeps first-occurrence order, like `array_distinct`.
   */
 case class ShingleSet(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "shingle_set"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("shingleset", this, classOf[ShingleSet].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): ArrayData = {
     // whitespace-run tokens: split on single space, drop empties
     // (Shingles.scaladoc: the corpus convention is single-space)
     val toks = TextStats.words(text.toString)
-    val m = toks.size - n + 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]()
-    val sb = new java.lang.StringBuilder()
     var w = 0
-    while (w < m) {
-      sb.setLength(0)
-      var t = 0
-      while (t < n) {
-        if (t > 0) sb.append(' ')
-        sb.append(toks.get(w + t))
-        t += 1
-      }
-      seen.add(sb.toString)
-      w += 1
-    }
+    while (w + n <= toks.size) { seen.add(TextStats.gram(toks, w, n)); w += 1 }
     val out = new Array[Any](seen.size)
     val it = seen.iterator()
     var k = 0
@@ -71,19 +50,10 @@ case class ShingleSet(child: Expression, n: Int)
   * chain: one allocation, two JVM loops.
   */
 case class PackedPairs(child: Expression)
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData] {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "packed_pairs"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("packedpairs", this, classOf[PackedPairs].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
 
   def compute(arr: ArrayData): ArrayData = {
     val m = arr.numElements()
@@ -135,19 +105,10 @@ case class PackedPairs(child: Expression)
   * qualifying pair (conservative direction only).
   */
 case class PrefixPairs(child: Expression, t: Double)
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData] {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "prefix_pairs"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("prefixpairs", this, classOf[PrefixPairs].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
 
   def compute(arr: ArrayData): ArrayData = {
     val m = arr.numElements()
@@ -184,155 +145,66 @@ case class PrefixPairs(child: Expression, t: Double)
     copy(child = c)
 }
 
-/** One-pass k-token chunking: split on single space (dropping empty
-  * tokens, the corpus convention — same tokenization as [[ShingleSet]])
-  * and emit one (idx, chunk) struct per consecutive k-token group, the
-  * last group possibly shorter. Semantically identical to the composed
-  * `transform(sequence(0, ceil(n/k)-1), i -> struct(i, array_join(
-  * slice(toks, i*k+1, k), ' ')))` chain — but those higher-order
-  * functions are CodegenFallback (interpreted, one lambda dispatch per
-  * element) and project-collapse re-inlines the tokenization subtree
-  * into the lambda body, making each slice re-tokenize the document:
-  * O(tokens · chunks) per row. This is one JVM pass; TextSpec pins the
-  * equivalence against the composed form.
+/** The (idx, chunk, h) rows of the chunking kernels ([[SlidingChunkSet]],
+  * [[CdcChunkSet]]). h = xxhash64(chunk bytes, seed 42) — the exact value
+  * SQL `xxhash64(chunk)` would produce, fused into the same pass so no
+  * downstream (interpreted, post-generator) projection has to re-walk
+  * the string.
   */
-case class ChunkSet(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(
+private[text] object ChunkRows {
+  val dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("idx", IntegerType, nullable = false),
       StructField("chunk", StringType, nullable = false),
       StructField("h", LongType, nullable = false))),
     containsNull = false)
-  override def prettyName: String = "chunk_set"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("chunkset", this, classOf[ChunkSet].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
+  def row(idx: Int, chunk: String): InternalRow = {
+    val u = UTF8String.fromString(chunk)
+    new GenericInternalRow(Array[Any](idx, u,
+      XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)))
   }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  // one (idx, chunk, h) row; h = xxhash64(chunk bytes, seed 42) — the
-  // exact value SQL `xxhash64(chunk)` would produce, fused into the
-  // same pass so no downstream (interpreted, post-generator) projection
-  // has to re-walk the string.
-  private def emit(out: java.util.ArrayList[Any], idx: Int,
-                   sb: java.lang.StringBuilder): Unit = {
-    val u = UTF8String.fromString(sb.toString)
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-    out.add(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](idx, u, h)))
-  }
-
-  def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val len = s.length
-    val out = new java.util.ArrayList[Any]()
-    val sb = new java.lang.StringBuilder()
-    var inChunk = 0 // tokens accumulated in the current chunk
-    var idx = 0
-    var i = 0
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) { // non-empty token
-        if (inChunk > 0) sb.append(' ')
-        sb.append(s, i, j)
-        inChunk += 1
-        if (inChunk == k) {
-          emit(out, idx, sb)
-          sb.setLength(0); inChunk = 0; idx += 1
-        }
-      }
-      i = j + 1
-    }
-    if (inChunk > 0) emit(out, idx, sb)
-    new GenericArrayData(out.toArray)
-  }
-
-  override protected def withNewChildInternal(c: Expression): ChunkSet =
-    copy(child = c)
 }
 
 /** One-pass SLIDING-window k-token chunking with stride: chunk i covers
   * tokens [i·stride, i·stride+k). stride < k overlaps consecutive
   * chunks (context-window prep keeps boundary-crossing text learnable);
-  * stride = k degenerates to [[ChunkSet]]'s tiling; stride > k samples
-  * with gaps. Chunk count: 0 for an empty/blank doc, 1 if n ≤ k, else
-  * ceil((n-k)/stride)+1 — the last chunk may be shorter than k but
-  * always starts within the document. Same single-space tokenization
-  * and fused xxhash64(seed 42) as [[ChunkSet]]; the composed
-  * transform(sequence(...), i -> slice(...)) twin re-tokenizes per
-  * chunk through CodegenFallback lambdas (the ChunkSet lesson), so the
-  * sliding variant gets the same native treatment. TextSpec pins the
-  * stride=k case ≡ ChunkSet and the overlap invariants.
+  * stride = k tiles the document into consecutive k-token chunks (the
+  * [[ChunkDedup]] chunking); stride > k samples with gaps. Chunk count:
+  * 0 for an empty/blank doc, 1 if n ≤ k, else ceil((n-k)/stride)+1 —
+  * the last chunk may be shorter than k, and with stride > k it may
+  * start past the last token and be empty. Single-space tokenization,
+  * empty tokens dropped (the corpus convention, as [[ShingleSet]]), and
+  * a fused xxhash64(seed 42) per chunk ([[ChunkRows]]). The composed
+  * `transform(sequence(...), i -> struct(i, array_join(slice(toks, …))))`
+  * twin is CodegenFallback (interpreted, one lambda dispatch per
+  * element), and project-collapse re-inlines the tokenization subtree
+  * into the lambda body, so each slice re-tokenizes the document:
+  * O(tokens · chunks) per row. This is one JVM pass; ChunkDedupSpec pins
+  * stride = k against the composed chunking, Round35Spec the overlap
+  * contract.
   */
 case class SlidingChunkSet(child: Expression, k: Int, stride: Int)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   require(k > 0, "window k must be positive")
   require(stride > 0, "stride must be positive")
 
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("idx", IntegerType, nullable = false),
-      StructField("chunk", StringType, nullable = false),
-      StructField("h", LongType, nullable = false))),
-    containsNull = false)
+  override def dataType: DataType = ChunkRows.dataType
   override def prettyName: String = "sliding_chunk_set"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("slidingchunkset", this,
-      classOf[SlidingChunkSet].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
   def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val len = s.length
-    // tokenize once: record (start, end) offsets of non-empty tokens
-    val starts = new java.util.ArrayList[Int]()
-    val ends = new java.util.ArrayList[Int]()
-    var i = 0
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) { starts.add(i); ends.add(j) }
-      i = j + 1
+    val toks = TextStats.words(text.toString)
+    val n = toks.size
+    val nc = if (n == 0) 0 else if (n <= k) 1 else (n - k + stride - 1) / stride + 1
+    val out = new Array[Any](nc)
+    var idx = 0
+    while (idx < nc) {
+      val from = idx * stride // past the last token (an empty chunk) only if stride > k
+      out(idx) = ChunkRows.row(idx, TextStats.gram(toks, from, math.min(k, n - from)))
+      idx += 1
     }
-    val n = starts.size()
-    val out = new java.util.ArrayList[Any]()
-    if (n > 0) {
-      val nc = if (n <= k) 1 else (n - k + stride - 1) / stride + 1
-      var idx = 0
-      while (idx < nc) {
-        val from = idx * stride
-        val until = math.min(from + k, n)
-        val sb = new java.lang.StringBuilder()
-        var t = from
-        while (t < until) {
-          if (t > from) sb.append(' ')
-          sb.append(s, starts.get(t), ends.get(t))
-          t += 1
-        }
-        val u = UTF8String.fromString(sb.toString)
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-        out.add(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](idx, u, h)))
-        idx += 1
-      }
-    }
-    new GenericArrayData(out.toArray)
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(c: Expression): SlidingChunkSet =
@@ -344,7 +216,7 @@ case class SlidingChunkSet(child: Expression, k: Int, stride: Int)
   * boundaries depend on CONTENT, not position, so inserting or deleting
   * a token perturbs only the chunk it lands in (every chunk after the
   * next boundary hashes identically), where fixed-window chunking
-  * ([[ChunkSet]]) shifts every downstream chunk. This is the dedup
+  * ([[SlidingChunkSet]]) shifts every downstream chunk. This is the dedup
   * chunking that survives edits — the property rsync/LBFS built on.
   *
   * Chunk index = running count of boundary tokens (≡ the SQL
@@ -355,26 +227,12 @@ case class SlidingChunkSet(child: Expression, k: Int, stride: Int)
   * tokens. One pass, fused xxhash64(chunk) like the siblings.
   */
 case class CdcChunkSet(child: Expression, modulus: Int)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   require(modulus > 0, "modulus must be positive")
 
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("idx", IntegerType, nullable = false),
-      StructField("chunk", StringType, nullable = false),
-      StructField("h", LongType, nullable = false))),
-    containsNull = false)
+  override def dataType: DataType = ChunkRows.dataType
   override def prettyName: String = "cdc_chunk_set"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("cdcchunkset", this, classOf[CdcChunkSet].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   /** First 8 hex chars of md5(token) as a long (0..2^32). */
   private def draw(md: java.security.MessageDigest, tok: String): Long = {
@@ -386,37 +244,22 @@ case class CdcChunkSet(child: Expression, modulus: Int)
   }
 
   def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val len = s.length
+    val toks = TextStats.words(text.toString)
+    val n = toks.size
     val md = java.security.MessageDigest.getInstance("MD5")
     val out = new java.util.ArrayList[Any]()
-    val sb = new java.lang.StringBuilder()
+    var from = 0 // first token of the open chunk
     var idx = 0
-    var hasTok = false
-    def flush(): Unit = {
-      if (hasTok) {
-        val u = UTF8String.fromString(sb.toString)
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-        out.add(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](idx, u, h)))
-        sb.setLength(0); hasTok = false
+    var t = 0
+    while (t < n) {
+      if (draw(md, toks.get(t)) % modulus == 0L) {
+        if (t > from) out.add(ChunkRows.row(idx, TextStats.gram(toks, from, t - from)))
+        from = t
+        idx += 1
       }
+      t += 1
     }
-    var i = 0
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) {
-        val tok = s.substring(i, j)
-        if (draw(md, tok) % modulus == 0L) { flush(); idx += 1 }
-        if (hasTok) sb.append(' ')
-        sb.append(tok)
-        hasTok = true
-      }
-      i = j + 1
-    }
-    flush()
+    if (n > from) out.add(ChunkRows.row(idx, TextStats.gram(toks, from, n - from)))
     new GenericArrayData(out.toArray)
   }
 
@@ -424,63 +267,14 @@ case class CdcChunkSet(child: Expression, modulus: Int)
     copy(child = c)
 }
 
-/** Whitespace token ARRAY: the single-space-separated non-empty tokens
-  * — value-identical to `filter(split(text, ' '), x -> x != '')` but
-  * codegen'd. The composed form matters beyond its own cost: ArrayFilter
-  * is CodegenFallback, and ONE fallback HOF inside an explode child
-  * drops the WHOLE Generate stage out of whole-stage codegen (the
-  * ChunkDedup/BigramLm lesson) — every `explode(tokens)` consumer
-  * (heavy hitters, vocab stats, collocations) was paying an interpreted
-  * stage for one lambda. TextSpec pins ≡ against the composed twin.
-  */
-case class TokensWs(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "tokens_ws"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tokensws", this, classOf[TokensWs].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val len = s.length
-    val out = new java.util.ArrayList[Any]()
-    var i = 0
-    while (i < len) {
-      var j = s.indexOf(' ', i)
-      if (j < 0) j = len
-      if (j > i) out.add(UTF8String.fromString(s.substring(i, j)))
-      i = j + 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  override protected def withNewChildInternal(c: Expression): TokensWs =
-    copy(child = c)
-}
-
 /** Whitespace token count: number of single-space-separated non-empty
   * tokens — `size(filter(split(text, ' '), x -> x != ''))` without the
   * interpreted filter lambda and per-token UTF8String boxing.
   */
-case class TokenCountWs(child: Expression) extends UnaryExpression {
+case class TokenCountWs(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "token_count_ws"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tokencountws", this, classOf[TokenCountWs].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   def compute(text: UTF8String): Int = {
     val s = text.toString
@@ -507,42 +301,28 @@ case class TokenCountWs(child: Expression) extends UnaryExpression {
   * CodegenFallback, so one of them in a scan stage drops the WHOLE
   * stage out of whole-stage codegen (every md5/conv downstream then
   * evaluates interpreted), and project-collapse re-inlines the
-  * tokenization into the lambda body. One JVM pass; n = 1 yields the
-  * token list itself.
+  * tokenization into the lambda body. One JVM pass.
+  *
+  * n = 1 yields the token list itself: the single-space-separated
+  * non-empty tokens, value-identical to `filter(split(text, ' '),
+  * x -> x != '')` ([[TextStats.tokensNonEmpty]]). That composed form
+  * matters beyond its own cost: ArrayFilter is CodegenFallback, and ONE
+  * fallback HOF inside an explode child drops the WHOLE Generate stage
+  * out of whole-stage codegen, so every `explode(tokens)` consumer
+  * (heavy hitters, vocab stats, collocations) would pay an interpreted
+  * stage for one lambda.
   */
 case class NgramList(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "ngram_list"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("ngramlist", this, classOf[NgramList].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
   def compute(text: UTF8String): ArrayData = {
     val toks = TextStats.words(text.toString)
-    val m = toks.size - n + 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Any])
-    val out = new Array[Any](m)
-    val sb = new java.lang.StringBuilder()
+    val out = new Array[Any](math.max(toks.size - n + 1, 0))
     var w = 0
-    while (w < m) {
-      sb.setLength(0)
-      var t = 0
-      while (t < n) {
-        if (t > 0) sb.append(' ')
-        sb.append(toks.get(w + t))
-        t += 1
-      }
-      out(w) = UTF8String.fromString(sb.toString)
-      w += 1
-    }
+    while (w < out.length) { out(w) = UTF8String.fromString(TextStats.gram(toks, w, n)); w += 1 }
     new GenericArrayData(out)
   }
 

@@ -1,8 +1,8 @@
 package graft.text
 
+import graft.functions.NativeUnary
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,21 +27,10 @@ import org.apache.spark.sql.types._
   * round-trip, null-safe. Runs inside the scan stage at any scale.
   */
 case class SimHash64(child: Expression)
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData] {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
-
-  /** Generated code stays inside whole-stage codegen: one call to
-    * [[compute]] per row, no interpreted-projection fallback.
-    */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("simhash", this, classOf[SimHash64].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
 
   def compute(arr: ArrayData): Long = {
     val md = SimHash64.digests.get()

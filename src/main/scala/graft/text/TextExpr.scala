@@ -1,7 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import graft.functions.NativeUnary
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,19 +32,10 @@ private[text] object Occ {
   * CJK script check on the raw text, then char-n-gram profile votes on
   * the space-padded text with fixed priority en > de > fr > es.
   */
-case class LangIdExpr(child: Expression) extends UnaryExpression {
+case class LangIdExpr(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "lang_id"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("langid", this, classOf[LangIdExpr].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   private lazy val profiles: Seq[(String, Seq[String])] = TextStats.langProfiles
 
@@ -81,19 +72,10 @@ case class LangIdExpr(child: Expression) extends UnaryExpression {
   * `regexp_replace(s, "\\s+", " ")` (Java regex \s = [ \t\n\x0B\f\r]).
   * Feeds the md5 fingerprint without the regex engine.
   */
-case class NormalizeWs(child: Expression) extends UnaryExpression {
+case class NormalizeWs(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "normalize_ws"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("normws", this, classOf[NormalizeWs].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
@@ -121,19 +103,10 @@ case class NormalizeWs(child: Expression) extends UnaryExpression {
   * with the exact same token convention (split on single space, empty
   * tokens COUNT) and double fold order.
   */
-case class QualityScoreExpr(child: Expression) extends UnaryExpression {
+case class QualityScoreExpr(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "quality_score"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("quality", this, classOf[QualityScoreExpr].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   private lazy val stop: java.util.HashSet[String] = {
     val h = new java.util.HashSet[String]()
@@ -178,18 +151,10 @@ case class QualityScoreExpr(child: Expression) extends UnaryExpression {
   * a single codegen'd pass with zero intermediate allocation.
   */
 case class TermCountsExpr(child: Expression, terms: Seq[String])
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "term_counts"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("termCounts", this, classOf[TermCountsExpr].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
 
   @transient private lazy val idx: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer]()

@@ -19,17 +19,18 @@ object TextStats {
 
   /** NON-EMPTY whitespace tokens — value-identical to
     * `filter(split(c, " "), w -> w != "")` but a single codegen'd pass
-    * ([[TokensWs]]): the composed form's ArrayFilter is CodegenFallback
-    * and drops any enclosing Generate stage out of whole-stage codegen.
-    * Use this for every `explode(tokens)` consumer.
+    * (`NgramList(c, 1)`): the composed form's ArrayFilter is
+    * CodegenFallback and drops any enclosing Generate stage out of
+    * whole-stage codegen. Use this for every `explode(tokens)` consumer.
     */
   def tokensNonEmpty(c: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      TokensWs(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+      NgramList(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c), 1))
 
   /** [[tokensNonEmpty]] on the JVM: the space-separated non-empty tokens
     * of `s`, in order. The one tokenizer of [[ShingleSet]], [[NgramList]],
-    * [[PhraseHits]], [[BigramLmScore]] and the bigram-LM fit.
+    * [[SlidingChunkSet]], [[CdcChunkSet]], [[PhraseHits]],
+    * [[RepStatsExpr]], [[BigramLmScore]] and the bigram-LM fit.
     */
   private[text] def words(s: String): java.util.ArrayList[String] = {
     val toks = new java.util.ArrayList[String]()
@@ -42,6 +43,12 @@ object TextStats {
     }
     toks
   }
+
+  /** The `n` tokens of `toks` from `from`, space-joined ("" for n ≤ 0). */
+  private[text] def gram(toks: java.util.List[String], from: Int, n: Int): String =
+    if (n <= 0) ""
+    else if (n == 1) toks.get(from)
+    else String.join(" ", toks.subList(from, from + n))
 
   def nTokens(c: Column): Column = size(tokens(c))
 

@@ -1,7 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import graft.functions.NativeUnary
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,69 +20,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * and a plain-Scala fold.
   */
 case class WinnowSet(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   require(k >= 1 && w >= 1, "k and w must be positive")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "winnow_set"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("winnowset", this, classOf[WinnowSet].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val nGrams = s.length - k + 1
-    val nWins = nGrams - w + 1
-    if (nWins <= 0) return new GenericArrayData(Array.empty[Any])
-    val md = WinnowSet.digest.get()
-    // gram hashes: first 16 hex chars of md5 of the gram's UTF-8 bytes —
-    // identical to md5(substr(text, i, k)) in Spark SQL and DuckDB
-    val hashes = new Array[String](nGrams)
-    var i = 0
-    while (i < nGrams) {
-      md.reset()
-      val d = md.digest(s.substring(i, i + k).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val hex = new Array[Char](16)
-      var b = 0
-      while (b < 8) {
-        hex(2 * b) = WinnowSet.HEX((d(b) >> 4) & 0xf)
-        hex(2 * b + 1) = WinnowSet.HEX(d(b) & 0xf)
-        b += 1
-      }
-      hashes(i) = new String(hex)
-      i += 1
-    }
-    // sliding window minimum via monotonic deque of indices
-    val seen = new java.util.LinkedHashSet[String]()
-    val deque = new Array[Int](nGrams)
-    var head = 0
-    var tail = 0 // exclusive
-    i = 0
-    while (i < nGrams) {
-      // drop indices that left the window [i-w+1, i]
-      while (head < tail && deque(head) <= i - w) head += 1
-      // drop larger-or-equal values from the back: for equal hashes the
-      // EARLIEST index must win (the SQL window min is value-identical
-      // either way)
-      while (head < tail && hashes(deque(tail - 1)).compareTo(hashes(i)) > 0) tail -= 1
-      deque(tail) = i
-      tail += 1
-      if (i >= w - 1) seen.add(hashes(deque(head)))
-      i += 1
-    }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
-    new GenericArrayData(out)
-  }
+  def compute(text: UTF8String): ArrayData =
+    new GenericArrayData(WinnowSet.minima(text.toString, k, w).map(WinnowSet.hex16(_): Any))
 
   override protected def withNewChildInternal(c: Expression): WinnowSet =
     copy(child = c)
@@ -90,49 +36,22 @@ case class WinnowSet(child: Expression, k: Int, w: Int)
 
 object WinnowSet {
   private val HEX = "0123456789abcdef".toCharArray
-  private[text] val digest = new ThreadLocal[java.security.MessageDigest] {
+  private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-}
 
-/** [[WinnowSet]] with PRIMITIVE LONG output: the same first-8-bytes-of-
-  * md5 gram hash, read as a big-endian unsigned 64-bit value instead of
-  * rendered to 16 hex chars. The mapping hex-string → long is bijective
-  * and hex lexicographic order == unsigned numeric order, so with
-  * unsigned comparisons in the winnow deque the emitted fingerprint SET
-  * is exactly `parseHex(WinnowSet(...))` (pinned in Round6Spec).
-  *
-  * Why it exists: downstream inverted-index operators (q169) shuffle on
-  * the fingerprint — an 8-byte primitive key hash-aggregates in
-  * Tungsten's primitive fast path and shuffles ~3× fewer bytes than a
-  * 16-char UTF8String, and the hex render allocation disappears from
-  * the scan. Keep the string variant where an external SQL oracle must
-  * replay the hash (`substr(md5(..),1,16)`).
-  */
-case class WinnowSetLong(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  require(k >= 1 && w >= 1, "k and w must be positive")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_set_long"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("winnowsetlong", this, classOf[WinnowSetLong].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.compute($c);")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  def compute(text: UTF8String): ArrayData = {
-    val s = text.toString
+  /** The one winnow kernel of [[WinnowSet]] and [[WinnowSetLong]]: each
+    * k-char gram's hash is the first 8 bytes of md5 of its UTF-8 bytes,
+    * read as a big-endian unsigned long (its 16 hex chars are
+    * md5(substr(text, i, k)) in Spark SQL and DuckDB); returns the
+    * distinct minima of every w-gram window in first-occurrence order.
+    * Unsigned order is the hex strings' lexicographic order.
+    */
+  private[text] def minima(s: String, k: Int, w: Int): Array[Long] = {
     val nGrams = s.length - k + 1
-    val nWins = nGrams - w + 1
-    if (nWins <= 0) return new GenericArrayData(Array.empty[Any])
-    val md = WinnowSet.digest.get()
+    if (nGrams - w + 1 <= 0) return Array.emptyLongArray
+    val md = digest.get()
     val hashes = new Array[Long](nGrams)
     var i = 0
     while (i < nGrams) {
@@ -144,14 +63,17 @@ case class WinnowSetLong(child: Expression, k: Int, w: Int)
       hashes(i) = h
       i += 1
     }
+    // sliding window minimum via monotonic deque of indices
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     val deque = new Array[Int](nGrams)
     var head = 0
     var tail = 0 // exclusive
     i = 0
     while (i < nGrams) {
+      // drop indices that left the window [i-w+1, i]
       while (head < tail && deque(head) <= i - w) head += 1
-      // UNSIGNED compare == hex lexicographic order of the string twin
+      // drop larger values from the back: for equal hashes the EARLIEST
+      // index must win (the SQL window min is value-identical either way)
       while (head < tail &&
         java.lang.Long.compareUnsigned(hashes(deque(tail - 1)), hashes(i)) > 0) tail -= 1
       deque(tail) = i
@@ -159,12 +81,45 @@ case class WinnowSetLong(child: Expression, k: Int, w: Int)
       if (i >= w - 1) seen.add(hashes(deque(head)))
       i += 1
     }
-    val out = new Array[Any](seen.size)
+    val out = new Array[Long](seen.size)
     val it = seen.iterator()
     var j = 0
     while (it.hasNext) { out(j) = it.next().longValue(); j += 1 }
-    new GenericArrayData(out)
+    out
   }
+
+  /** `h` as 16 lower-case hex chars, zero-padded. */
+  private def hex16(h: Long): UTF8String = {
+    val c = new Array[Char](16)
+    var i = 0
+    while (i < 16) { c(i) = HEX(((h >>> (60 - 4 * i)) & 0xf).toInt); i += 1 }
+    UTF8String.fromString(new String(c))
+  }
+}
+
+/** [[WinnowSet]] with PRIMITIVE LONG output: the same first-8-bytes-of-
+  * md5 gram hash, not rendered to 16 hex chars. The mapping hex-string →
+  * long is bijective and hex lexicographic order == unsigned numeric
+  * order, so the emitted fingerprint SET is exactly
+  * `parseHex(WinnowSet(...))` (pinned in Round6Spec).
+  *
+  * Why it exists: downstream inverted-index operators (q169) shuffle on
+  * the fingerprint — an 8-byte primitive key hash-aggregates in
+  * Tungsten's primitive fast path and shuffles ~3× fewer bytes than a
+  * 16-char UTF8String, and the hex render allocation disappears from
+  * the scan. Keep the string variant where an external SQL oracle must
+  * replay the hash (`substr(md5(..),1,16)`).
+  */
+case class WinnowSetLong(child: Expression, k: Int, w: Int)
+    extends NativeUnary[UTF8String] {
+
+  require(k >= 1 && w >= 1, "k and w must be positive")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "winnow_set_long"
+
+  def compute(text: UTF8String): ArrayData =
+    new GenericArrayData(WinnowSet.minima(text.toString, k, w))
 
   override protected def withNewChildInternal(c: Expression): WinnowSetLong =
     copy(child = c)

@@ -58,6 +58,8 @@ class ChunkDedupSpec extends SparkSpec {
     assert(diff == 0)
   }
 
+  // The native chunk set that ChunkDedup.chunks builds is SlidingChunkSet
+  // with stride = window (non-overlapping tiling).
   test("native ChunkSet matches the composed HOF chunking (idx, chunk, hash)") {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val docs = Tables.documents(spark, sf).limit(200)
@@ -66,7 +68,7 @@ class ChunkDedupSpec extends SparkSpec {
         (-4L, "short", "x", "x", 0L)).toDF(Tables.documents(spark, sf).columns: _*))
     val k = 10
     val native = docs.select(col("doc_id"), explode(ColumnBridge.column(
-        graft.text.ChunkSet(ColumnBridge.expression(col("text")), k))).as("c"))
+        graft.text.SlidingChunkSet(ColumnBridge.expression(col("text")), k, k))).as("c"))
       .select(col("doc_id"), col("c.idx"), col("c.chunk"),
         col("c.h").as("h"))
     val composed = docs

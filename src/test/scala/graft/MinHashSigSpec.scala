@@ -5,14 +5,14 @@ import graft.text.{MinHashSig, Shingles}
 
 class MinHashSigSpec extends SparkSpec {
 
-  test("custom signature expression equals composed-expression minhashes") {
+  test("band hashes equal the composed xxhash64 fold of composed minhashes") {
     val sh = Tables.documents(spark, sf).limit(50)
       .select(col("doc_id"), Shingles.shingles(col("text"), 3).as("sh"))
-    val k = 16
+    val (k, r) = (16, 4)
+    val mins = (0 until k).map(i => array_min(transform(col("sh"), s => xxhash64(lit(i), s))))
     val composed = sh.select(col("doc_id"),
-      array((0 until k).map(i =>
-        array_min(transform(col("sh"), s => xxhash64(lit(i), s)))): _*).as("sig"))
-    val custom = sh.select(col("doc_id"), MinHashSig.signature(col("sh"), k).as("sig"))
+      array(mins.grouped(r).map(band => xxhash64(band: _*)).toSeq: _*).as("sig"))
+    val custom = sh.select(col("doc_id"), MinHashSig.bandHashes(col("sh"), k, r).as("sig"))
     val a = composed.orderBy("doc_id").collect().map(_.getSeq[Long](1))
     val b = custom.orderBy("doc_id").collect().map(_.getSeq[Long](1))
     assert(a.length === b.length)

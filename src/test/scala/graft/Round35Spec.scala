@@ -3,23 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.text.{ChunkSet, SlidingChunkSet}
+import graft.text.SlidingChunkSet
 
 /** Round-12 wave 3: length filter, sliding chunking, mixing recipe,
   * containment near-dup (q405-q409).
   */
 class Round35Spec extends SparkSpec {
-
-  test("SlidingChunkSet stride=k ≡ ChunkSet (tiling degeneration)") {
-    val docs = Tables.documents(spark, sf).limit(50)
-    val a = docs.select(col("doc_id"), explode(ColumnBridge.column(
-      SlidingChunkSet(ColumnBridge.expression(col("text")), 7, 7))).as("c"))
-      .select(col("doc_id"), col("c.idx"), col("c.chunk"), col("c.h"))
-    val b = docs.select(col("doc_id"), explode(ColumnBridge.column(
-      ChunkSet(ColumnBridge.expression(col("text")), 7))).as("c"))
-      .select(col("doc_id"), col("c.idx"), col("c.chunk"), col("c.h"))
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
 
   test("SlidingChunkSet: window/stride contract against a scala replay") {
     val rows = Tables.documents(spark, sf).limit(20)
@@ -51,7 +40,7 @@ class Round35Spec extends SparkSpec {
     assert(out(4L).map(_.getString(1)) == Seq("a b c")) // double space collapsed
   }
 
-  test("TokensWs ≡ filter(split) composed twin (incl. edge cases)") {
+  test("tokensNonEmpty ≡ filter(split) composed twin (incl. edge cases)") {
     import spark.implicits._
     val edge = Seq((100000L, ""), (100001L, " "), (100002L, "  a  b "),
       (100003L, "héllo wörld"), (100004L, "a")).toDF("doc_id", "text")
